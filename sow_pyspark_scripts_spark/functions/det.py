@@ -1,5 +1,16 @@
 """Cross-engine / cross-partitioning determinism helpers.
 
+The 6-dp rounding rule: every rounded double a query emits is
+``floor(x*1e6 + 0.5) / 1e6``, half-up and computed identically by
+Spark and DuckDB, whose built-in ``round`` functions do not round
+doubles the same way. In the Column API this module is the only place
+that spells it: ``r6`` gives the rounded value and ``quant`` its
+integer grid units, and ``plans/`` and ``operators/`` call them
+(tests/test_plan_hygiene.py rejects a hand-written copy). The oracle
+twin is ``quant_sql`` and the literal SQL text
+``floor(x * 1e6 + 0.5) / 1e6`` in the DuckDB oracles, which stays
+written out as the reference the tests compare against.
+
 The house doctrine (SURVEY.md determinism notes; cf. the PCA iterate
 re-quantization in plans/vector_ops.py) is that any float AGGREGATE
 whose result feeds a rounded comparison must itself be pinned to a
@@ -37,6 +48,23 @@ def quant(col: Column, scale: float = 1e6) -> Column:
     """Half-up integer grid units of ``col``: floor(col*scale + 0.5).
     Per-row, engine-identical (IEEE double multiply + floor)."""
     return F.floor(col * F.lit(float(scale)) + F.lit(0.5))
+
+
+def r6(col: Column) -> Column:
+    """``col`` rounded half-up to 6 decimal places:
+    floor(col*1e6 + 0.5) / 1e6, the same expression the oracles spell
+    in SQL."""
+    return quant(col) / F.lit(1e6)
+
+
+def split_bucket() -> Column:
+    """Content-addressed 0..99 bucket of ``doc_id``: the first md5 byte
+    of the ``":split"``-salted id, mod 100. No RNG and no seed, so a
+    doc's bucket never changes across reruns or appends. The SQL twin is
+    ``plans.sql_common._HASH_BUCKET_SQL``."""
+    h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":split")))
+    nib = lambda j: F.instr(F.lit("0123456789abcdef"), F.substring(h, j, 1)) - 1  # noqa: E731
+    return (nib(1) * 16 + nib(2)) % 100
 
 
 def mean_grid(col: Column, scale: float = 1e6) -> Column:

@@ -18,6 +18,7 @@ Scale shapes:
 
 from __future__ import annotations
 
+from ..functions.det import r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 from pyspark.sql import Column, DataFrame
@@ -213,13 +214,10 @@ def lsh_verified_jaccard_pairs(
         .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
         .withColumn(
             "jaccard",
-            F.floor(
+            r6(
                 F.col("i").cast("double")
                 / (F.col("na") + F.col("nb") - F.col("i")).cast("double")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            / F.lit(1000000.0),
+            ),
         )
     )
     return j.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
@@ -293,13 +291,10 @@ def jaccard_pairs(shingles: DataFrame, threshold: float) -> DataFrame:
         .join(sb, "doc_b")
         .withColumn(
             "jaccard",
-            F.floor(
+            r6(
                 F.col("i").cast("double")
                 / (F.col("na") + F.col("nb") - F.col("i")).cast("double")
-                * F.lit(1000000.0)
-                + F.lit(0.5)
-            )
-            / F.lit(1000000.0),
+            ),
         )
     )
     return j.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")

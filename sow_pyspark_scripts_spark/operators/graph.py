@@ -39,6 +39,10 @@ def connected_components(
     sym = edges.selectExpr("src", "dst").union(edges.selectExpr("dst as src", "src as dst"))
     sym = sym.persist()
     labels = vertices.select(F.col(id_col).alias("v"), F.col(id_col).alias("lbl")).persist()
+    # ``labels`` is a projection of the pinned frame from the second
+    # round on, and unpersisting a projection releases nothing: keep a
+    # handle on the pinned frame itself so each round frees the last.
+    pinned = labels
     for _ in range(MAX_ITERATIONS):
         neighbor_min = (
             sym.join(labels, sym.dst == labels.v)
@@ -63,7 +67,8 @@ def connected_components(
             .transform(_pin_eager)  # cut lineage: each iteration starts from materialized labels
         )
         changed = new_labels.where(F.col("chg")).limit(1).count()
-        labels.unpersist()
+        pinned.unpersist()
+        pinned = new_labels
         labels = new_labels.select("v", F.col("nl").alias("lbl"))
         if changed == 0:
             break

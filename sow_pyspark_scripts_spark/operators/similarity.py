@@ -24,6 +24,7 @@ semdedup driver-flake class).
 
 from __future__ import annotations
 
+from ..functions.det import quant, r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 from pyspark.sql import Column, DataFrame, Window
@@ -42,10 +43,6 @@ from ..functions.vectors import (
 NUM_PLANES = 4
 
 
-def _round6(c: Column) -> Column:
-    return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
-
-
 def _norm2_pre(aq: Column) -> Column:
     """Exact integer norm² for an array already in grid units."""
     return F.aggregate(aq, F.lit(0).cast("long"), lambda acc, x: acc + x * x)
@@ -60,13 +57,10 @@ def _sim_grid(qe: Column, ce: Column, qn2: Column, cn2: Column) -> Column:
     PRE-QUANTIZED grid-unit arrays (``quant_arr`` once per side before
     the join — per-pair re-quantization costs ~2x on bucket joins)."""
     return (
-        F.floor(
+        r6(
             dot_grid_pre(qe, ce).cast("double")
             / (F.sqrt(qn2.cast("double")) * F.sqrt(cn2.cast("double")))
-            * F.lit(1e6)
-            + F.lit(0.5)
         )
-        / F.lit(1e6)
     )
 
 
@@ -174,7 +168,7 @@ def srp_buckets(
     ).select(
         "vec_id",
         (F.col("pos") + 1).alias("i"),
-        F.floor(F.col("val").cast("double") * F.lit(1e6) + F.lit(0.5))
+        quant(F.col("val").cast("double"))
         .cast("long")
         .alias("qv"),
     )

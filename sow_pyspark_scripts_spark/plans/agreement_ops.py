@@ -37,6 +37,7 @@ Scale notes baked into each builder:
 
 from __future__ import annotations
 
+from ..functions.det import r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -133,7 +134,7 @@ def stats_spearman_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (nd * F.col("syy") - F.col("sy").cast("double") * F.col("sy"))
     )
     return s.select(
-        "n", (F.floor(rho * 1e6 + F.lit(0.5)) / 1e6).alias("spearman_rho")
+        "n", r6(rho).alias("spearman_rho")
     )
 
 
@@ -216,13 +217,12 @@ def stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew = m3 / (m2 * F.sqrt(m2))
     kurt = m4 / (m2 * m2)
     jb = nd / 6.0 * (skew * skew + (kurt - 3) * (kurt - 3) / 4.0)
-    q = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return m.select(
         "n",
-        q(skew).alias("skewness"),
-        q(kurt).alias("kurtosis"),
-        q(jb).alias("jb_stat"),
-        q(F.exp(-jb / 2.0)).alias("p_value"),
+        r6(skew).alias("skewness"),
+        r6(kurt).alias("kurtosis"),
+        r6(jb).alias("jb_stat"),
+        r6(F.exp(-jb / 2.0)).alias("p_value"),
     )
 
 
@@ -313,12 +313,11 @@ def ml_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = F.col("n").cast("double")
     po = F.col("agree").cast("double") / F.col("n")
     pe = F.col("pe_num").cast("double") / (nd * F.col("n"))
-    q = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return j.select(
         "n",
-        q(po).alias("po"),
-        q(pe).alias("pe"),
-        q((po - pe) / (1.0 - pe)).alias("kappa"),
+        r6(po).alias("po"),
+        r6(pe).alias("pe"),
+        r6((po - pe) / (1.0 - pe)).alias("kappa"),
     )
 
 
@@ -401,5 +400,5 @@ def stats_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tot.select(
         "n",
         "k",
-        (F.floor(f_stat * 1e6 + F.lit(0.5)) / 1e6).alias("f_stat"),
+        r6(f_stat).alias("f_stat"),
     )

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..registry import query
 from ..sources import read_table
 from .sql_common import _p_two_sided
@@ -127,9 +128,7 @@ def events_forecast_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor(F.col("p_hat") * 1e4 + F.lit(0.5)) / 1e4).alias(
             "interval_hat"
         ),
-        (
-            F.floor(F.col("z_hat") / F.col("p_hat") * 1e6 + F.lit(0.5)) / 1e6
-        ).alias("demand_rate"),
+        r6(F.col("z_hat") / F.col("p_hat")).alias("demand_rate"),
     )
 
 
@@ -245,12 +244,7 @@ def stats_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return staged.select(
         "n",
         (F.floor(F.col("lm_raw") * 1e4 + F.lit(0.5)) / 1e4).alias("lm_stat"),
-        (
-            F.floor(
-                F.expr(_p_two_sided("sqrt(lm_raw)")) / 2 * 1e6 + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("p_value"),
+        r6(F.expr(_p_two_sided("sqrt(lm_raw)")) / 2).alias("p_value"),
         (F.col("lm_raw") > 3.841).alias("heteroscedastic"),
     )
 

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..registry import query
 from ..sources import read_table
 
@@ -283,9 +284,6 @@ def agg_mix_shift_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     share1 = F.col("n1").cast("double") / F.col("t1")
     rate0 = F.col("rev0").cast("double") / F.col("n0") / 100
     rate1 = F.col("rev1").cast("double") / F.col("n1") / 100
-
-    def r6(c):
-        return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
     def r4(c):
         return F.floor(c * 1e4 + F.lit(0.5)) / 1e4

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.det import cos_grid_sql, d2_grid_sql, mean_grid, mean_grid_sql
+from ..functions.det import cos_grid_sql, d2_grid_sql, mean_grid, mean_grid_sql, quant
 from ..registry import query
 from ..sources import read_table
 
@@ -611,12 +611,9 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def _round6(c):
-        return F.floor(c * 1000000.0 + F.lit(0.5)) / 1000000.0
-
     def _assign(cent: DataFrame) -> DataFrame:
-        qv = F.floor(F.col("v") * F.lit(1e6) + F.lit(0.5)).cast("long")
-        qc = F.floor(F.col("c") * F.lit(1e6) + F.lit(0.5)).cast("long")
+        qv = quant(F.col("v")).cast("long")
+        qc = quant(F.col("c")).cast("long")
         d = (
             emb.join(F.broadcast(cent), "pos")
             .groupBy("vec_id", "cluster")
@@ -642,7 +639,7 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         cent = _recenter(assign)
 
     sizes = assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_members"))
-    qcn = F.floor(F.col("c") * F.lit(1e6) + F.lit(0.5)).cast("long")
+    qcn = quant(F.col("c")).cast("long")
     norms = cent.groupBy("cluster").agg(
         (F.floor(F.sqrt(F.sum(qcn * qcn).cast("double")) + F.lit(0.5)) / F.lit(1e6)).alias(
             "centroid_norm"

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import quant, r6
 from ..functions.sketch import approx_pctl, approx_pctls
 from ..registry import query
 from ..sources import read_table
@@ -79,7 +80,6 @@ def dq_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     array; bucket assignment is a map-side higher-order filter and the
     final rollup has exactly 10 rows at any data scale."""
     orders = read_table(spark, sf_dir, "orders")
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     # ONE sketch queried at all 9 ranks (r9, functions/sketch.approx_pctls
     # — nine independent summaries buffered the column nine times per task)
     b = orders.agg(
@@ -258,7 +258,6 @@ def ml_best_split_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows is bit-stable. The float sum over sides is a two-term add —
     commutative bitwise, partition-order-proof."""
     li = read_table(spark, sf_dir, "lineitem")
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     # ONE sketch queried at all 9 ranks (r9): the nine separate summaries
     # were the query's dominant stage (3.7-4.1s -> 0.5-0.6s measured)
     b = li.agg(
@@ -380,10 +379,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return terms.agg(
         F.count(F.lit(1)).alias("n_communities"),
         F.max("m").alias("m_edges"),
-        (
-            F.floor(F.sum("t_u").cast("double") / F.lit(1e12) * F.lit(1e6) + F.lit(0.5))
-            / F.lit(1e6)
-        ).alias("modularity"),
+        r6(F.sum("t_u").cast("double") / F.lit(1e12)).alias("modularity"),
     )
 
 
@@ -449,10 +445,7 @@ def dq_rule_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rule",
         F.col("n").alias("n_checked"),
         F.col("v").alias("n_violations"),
-        (
-            F.floor(F.col("v").cast("double") / F.col("n") * F.lit(1e6) + F.lit(0.5))
-            / F.lit(1e6)
-        ).alias("violation_rate"),
+        r6(F.col("v").cast("double") / F.col("n")).alias("violation_rate"),
     )
 
 
@@ -511,7 +504,6 @@ def stats_mde_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("n") - 1)
         / F.lit(10000.0)
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return m.where(F.col("n") > 1).select(
         "event_type",
         "n",
@@ -577,7 +569,6 @@ def agg_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wr = Window.partitionBy("r_name")
     wall = Window.partitionBy()
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return rev.select(
         "r_name",
         "n_name",
@@ -672,9 +663,7 @@ def events_classical_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         "trend",
         F.when(
             F.col("trend").isNotNull(),
-            F.floor((F.col("cents") - F.col("trend")) * F.lit(1e6) + F.lit(0.5)).cast(
-                "long"
-            ),
+            quant(F.col("cents") - F.col("trend")).cast("long"),
         ).alias("det_u"),
     )
     seas = (
@@ -688,7 +677,6 @@ def events_classical_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("s_u")
         )
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return det.join(F.broadcast(seas), "dow").select(
         "day",
         (F.floor(F.col("cents").cast("double")) / F.lit(100.0)).alias("observed"),
@@ -775,7 +763,6 @@ def ml_logreg_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long") / F.lit(10000.0)).alias("x"),
         F.when(F.col("event_type") == "purchase", 1.0).otherwise(0.0).alias("y"),
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     p_of = lambda: r6(F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("w") * F.col("x"))))  # noqa: E731
     w = ev.sparkSession.range(1).select(F.lit(0.0).alias("w"))
     for _ in range(_LOGREG_ITERS):
@@ -806,13 +793,11 @@ def ml_logreg_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
     loss = base.crossJoin(F.broadcast(w)).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(
-            F.floor(
+            quant(
                 -(
                     F.col("y") * F.log(clamp(p))
                     + (F.lit(1.0) - F.col("y")) * F.log(clamp(F.lit(1.0) - p))
                 )
-                * F.lit(1e6)
-                + F.lit(0.5)
             ).cast("long")
         ).alias("l_u"),
     )
@@ -885,7 +870,6 @@ def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     ssb = F.col("sum_gm") - F.col("s_tot").cast("double") * F.col("s_tot") / F.col("n_tot")
     ssw = F.col("ss_all") - F.col("sum_gm")
     r4 = lambda c: F.floor(c * F.lit(1e4) + F.lit(0.5)) / F.lit(1e4)  # noqa: E731
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return tot.select(
         "k",
         "n_tot",

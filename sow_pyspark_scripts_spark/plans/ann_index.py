@@ -56,7 +56,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.det import d2_grid_sql, d2r6_grid_sql
+from ..functions.det import d2_grid_sql, d2r6_grid_sql, quant, r6
 from ..functions.vectors import d2r6_grid
 from ..registry import query
 from ..sources import read_table
@@ -77,7 +77,6 @@ from .pq_common import (
     _pq_codebook,
     _pq_d2,
     _pq_subvecs,
-    _round6,
 )
 
 _MARKER = "_INDEX_DONE"
@@ -161,7 +160,7 @@ def build_ann_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
                 F.min(F.when(F.col("sub") == s, F.col("cell"))).alias(f"c{s}")
                 for s in range(_PQ_M)
             ],
-            _round6(F.sum("d2")).alias("qerr"),
+            r6(F.sum("d2")).alias("qerr"),
         )
         codes.write.mode("overwrite").parquet(
             os.path.join(out_dir, "pq_codes.parquet")
@@ -507,7 +506,7 @@ def similarity_topk_pq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(lut), ["sub", "cell"])
         .where(F.col("cid") != F.col("qid"))
         .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
+        .agg(r6(F.sum("pd2")).alias("adc_d2"))
     )
     w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
     return (
@@ -540,7 +539,7 @@ def similarity_topk_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(F.broadcast(lutq), ["sub", "cell", "ivf_cell"])
         .where(F.col("cid") != F.col("qid"))
         .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
+        .agg(r6(F.sum("pd2")).alias("adc_d2"))
     )
     w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
     return (
@@ -565,7 +564,7 @@ def similarity_topk_pq_refine_stored(spark: SparkSession, sf_dir: str) -> DataFr
         .join(F.broadcast(lut), ["sub", "cell"])
         .where(F.col("cid") != F.col("qid"))
         .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
+        .agg(r6(F.sum("pd2")).alias("adc_d2"))
     )
     ws = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
     short = (
@@ -609,9 +608,7 @@ def similarity_topk_ivfadc_stored(spark: SparkSession, sf_dir: str) -> DataFrame
     cents = spark.read.parquet(os.path.join(idx, "ivf_centroids.parquet"))
     cq = cents.select(
         F.col("cent_id").alias("ivf_cell"),
-        F.transform(
-            "centroid", lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5))
-        ).alias("c6"),
+        F.transform("centroid", lambda c: quant(c)).alias("c6"),
     )
     q_resid = (
         emb.where(F.col("vec_id") < 20)
@@ -619,7 +616,7 @@ def similarity_topk_ivfadc_stored(spark: SparkSession, sf_dir: str) -> DataFrame
             "vec_id",
             F.transform(
                 F.col("embedding").cast("array<double>"),
-                lambda v: F.floor(v * F.lit(1e6) + F.lit(0.5)),
+                lambda v: quant(v),
             ).alias("x6"),
         )
         .join(ivf.where(F.col("vec_id") < 20), "vec_id")
@@ -657,7 +654,7 @@ def similarity_topk_ivfadc_stored(spark: SparkSession, sf_dir: str) -> DataFrame
         cand.join(F.broadcast(lut), ["sub", "cell", "ivf_cell"])
         .where(F.col("cid") != F.col("qid"))
         .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
+        .agg(r6(F.sum("pd2")).alias("adc_d2"))
     )
     w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
     return (
@@ -690,9 +687,7 @@ def similarity_topk_ivfadc_multiprobe_stored(spark: SparkSession, sf_dir: str) -
     )
     cq = cents.select(
         F.col("cent_id").alias("probe_cell"),
-        F.transform(
-            "centroid", lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5))
-        ).alias("c6"),
+        F.transform("centroid", lambda c: quant(c)).alias("c6"),
     )
     q_resid = (
         emb.where(F.col("vec_id") < 20)
@@ -700,7 +695,7 @@ def similarity_topk_ivfadc_multiprobe_stored(spark: SparkSession, sf_dir: str) -
             "vec_id",
             F.transform(
                 F.col("embedding").cast("array<double>"),
-                lambda v: F.floor(v * F.lit(1e6) + F.lit(0.5)),
+                lambda v: quant(v),
             ).alias("x6"),
         )
         .join(probes.select("vec_id", F.col("cell").alias("probe_cell")), "vec_id")
@@ -740,7 +735,7 @@ def similarity_topk_ivfadc_multiprobe_stored(spark: SparkSession, sf_dir: str) -
         cand.join(F.broadcast(lut), ["sub", "cell", "ivf_cell"])
         .where(F.col("cid") != F.col("qid"))
         .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
+        .agg(r6(F.sum("pd2")).alias("adc_d2"))
     )
     w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
     return (
@@ -824,7 +819,7 @@ def embedding_pq_encode_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("d2").isNull(), 1).otherwise(0)).cast("long").alias(
             "n_missing"
         ),
-        _round6(F.sum("d2")).alias("qerr"),
+        r6(F.sum("d2")).alias("qerr"),
     )
 
 

@@ -23,6 +23,7 @@ Scale notes baked into each builder:
 
 from __future__ import annotations
 
+from ..functions.det import r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -361,9 +362,7 @@ def events_absorbing_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         pk = stepped
     return pk.select(
         F.col("src").alias("start_state"),
-        (F.floor(F.col("v") * 1e6 + F.lit(0.5)) / 1e6).alias(
-            f"p_convert_{_HORIZON}steps"
-        ),
+        r6(F.col("v")).alias(f"p_convert_{_HORIZON}steps"),
     )
 
 

@@ -37,6 +37,7 @@ Scale notes baked into each builder:
 
 from __future__ import annotations
 
+from ..functions.det import r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 from functools import reduce
@@ -46,10 +47,6 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
-
-
-def _q6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
 # ---------------------------------------------------------------------------
@@ -270,10 +267,10 @@ def reco_als_half_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normal.select(
         "custkey",
         "n_items",
-        _q6(
+        r6(
             (F.col("b1") * F.col("a22") - F.col("b2") * F.col("a12")) / det
         ).alias("u1"),
-        _q6(
+        r6(
             (F.col("b2") * F.col("a11") - F.col("b1") * F.col("a12")) / det
         ).alias("u2"),
     )
@@ -504,12 +501,10 @@ def events_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return eff.select(
         "channel",
-        _q6(F.col("p_base")).alias("p_base"),
-        _q6(F.col("p_removed")).alias("p_removed"),
-        _q6(F.col("effect")).alias("removal_effect"),
-        _q6(F.col("effect") / F.sum("effect").over(wall)).alias(
-            "attribution_share"
-        ),
+        r6(F.col("p_base")).alias("p_base"),
+        r6(F.col("p_removed")).alias("p_removed"),
+        r6(F.col("effect")).alias("removal_effect"),
+        r6(F.col("effect") / F.sum("effect").over(wall)).alias("attribution_share"),
     ).orderBy("channel")
 
 
@@ -602,13 +597,13 @@ def text_distinct_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "n_unigrams",
             "distinct_unigrams",
-            _q6(
+            r6(
                 F.col("distinct_unigrams").cast("double")
                 / F.col("n_unigrams")
             ).alias("distinct_1"),
             "n_bigrams",
             "distinct_bigrams",
-            _q6(
+            r6(
                 F.col("distinct_bigrams").cast("double") / F.col("n_bigrams")
             ).alias("distinct_2"),
         )

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..registry import query
 from ..sources import read_table
 
@@ -207,14 +208,9 @@ def feature_quantile_rank_normalize(
     lookup = ranked.select(
         "l_returnflag",
         "qty",
-        (
-            F.floor(
-                (2 * F.col("cum_before") + F.col("cnt") + 1).cast("double")
-                / (2 * F.col("n"))
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        r6(
+            (2 * F.col("cum_before") + F.col("cnt") + 1).cast("double")
+            / (2 * F.col("n"))
         ).alias("qnorm"),
     )
     return li.select(

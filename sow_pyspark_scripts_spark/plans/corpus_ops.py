@@ -18,27 +18,16 @@ here is integer-exact.
 
 from __future__ import annotations
 
+from ..functions.det import r6, split_bucket
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.text import tokenize
 from ..registry import query
 from ..sources import read_table
 from .sql_common import _HASH_BUCKET_SQL
-
-
-def _round6(c: Column) -> Column:
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
-
-def _split_bucket() -> Column:
-    """Same content-addressed bucket as sample_hash_split (md5 first
-    byte of salted doc_id, mod 100) — a doc's split never changes."""
-    h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":split")))
-    nib = lambda j: F.instr(F.lit("0123456789abcdef"), F.substring(h, j, 1)) - 1  # noqa: E731
-    return (nib(1) * 16 + nib(2)) % 100
 
 
 _BM25_TERMS = ("spark", "hash", "window")
@@ -95,7 +84,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", F.split("text", " ").alias("toks"))
     doclen = toks.select("doc_id", F.size("toks").alias("dl"))
     corpus = doclen.agg(
-        F.count(F.lit(1)).alias("n_docs"), _round6(F.avg("dl")).alias("avgdl")
+        F.count(F.lit(1)).alias("n_docs"), r6(F.avg("dl")).alias("avgdl")
     )
     tf = (
         toks.select("doc_id", F.explode("toks").alias("w"))
@@ -109,7 +98,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(corpus.select("n_docs")))
         .select(
             "w",
-            _round6(
+            r6(
                 F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
             ).alias("idf"),
         )
@@ -123,7 +112,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(doclen, "doc_id")
         .crossJoin(F.broadcast(corpus.select("avgdl")))
         .groupBy("doc_id")
-        .agg(_round6(F.sum(contrib)).alias("score"))
+        .agg(r6(F.sum(contrib)).alias("score"))
         .orderBy(F.desc("score"), "doc_id")
         .limit(20)
     )
@@ -178,7 +167,7 @@ def corpus_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", F.split("text", " ").alias("toks"))
     n = F.size("toks")
-    mean_wlen = _round6(
+    mean_wlen = r6(
         F.aggregate(
             F.transform("toks", lambda x: F.length(x).cast("double")),
             F.lit(0.0),
@@ -186,7 +175,7 @@ def corpus_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         / n
     )
-    distinct_ratio = _round6(F.size(F.array_distinct("toks")).cast("double") / n)
+    distinct_ratio = r6(F.size(F.array_distinct("toks")).cast("double") / n)
     m = base.select(
         "doc_id",
         n.cast("long").alias("n_words"),
@@ -201,7 +190,7 @@ def corpus_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("c").alias("top_c"))
     )
     joined = m.join(topw, "doc_id")
-    top_frac = _round6(F.col("top_c").cast("double") / F.col("n_words"))
+    top_frac = r6(F.col("top_c").cast("double") / F.col("n_words"))
     return joined.select(
         "doc_id",
         "n_words",
@@ -332,7 +321,7 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id",
         F.split("text", " ").alias("toks"),
-        F.when(_split_bucket() < 90, "train").otherwise("test").alias("split"),
+        F.when(split_bucket() < 90, "train").otherwise("test").alias("split"),
     )
     n = F.size("toks")
     shingled = (
@@ -477,11 +466,11 @@ def corpus_kl_divergence_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source_a",
         "source_b",
         "n_common_tokens",
-        _round6(
+        r6(
             F.col("wa") / F.col("sa")
             + F.log(F.col("sb").cast("double") / F.col("sa"))
         ).alias("kl_ab"),
-        _round6(
+        r6(
             F.col("wb") / F.col("sb")
             + F.log(F.col("sa").cast("double") / F.col("sb"))
         ).alias("kl_ba"),
@@ -580,7 +569,7 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.concat_ws(" ", "t1", "t2").alias("bigram"),
             F.col("c").alias("n"),
-            _round6(
+            r6(
                 F.log(
                     (F.col("c") * F.col("n_uni") * F.col("n_uni")).cast("double")
                     / (F.col("n_bi") * F.col("c1") * F.col("c2"))
@@ -1000,8 +989,8 @@ def tokenizer_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         wrd.cast("long").alias("total_words"),
         tok.cast("long").alias("total_tokens"),
         chs.cast("long").alias("total_chars"),
-        _round6(tok.cast("double") / wrd).alias("fertility"),
-        _round6(chs.cast("double") / tok).alias("chars_per_token"),
+        r6(tok.cast("double") / wrd).alias("fertility"),
+        r6(chs.cast("double") / tok).alias("chars_per_token"),
     )
 
 

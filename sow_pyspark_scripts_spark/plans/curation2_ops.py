@@ -33,7 +33,14 @@ from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.det import cos_grid_sql, d2_grid_sql, mean_grid, mean_grid_sql
+from ..functions.det import (
+    cos_grid_sql,
+    d2_grid_sql,
+    mean_grid,
+    mean_grid_sql,
+    quant,
+    r6,
+)
 from ..functions.gridnp import guarded_pair_sims
 from ..registry import query
 from ..sources import read_table
@@ -41,10 +48,6 @@ from ..sources import read_table
 _M6V = mean_grid_sql("v")
 
 _SEMDEDUP_TAU = 0.35
-
-
-def _r6(c):
-    return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
 
 # Shared pinned CTE fragments (r5). Both the d2 argmin and the pair
@@ -570,21 +573,9 @@ def dedup_semdedup_shard_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.agg(
         F.count(F.lit(1)).alias("n_dup_pairs"),
         F.sum(same1).cast("long").alias("n_same_shard"),
-        (
-            F.floor(
-                F.sum(same1).cast("double") / F.count(F.lit(1)) * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
-        ).alias("shard_recall"),
+        r6(F.sum(same1).cast("double") / F.count(F.lit(1))).alias("shard_recall"),
         F.sum(same2).cast("long").alias("n_same_shard_2fam"),
-        (
-            F.floor(
-                F.sum(same2).cast("double") / F.count(F.lit(1)) * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
-        ).alias("union_recall"),
+        r6(F.sum(same2).cast("double") / F.count(F.lit(1))).alias("union_recall"),
     )
 
 
@@ -673,8 +664,8 @@ def corpus_repetition_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "n_tokens",
-            _r6(dup_uni).alias("dup_unigram_frac"),
-            _r6(top_bi).alias("top_bigram_frac"),
+            r6(dup_uni).alias("dup_unigram_frac"),
+            r6(top_bi).alias("top_bigram_frac"),
             (
                 (dup_uni <= _REP_DUP_UNI_MAX) & (top_bi <= _REP_TOP_BI_MAX)
             ).alias("keep"),
@@ -724,9 +715,9 @@ def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per.crossJoin(F.broadcast(tot)).select(
         "source",
         "n_docs",
-        _r6(F.col("n_docs") / F.col("n_total").cast("double")).alias("raw_share"),
-        _r6(w).alias("temp_share"),
-        _r6(w * F.col("n_total") / F.col("n_docs")).alias("epochs_at_temp"),
+        r6(F.col("n_docs") / F.col("n_total").cast("double")).alias("raw_share"),
+        r6(w).alias("temp_share"),
+        r6(w * F.col("n_total") / F.col("n_docs")).alias("epochs_at_temp"),
     )
 
 
@@ -793,7 +784,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sums were the same unpinned-float-compare class as the semdedup
     # pair scoring)
     def _q(c):
-        return F.floor(c * F.lit(1e6) + F.lit(0.5)).cast("long")
+        return quant(c).cast("long")
 
     a = cent.filter(F.col("half") == 0).select(
         "label", "pos", _q(F.col("c")).alias("qa"), F.col("n").alias("ne")
@@ -810,17 +801,12 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.floor(F.sqrt(F.sum(dq * dq).cast("double")) + F.lit(0.5)) / F.lit(1e6)
         ).alias("l2_drift"),
-        (
-            F.floor(
-                F.sum(F.col("qa") * F.col("qb")).cast("double")
-                / (
-                    F.sqrt(F.sum(F.col("qa") * F.col("qa")).cast("double"))
-                    * F.sqrt(F.sum(F.col("qb") * F.col("qb")).cast("double"))
-                )
-                * F.lit(1e6)
-                + F.lit(0.5)
+        r6(
+            F.sum(F.col("qa") * F.col("qb")).cast("double")
+            / (
+                F.sqrt(F.sum(F.col("qa") * F.col("qa")).cast("double"))
+                * F.sqrt(F.sum(F.col("qb") * F.col("qb")).cast("double"))
             )
-            / F.lit(1e6)
         ).alias("cos_sim"),
     )
 
@@ -930,14 +916,9 @@ def dedup_banded_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("long").alias(
             "n_candidates_hit"
         ),
-        (
-            F.floor(
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("double")
-                / F.count(F.lit(1))
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
+        r6(
+            F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("double")
+            / F.count(F.lit(1))
         ).alias("candidate_recall"),
     )
 
@@ -1018,13 +999,8 @@ def sample_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return s.groupBy("lang", "split").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        (
-            F.floor(
-                F.count(F.lit(1)).cast("double")
-                / F.min("n_g").cast("double")
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
+        r6(
+            F.count(F.lit(1)).cast("double")
+            / F.min("n_g").cast("double")
         ).alias("frac"),
     )

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..functions.text import LANG_MARKERS
 from ..operators.dedup import (
     NUM_SEEDS,
@@ -163,17 +164,12 @@ def tokenizer_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked.join(F.broadcast(cuts))
         .groupBy("k")
         .agg(
-            (
-                F.floor(
-                    F.sum(
-                        F.when(F.col("rnk") <= F.col("k"), F.col("freq"))
-                        .otherwise(0)
-                    )
-                    / F.max("total").cast("double")
-                    * 1e6
-                    + F.lit(0.5)
+            r6(
+                F.sum(
+                    F.when(F.col("rnk") <= F.col("k"), F.col("freq"))
+                    .otherwise(0)
                 )
-                / 1e6
+                / F.max("total").cast("double")
             ).alias("coverage")
         )
     )
@@ -276,16 +272,11 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         buckets.join(F.broadcast(layouts), "rows_per_band")
         .groupBy("rows_per_band", "n_bands")
         .agg(
-            (
-                F.floor(
-                    F.pow(
-                        1.0 / F.max("n_bands"),
-                        1.0 / F.max("rows_per_band"),
-                    )
-                    * 1e6
-                    + F.lit(0.5)
+            r6(
+                F.pow(
+                    1.0 / F.max("n_bands"),
+                    1.0 / F.max("rows_per_band"),
                 )
-                / 1e6
             ).alias("s_curve_threshold"),
             F.sum(F.when(F.col("n") >= 2, 1).otherwise(0)).alias(
                 "colliding_buckets"

@@ -38,12 +38,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..registry import query
 from ..sources import read_table
-
-
-def _q6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
 # ---------------------------------------------------------------------------
@@ -153,9 +150,9 @@ def stats_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     se = F.sqrt(F.col("se2"))
     return p.select(
         "n_total",
-        _q6(did / 100).alias("did_estimate"),
-        _q6(se / 100).alias("se"),
-        _q6(did / se).alias("t_stat"),
+        r6(did / 100).alias("did_estimate"),
+        r6(se / 100).alias("se"),
+        r6(did / se).alias("t_stat"),
     )
 
 
@@ -276,8 +273,8 @@ def dq_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hist.select(
         "lang",
         "true_n",
-        _q6(noise).alias("noise"),
-        _q6(F.col("true_n") + noise).alias("noisy_n"),
+        r6(noise).alias("noise"),
+        r6(F.col("true_n") + noise).alias("noisy_n"),
     )
 
 
@@ -384,10 +381,8 @@ def ml_lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decile",
         "n_rows",
         "n_pos",
-        _q6(F.col("cum_pos").cast("double") / F.col("total_pos")).alias(
-            "capture"
-        ),
-        _q6(
+        r6(F.col("cum_pos").cast("double") / F.col("total_pos")).alias("capture"),
+        r6(
             (F.col("n_pos").cast("double") / F.col("n_rows"))
             / (F.col("total_pos").cast("double") / F.col("n"))
         ).alias("lift"),

@@ -40,6 +40,7 @@ from ..functions.det import (
     d2r6_grid_sql,
     mean_grid,
     mean_grid_sql,
+    r6,
 )
 
 _M6V = mean_grid_sql("v")
@@ -621,7 +622,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("i"))
     )
-    r6 = lambda c: F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)  # noqa: E731
     out = (
         inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
         .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
@@ -1379,14 +1379,9 @@ def ml_knn_classify_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy(F.col("qlbl").alias("label")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("plbl") == F.col("qlbl"), 1).otherwise(0)).alias("n_correct"),
-        (
-            F.floor(
-                F.sum(F.when(F.col("plbl") == F.col("qlbl"), 1).otherwise(0)).cast("double")
-                / F.count(F.lit(1))
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
+        r6(
+            F.sum(F.when(F.col("plbl") == F.col("qlbl"), 1).otherwise(0)).cast("double")
+            / F.count(F.lit(1))
         ).alias("accuracy"),
     )
 

@@ -25,6 +25,7 @@ Scale notes baked into each builder:
 
 from __future__ import annotations
 
+from ..functions.det import r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -134,14 +135,8 @@ def stats_mutual_info_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(hy))
         .select(
             "n",
-            (F.floor(F.col("mi") * 1e6 + F.lit(0.5)) / 1e6).alias("mi_nats"),
-            (
-                F.floor(
-                    F.col("mi") / F.least(F.col("hx"), F.col("hy")) * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
-            ).alias("normalized_mi"),
+            r6(F.col("mi")).alias("mi_nats"),
+            r6(F.col("mi") / F.least(F.col("hx"), F.col("hy"))).alias("normalized_mi"),
         )
     )
 
@@ -247,7 +242,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v").alias("part"),
             F.col("d").alias("degree"),
             F.coalesce(F.col("t"), F.lit(0)).alias("triangles"),
-            (F.floor(cc * 1e6 + F.lit(0.5)) / 1e6).alias("local_cc"),
+            r6(cc).alias("local_cc"),
         )
     )
 
@@ -373,7 +368,7 @@ def graph_local_clustering_sampled(
             F.col("v").alias("part"),
             F.col("d").alias("degree"),
             t8.cast("long").alias("triangles_est"),
-            (F.floor(cc * 1e6 + F.lit(0.5)) / 1e6).alias("local_cc_est"),
+            r6(cc).alias("local_cc_est"),
         )
     )
 
@@ -548,8 +543,6 @@ def corpus_cross_source_dup_matrix(
             "source_a",
             "source_b",
             "dup_pairs",
-            (
-                F.floor(F.col("dup_pairs") / cap * 1e6 + F.lit(0.5)) / 1e6
-            ).alias("dup_rate"),
+            r6(F.col("dup_pairs") / cap).alias("dup_rate"),
         )
     )

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from ..functions.vectors import d2r6_grid
 from ..registry import query
 from ..sources import read_table
-from ..functions.det import d2r6_grid_sql
+from ..functions.det import d2r6_grid_sql, quant, r6
 from .pq_common import (  # noqa: F401 — re-exported for ann_index compat
     _IVFADC_MP_ORACLE,
     _IVFADC_ORACLE,
@@ -72,7 +72,6 @@ from .pq_common import (  # noqa: F401 — re-exported for ann_index compat
     _pq_d2,
     _pq_subvecs,
     _pq_w,
-    _round6,
 )
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -239,7 +238,7 @@ def embedding_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda s: s["cell"].cast("string"),
             ),
         ).alias("codes"),
-        _round6(F.sum("d2")).alias("qerr"),
+        r6(F.sum("d2")).alias("qerr"),
     )
 
 
@@ -273,7 +272,7 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(lut), ["sub", "cell"])
         .where(F.col("cid") != F.col("qid"))
         .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
+        .agg(r6(F.sum("pd2")).alias("adc_d2"))
     )
     w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
     return (
@@ -311,7 +310,7 @@ def similarity_topk_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(lut), ["sub", "cell"])
         .where(F.col("cid") != F.col("qid"))
         .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
+        .agg(r6(F.sum("pd2")).alias("adc_d2"))
     )
     ws = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
     short = (
@@ -385,7 +384,7 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(F.broadcast(lutq), ["sub", "cell", "ivf_cell"])
         .where(F.col("cid") != F.col("qid"))
         .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
+        .agg(r6(F.sum("pd2")).alias("adc_d2"))
     )
     w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
     return (
@@ -451,7 +450,7 @@ def corpus_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "dsir_logw",
         (
-            _round6(F.log(F.when(u < 1e-9, F.lit(1e-9)).otherwise(u)))
+            r6(F.log(F.when(u < 1e-9, F.lit(1e-9)).otherwise(u)))
             < F.col("dsir_logw")
         ).alias("keep"),
     )
@@ -658,14 +657,9 @@ def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_queries"),
         # integer-exact mean: sum(n_hit) is an exact long, one double
         # division at the end — no float-sum merge-order exposure
-        (
-            F.floor(
-                F.sum("n_hit").cast("double")
-                / (F.lit(5.0) * F.count(F.lit(1)))
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
+        r6(
+            F.sum("n_hit").cast("double")
+            / (F.lit(5.0) * F.count(F.lit(1)))
         ).alias("recall_at_5"),
     )
 
@@ -736,7 +730,7 @@ def similarity_topk_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(F.broadcast(lut), ["sub", "cell", "ivf_cell"])
         .where(F.col("cid") != F.col("qid"))
         .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
+        .agg(r6(F.sum("pd2")).alias("adc_d2"))
     )
     w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
     return (
@@ -831,14 +825,9 @@ def similarity_ivfadc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hits.agg(
         F.count(F.lit(1)).alias("n_queries"),
         # integer-exact mean, see similarity_pq_recall
-        (
-            F.floor(
-                F.sum("n_hit").cast("double")
-                / (F.lit(5.0) * F.count(F.lit(1)))
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
+        r6(
+            F.sum("n_hit").cast("double")
+            / (F.lit(5.0) * F.count(F.lit(1)))
         ).alias("recall_at_5"),
     )
 
@@ -882,9 +871,7 @@ def similarity_topk_ivfadc_multiprobe(spark: SparkSession, sf_dir: str) -> DataF
     centroids, probes = ivf_cells_multi(emb, nprobe=2)
     cq = centroids.select(
         F.col("cent_id").alias("probe_cell"),
-        F.transform(
-            "centroid", lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5))
-        ).alias("c6"),
+        F.transform("centroid", lambda c: quant(c)).alias("c6"),
     )
     q_resid = (
         emb.where(F.col("vec_id") < 20)
@@ -892,7 +879,7 @@ def similarity_topk_ivfadc_multiprobe(spark: SparkSession, sf_dir: str) -> DataF
             "vec_id",
             F.transform(
                 F.col("embedding").cast("array<double>"),
-                lambda v: F.floor(v * F.lit(1e6) + F.lit(0.5)),
+                lambda v: quant(v),
             ).alias("x6"),
         )
         .join(
@@ -925,7 +912,7 @@ def similarity_topk_ivfadc_multiprobe(spark: SparkSession, sf_dir: str) -> DataF
         cand.join(F.broadcast(lut), ["sub", "cell", "ivf_cell"])
         .where(F.col("cid") != F.col("qid"))
         .groupBy("qid", "cid")
-        .agg(_round6(F.sum("pd2")).alias("adc_d2"))
+        .agg(r6(F.sum("pd2")).alias("adc_d2"))
     )
     w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
     return (
@@ -992,14 +979,9 @@ def similarity_ivfadc_multiprobe_recall(spark: SparkSession, sf_dir: str) -> Dat
     return hits.agg(
         F.count(F.lit(1)).alias("n_queries"),
         # integer-exact mean, see similarity_pq_recall
-        (
-            F.floor(
-                F.sum("n_hit").cast("double")
-                / (F.lit(5.0) * F.count(F.lit(1)))
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
+        r6(
+            F.sum("n_hit").cast("double")
+            / (F.lit(5.0) * F.count(F.lit(1)))
         ).alias("recall_at_5"),
     )
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..functions.pin import pin as _pin_lazy
 
 DSIR_BUCKETS = 256
@@ -165,14 +166,9 @@ def dsir_weights_from(
     return docs.select("doc_id").join(per_doc, "doc_id", "left").select(
         "doc_id",
         F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
-        (
-            F.floor(
-                F.coalesce(F.col("s").cast("double"), F.lit(0.0))
-                / F.lit(1e9)
-                * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
+        r6(
+            F.coalesce(F.col("s").cast("double"), F.lit(0.0))
+            / F.lit(1e9)
         ).alias("dsir_logw"),
     )
 

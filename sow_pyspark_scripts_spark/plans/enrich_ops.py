@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..registry import query
 from ..sources import read_table
 
@@ -235,9 +236,6 @@ def events_interrupted_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     t0 = F.col("t0")
     jump = (my1 + b1 * (t0 - mx1)) - (my0 + b0 * (t0 - mx0))
 
-    def r6(c):
-        return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
     return sums.select(
         "event_type",
         r6(b0).alias("slope_pre"),
@@ -367,5 +365,5 @@ def events_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     melted = wide.unpivot([], ["click", "view", "signup"], "channel", "raw")
     return melted.select(
         "channel",
-        (F.floor(F.col("raw") * 1e6 + F.lit(0.5)) / 1e6).alias("shapley"),
+        r6(F.col("raw")).alias("shapley"),
     )

@@ -33,12 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..registry import query
 from ..sources import read_table
-
-
-def _q6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
 # ---------------------------------------------------------------------------
@@ -162,10 +159,8 @@ def ml_pr_auc_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return terms.agg(
         F.min("n_total").alias("n_events"),
         F.min("p_total").alias("n_pos"),
-        _q6(F.min("p_total").cast("double") / F.min("n_total")).alias(
-            "prevalence"
-        ),
-        _q6(F.sum("t_pico") / F.lit(1e12)).alias("pr_auc"),
+        r6(F.min("p_total").cast("double") / F.min("n_total")).alias("prevalence"),
+        r6(F.sum("t_pico") / F.lit(1e12)).alias("pr_auc"),
     )
 
 
@@ -231,9 +226,9 @@ def stats_wilson_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n",
         "k",
-        _q6(p).alias("p_hat"),
-        _q6(F.greatest(F.lit(0.0), (center - half) / denom)).alias("ci_lo"),
-        _q6(F.least(F.lit(1.0), (center + half) / denom)).alias("ci_hi"),
+        r6(p).alias("p_hat"),
+        r6(F.greatest(F.lit(0.0), (center - half) / denom)).alias("ci_lo"),
+        r6(F.least(F.lit(1.0), (center + half) / denom)).alias("ci_hi"),
     ).orderBy("event_type")
 
 
@@ -332,7 +327,7 @@ def stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "g_click",
         "g_view",
         "g_purchase",
-        F.when(denom != 0, _q6(q)).alias("q_stat"),
+        F.when(denom != 0, r6(q)).alias("q_stat"),
         F.when(denom != 0, q > 5.991).alias("reject_h0"),
     )
 
@@ -404,7 +399,7 @@ def stats_poisson_two_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "d1",
         "c2",
         "d2",
-        _q6(r1 / r2).alias("rate_ratio"),
-        _q6(z).alias("z_stat"),
+        r6(r1 / r2).alias("rate_ratio"),
+        r6(z).alias("z_stat"),
         (F.abs(z) > 1.96).alias("significant"),
     )

@@ -38,6 +38,7 @@ Scale notes baked into each builder:
 
 from __future__ import annotations
 
+from ..functions.det import r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -45,10 +46,6 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
-
-
-def _q6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
 # ---------------------------------------------------------------------------
@@ -140,7 +137,7 @@ def ml_ols_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy("day")
     d = e.select("n", "e", (F.col("e") - F.lag("e").over(w)).alias("de"))
     return d.groupBy("n").agg(
-        _q6(
+        r6(
             F.sum(F.col("de") * F.col("de")) / F.sum(F.col("e") * F.col("e"))
         ).alias("dw_stat")
     ).select(F.col("n").alias("n_days"), "dw_stat")
@@ -261,13 +258,13 @@ def ml_ols_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cook = e.join(F.broadcast(s2)).select(
         F.date_format("day", "yyyy-MM-dd").alias("day"),
-        _q6(
+        r6(
             F.col("e")
             * F.col("e")
             * F.col("h")
             / (F.col("s2") * 2 * (1 - F.col("h")) * (1 - F.col("h")))
         ).alias("cook_d"),
-        _q6(F.col("h")).alias("leverage"),
+        r6(F.col("h")).alias("leverage"),
     )
     return cook.orderBy(F.desc("cook_d"), F.asc("day")).limit(5)
 
@@ -353,7 +350,7 @@ def win_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "n_deltas",
             "var_5pct",
-            _q6(
+            r6(
                 F.col("tail_sum") / F.col("k").cast("double") / 100.0
             ).alias("cvar_5pct"),
         )
@@ -482,7 +479,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source_a", "source_b")
         .agg((F.sum(F.abs(F.col("za") - F.col("zb"))) / _BD_TOPK).alias("d"))
     )
-    return pairs.select("source_a", "source_b", _q6(F.col("d")).alias("delta"))
+    return pairs.select("source_a", "source_b", r6(F.col("d")).alias("delta"))
 
 
 # ---------------------------------------------------------------------------

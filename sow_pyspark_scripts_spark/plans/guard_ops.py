@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..registry import query
 from ..sources import read_table
 
@@ -178,9 +179,7 @@ def text_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     return docs.select(
         "doc_id",
-        (
-            F.floor(symbols.cast("double") / chars * 1e6 + F.lit(0.5)) / 1e6
-        ).alias("symbol_density"),
+        r6(symbols.cast("double") / chars).alias("symbol_density"),
         kw.alias("kw_hits"),
         ((symbols * 50 > chars) | (kw >= 2)).alias("is_code"),
     )
@@ -254,10 +253,8 @@ def ml_offpolicy_ips(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = F.when(hit, 1.0 / F.col("p")).otherwise(0.0)
     wr = F.when(hit, F.col("value") / F.col("p")).otherwise(0.0)
     return scored.select(w.alias("w"), wr.alias("wr")).agg(
-        (F.floor(F.avg("wr") * 1e6 + F.lit(0.5)) / 1e6).alias("ips_value"),
-        (F.floor(F.sum("wr") / F.sum("w") * 1e6 + F.lit(0.5)) / 1e6).alias(
-            "snips_value"
-        ),
+        r6(F.avg("wr")).alias("ips_value"),
+        r6(F.sum("wr") / F.sum("w")).alias("snips_value"),
         (
             F.floor(
                 F.sum("w") * F.sum("w") / F.sum(F.col("w") * F.col("w")) * 1e4
@@ -341,11 +338,5 @@ def dq_pattern_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "column_name",
         "mask",
         "n",
-        (
-            F.floor(
-                F.col("n").cast("double") / F.sum("n").over(wcol) * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("share"),
+        r6(F.col("n").cast("double") / F.sum("n").over(wcol)).alias("share"),
     )

@@ -32,6 +32,7 @@ Scale notes baked into each builder:
 
 from __future__ import annotations
 
+from ..functions.det import quant, r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -39,10 +40,6 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
-
-
-def _q6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
 # ---------------------------------------------------------------------------
@@ -154,9 +151,9 @@ def agg_price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("y0").cast("long").alias("year0"),
         F.col("y1").cast("long").alias("year1"),
         "n_parts",
-        _q6(lasp).alias("laspeyres"),
-        _q6(paas).alias("paasche"),
-        _q6(F.sqrt(lasp * paas)).alias("fisher"),
+        r6(lasp).alias("laspeyres"),
+        r6(paas).alias("paasche"),
+        r6(F.sqrt(lasp * paas)).alias("fisher"),
     )
 
 
@@ -256,15 +253,10 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return au.agg(
         F.count(F.lit(1)).alias("n_users"),
-        (
-            F.floor(
-                F.sum("ndcg_u").cast("double")
-                / F.count(F.lit(1))
-                / 1e12
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        r6(
+            F.sum("ndcg_u").cast("double")
+            / F.count(F.lit(1))
+            / 1e12
         ).alias("ndcg_at_10"),
     )
 
@@ -364,7 +356,7 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         nrm = df.agg(F.sqrt(F.sum(dec * dec).cast("double")).alias("nrm"))
         return df.join(F.broadcast(nrm)).select(
             *[c for c in df.columns if c != col],
-            F.floor(F.col(col) / F.col("nrm") * F.lit(1e6) + F.lit(0.5))
+            quant(F.col(col) / F.col("nrm"))
             .cast("long")
             .alias(col),
         )

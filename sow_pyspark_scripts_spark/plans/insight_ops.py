@@ -37,17 +37,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.relational import with_prefix_sum
-from ..functions.det import mean_grid, mean_grid_sql
+from ..functions.det import mean_grid, mean_grid_sql, r6
 from ..registry import query
 from ..sources import read_table
 
 _M6V = mean_grid_sql("v")
-
-
-def _round6(col):
-    """Half-up 6-dp rounding, identical in Spark and DuckDB (bankers'
-    rounding differs between engines; floor(x*1e6+0.5) does not)."""
-    return F.floor(col * 1e6 + F.lit(0.5)) / 1e6
 
 
 # ---------------------------------------------------------------------------
@@ -162,10 +156,8 @@ def stats_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
         "segment",
         "priority",
         "n",
-        _round6(expected).alias("expected"),
-        _round6(F.pow(F.col("n") - expected, F.lit(2)) / expected).alias(
-            "contrib"
-        ),
+        r6(expected).alias("expected"),
+        r6(F.pow(F.col("n") - expected, F.lit(2)) / expected).alias("contrib"),
     )
 
 
@@ -232,7 +224,7 @@ def stats_ks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("nb").over(wall).alias("tb"),
     )
     return c.agg(
-        _round6(
+        r6(
             F.max(
                 F.abs(
                     F.col("ca") / F.col("ta").cast("double")
@@ -410,9 +402,9 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.crossJoin(b).select(
         "n_a",
         "n_b",
-        _round6(F.col("m_a")).alias("mean_a"),
-        _round6(F.col("m_b")).alias("mean_b"),
-        _round6((F.col("m_a") - F.col("m_b")) / F.sqrt(se2)).alias("t_stat"),
+        r6(F.col("m_a")).alias("mean_a"),
+        r6(F.col("m_b")).alias("mean_b"),
+        r6((F.col("m_a") - F.col("m_b")) / F.sqrt(se2)).alias("t_stat"),
         (F.floor(df_num / df_den * 1e3 + F.lit(0.5)) / 1e3).alias("df"),
     )
 
@@ -472,7 +464,7 @@ def dq_reconcile_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(F.when(F.col("diff") > 1, 1).otherwise(0)).alias("n_mismatched"),
         F.max("diff").alias("max_abs_diff_cents"),
-        _round6(F.avg("diff")).alias("mean_abs_diff_cents"),
+        r6(F.avg("diff")).alias("mean_abs_diff_cents"),
     )
 
 
@@ -554,7 +546,7 @@ def corpus_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
-        _round6(F.avg("s")).alias("mean_surprisal"),
+        r6(F.avg("s")).alias("mean_surprisal"),
     )
 
 
@@ -701,8 +693,8 @@ def ml_ols_normal_equation(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = (F.col("v1") * F.col("c2y") - F.col("c12") * F.col("c1y")) / det
     return m.select(
         "n",
-        _round6(b1).alias("beta_quantity"),
-        _round6(b2).alias("beta_discount"),
+        r6(b1).alias("beta_quantity"),
+        r6(b2).alias("beta_discount"),
         (
             F.floor(
                 (F.col("my") - b1 * F.col("m1") - b2 * F.col("m2")) * 1e3
@@ -861,7 +853,7 @@ def text_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_neg.cast("long").alias("n_neg"),
         F.when(n == 0, F.lit(0.0))
         .otherwise(
-            F.floor((n_pos - n_neg) / n.cast("double") * 1e6 + F.lit(0.5)) / 1e6
+            r6((n_pos - n_neg) / n.cast("double"))
         )
         .alias("sentiment"),
     )
@@ -996,7 +988,7 @@ def agg_herfindahl_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return tot.groupBy("category").agg(
         F.max("n_suppliers").alias("n_suppliers"),
-        _round6(
+        r6(
             F.sum(F.pow(F.col("r") / F.col("t").cast("double"), F.lit(2)))
         ).alias("hhi"),
     )
@@ -1400,7 +1392,7 @@ def events_entropy_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.groupBy("user_id").agg(
         F.max("tot").alias("n_events"),
         F.count(F.lit(1)).alias("n_types"),
-        _round6(F.sum(-p * F.log(p))).alias("entropy"),
+        r6(F.sum(-p * F.log(p))).alias("entropy"),
     )
 
 
@@ -2092,9 +2084,7 @@ def events_error_budget_sli(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         "n_events",
         "n_errors",
-        _round6(F.col("n_errors") / F.col("n_events").cast("double")).alias(
-            "error_rate"
-        ),
+        r6(F.col("n_errors") / F.col("n_events").cast("double")).alias("error_rate"),
         breached.alias("budget_breached"),
         F.sum(F.when(breached, 1).otherwise(0))
         .over(wcum)
@@ -2190,7 +2180,7 @@ def ml_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_users",
             "conversions",
             F.sum("conversions").over(wcum).alias("cum_conversions"),
-            _round6(
+            r6(
                 F.sum("conversions").over(wcum) / F.col("tot").cast("double")
             ).alias("cum_capture_rate"),
         )

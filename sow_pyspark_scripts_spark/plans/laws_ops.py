@@ -34,6 +34,7 @@ Scale notes baked into each builder:
 
 from __future__ import annotations
 
+from ..functions.det import r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -41,10 +42,6 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
-
-
-def _q6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
 # ---------------------------------------------------------------------------
@@ -111,9 +108,9 @@ def stats_circular_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "event_type",
         "n",
-        _q6(mean_h).alias("mean_hour"),
-        _q6(r).alias("resultant_r"),
-        _q6(1.0 - r).alias("circ_variance"),
+        r6(mean_h).alias("mean_hour"),
+        r6(r).alias("resultant_r"),
+        r6(1.0 - r).alias("circ_variance"),
     )
 
 
@@ -239,7 +236,7 @@ def agg_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return classed.groupBy("abc_class", "xyz_class").agg(
         F.count(F.lit(1)).alias("n_parts"),
-        _q6(F.sum("rev").cast("double") / F.min("tot")).alias("rev_share"),
+        r6(F.sum("rev").cast("double") / F.min("tot")).alias("rev_share"),
     )
 
 
@@ -428,9 +425,9 @@ def stats_gravity_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return m.select(
         F.col("n").alias("n_pairs"),
-        _q6(b1).alias("beta_mass"),
-        _q6(b2).alias("beta_dist"),
-        _q6(icpt).alias("intercept"),
+        r6(b1).alias("beta_mass"),
+        r6(b2).alias("beta_dist"),
+        r6(icpt).alias("intercept"),
     )
 
 
@@ -529,6 +526,6 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.exp((F.col("sy") - beta * F.col("sx")) / F.col("n"))
     return m.select(
         F.col("n").alias("n_batches"),
-        _q6(beta).alias("heaps_beta"),
-        _q6(k).alias("heaps_k"),
+        r6(beta).alias("heaps_beta"),
+        r6(k).alias("heaps_k"),
     )

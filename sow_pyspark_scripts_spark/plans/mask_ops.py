@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..registry import query
 from ..sources import read_table
 
@@ -99,16 +100,11 @@ def events_retention_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flags.groupBy("day").agg(
         F.sum("active").alias("n_active"),
         F.sum("retained").alias("n_retained_7d"),
-        (
-            F.floor(
-                F.when(F.sum("active") == 0, 0.0)
-                .otherwise(
-                    F.sum("retained").cast("double") / F.sum("active")
-                )
-                * 1e6
-                + F.lit(0.5)
+        r6(
+            F.when(F.sum("active") == 0, 0.0)
+            .otherwise(
+                F.sum("retained").cast("double") / F.sum("active")
             )
-            / 1e6
         ).alias("retention_7d"),
     )
 
@@ -226,9 +222,7 @@ def events_cohort_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit = rates.groupBy("cohort").agg(slope.alias("slope"))
     return fit.select(
         "cohort",
-        (F.floor(-F.col("slope") * 1e6 + F.lit(0.5)) / 1e6).alias(
-            "decay_lambda"
-        ),
+        r6(-F.col("slope")).alias("decay_lambda"),
         (
             F.floor(
                 F.when(F.col("slope") >= 0, -1.0)

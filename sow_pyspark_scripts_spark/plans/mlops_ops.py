@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import r6, split_bucket
 from ..operators.dedup import (
     BAND_SIZE,
     NUM_SEEDS,
@@ -46,18 +47,6 @@ from ..functions.pin import pin as _pin_lazy
 from ..registry import query
 from ..sources import read_table
 from .sql_common import _HASH_BUCKET_SQL
-
-
-def _q6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
-
-def _split_bucket():
-    h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":split")))
-    nib = lambda j: (  # noqa: E731
-        F.instr(F.lit("0123456789abcdef"), F.substring(h, j, 1)) - 1
-    )
-    return (nib(1) * 16 + nib(2)) % 100
 
 
 # ---------------------------------------------------------------------------
@@ -168,8 +157,8 @@ def _decontam_report(docs: DataFrame, cand: DataFrame) -> DataFrame:
     count distinct train collisions per test doc."""
     splits = docs.select(
         "doc_id",
-        F.when(_split_bucket() < 80, "train")
-        .when(_split_bucket() < 90, "valid")
+        F.when(split_bucket() < 80, "train")
+        .when(split_bucket() < 90, "valid")
         .otherwise("test")
         .alias("split"),
     )
@@ -317,7 +306,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return qw.join(F.broadcast(cov)).select(
         "n_cal",
         "q_width",
-        _q6(F.col("n_in") / F.col("n").cast("double")).alias("coverage"),
+        r6(F.col("n_in") / F.col("n").cast("double")).alias("coverage"),
     )
 
 
@@ -394,7 +383,7 @@ def events_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_users",
         "n_a",
         "n_b",
-        _q6(chi2).alias("chi2_stat"),
+        r6(chi2).alias("chi2_stat"),
         (chi2 > 3.841).alias("srm_flag"),
     )
 
@@ -453,7 +442,7 @@ def pack_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col("ntok").cast("long")).alias("total_tokens"),
         (F.col("bucket") * F.count(F.lit(1))).alias("padded_tokens"),
-        _q6(
+        r6(
             F.sum(F.col("ntok").cast("long")).cast("double")
             / (F.col("bucket") * F.count(F.lit(1)))
         ).alias("efficiency"),
@@ -584,10 +573,10 @@ def _qclf_features(docs: DataFrame, pin: bool = True) -> DataFrame:
     )
     feat = base.join(topw, "doc_id").select(
         "doc_id",
-        _q6(F.least(n, F.lit(100)) / 100.0).alias("x1"),
-        _q6(wlen_sum / n / 10.0).alias("x2"),
-        _q6(F.size(F.array_distinct("toks")).cast("double") / n).alias("x3"),
-        F.when(_q6(F.col("top_c").cast("double") / n) <= 0.1, 1.0)
+        r6(F.least(n, F.lit(100)) / 100.0).alias("x1"),
+        r6(wlen_sum / n / 10.0).alias("x2"),
+        r6(F.size(F.array_distinct("toks")).cast("double") / n).alias("x3"),
+        F.when(r6(F.col("top_c").cast("double") / n) <= 0.1, 1.0)
         .otherwise(0.0)
         .alias("y"),
     )
@@ -595,7 +584,7 @@ def _qclf_features(docs: DataFrame, pin: bool = True) -> DataFrame:
 
 
 def _qclf_p():
-    return _q6(
+    return r6(
         F.lit(1.0)
         / (
             F.lit(1.0)

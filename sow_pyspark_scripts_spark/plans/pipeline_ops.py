@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import quant, r6
 from ..functions.sketch import approx_pctl, approx_pctls
 from ..registry import query
 from ..sources import read_table, spread
@@ -194,7 +195,6 @@ def dq_partition_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_buckets"),
         F.sum("bc").alias("tot"),
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return (
         glob.crossJoin(F.broadcast(bstats))
         .select(
@@ -269,9 +269,7 @@ def dq_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "seg",
         "k",
         "l_distinct",
-        (F.floor(F.col("top_bc").cast("double") / F.col("k") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "top_band_share"
-        ),
+        r6(F.col("top_bc").cast("double") / F.col("k")).alias("top_band_share"),
         (F.col("l_distinct") >= 3).alias("l_diverse"),
     )
 
@@ -439,13 +437,7 @@ def reco_item_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ia",
             "ib",
             "c",
-            (
-                F.floor(
-                    F.col("c") / F.sqrt(F.col("da").cast("double") * F.col("db")) * F.lit(1e6)
-                    + F.lit(0.5)
-                )
-                / F.lit(1e6)
-            ).alias("cosine"),
+            r6(F.col("c") / F.sqrt(F.col("da").cast("double") * F.col("db"))).alias("cosine"),
         )
     )
     from pyspark.sql import Window
@@ -667,13 +659,7 @@ def stats_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor(F.col("obs_diff") * F.lit(1e4) + F.lit(0.5)) / F.lit(1e4)).alias(
             "obs_diff_cents"
         ),
-        (
-            F.floor(
-                (F.lit(1.0) + F.col("ge")) / (F.lit(1.0) + F.col("n_resamples")) * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
-        ).alias("p_value"),
+        r6((F.lit(1.0) + F.col("ge")) / (F.lit(1.0) + F.col("n_resamples"))).alias("p_value"),
     )
 
 
@@ -769,7 +755,7 @@ def events_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     age_days = (
         F.unix_timestamp(F.col("now_ts")) - F.unix_timestamp(F.col("ts"))
     ) / F.lit(86400.0)
-    w_u = F.floor(F.exp(F.lit(-0.05) * age_days) * F.lit(1e6) + F.lit(0.5)).cast("long")
+    w_u = quant(F.exp(F.lit(-0.05) * age_days)).cast("long")
     return (
         ev.crossJoin(F.broadcast(mx))
         .select("user_id", w_u.alias("w_u"))

@@ -25,13 +25,10 @@ from ..functions.det import (
     d2r6_grid_sql,
     mean_grid,
     mean_grid_sql,
+    quant,
     quant_sql,
 )
 from ..sources import read_table
-
-def _round6(c):
-    return F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)
-
 
 # Exact-integer 1e-6 grid mean (functions/det.py): every centroid /
 # codeword mean below is pinned so its value is independent of Spark's
@@ -424,15 +421,13 @@ def _ivfadc_residuals(spark: SparkSession, sf_dir: str, coarse=None):
     ivf = icells.select("vec_id", F.col("cell").alias("ivf_cell"))
     cq = centroids.select(
         F.col("cent_id").alias("ivf_cell"),
-        F.transform("centroid", lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5))).alias(
-            "c6"
-        ),
+        F.transform("centroid", lambda c: quant(c)).alias("c6"),
     )
     xq = emb.select(
         "vec_id",
         F.transform(
             F.col("embedding").cast("array<double>"),
-            lambda v: F.floor(v * F.lit(1e6) + F.lit(0.5)),
+            lambda v: quant(v),
         ).alias("x6"),
     )
     return (

@@ -23,14 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..operators.relational import with_global_row_number
 from ..functions.sketch import approx_pctl, approx_pctls
 from ..registry import query
 from ..sources import read_table
-
-
-def _round6(c):
-    return F.floor(c * 1000000.0 + F.lit(0.5)) / 1000000.0
 
 
 # ---------------------------------------------------------------------------
@@ -252,8 +249,8 @@ def dq_benford_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hist = digits.groupBy("digit").agg(F.count(F.lit(1)).alias("n"))
     tot = hist.agg(F.sum("n").alias("t"))
-    obs = _round6(F.col("n") / F.col("t").cast("double"))
-    exp = _round6(F.log10(F.lit(1.0) + F.lit(1.0) / F.col("digit")))
+    obs = r6(F.col("n") / F.col("t").cast("double"))
+    exp = r6(F.log10(F.lit(1.0) + F.lit(1.0) / F.col("digit")))
     return hist.crossJoin(F.broadcast(tot)).select(
         "digit",
         "n",
@@ -347,7 +344,7 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # functions/sketch.approx_pctls — was 9 independent summaries)
     q = p.agg(
         *[
-            _round6(
+            r6(
                 F.element_at(approx_pctls(c, (0.25, 0.50, 0.75)), i)
             ).alias(f"{c[0]}{i}")
             for c in ("recency_days", "frequency", "monetary")
@@ -431,7 +428,7 @@ def agg_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         F.col("n").alias("n_customers"),
         (F.col("t").cast("double") / 100).alias("total_revenue"),
-        _round6(
+        r6(
             F.lit(2.0) * F.col("w") / (F.col("n").cast("double") * F.col("t"))
             - (F.col("n") + 1).cast("double") / F.col("n")
         ).alias("gini"),

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.text import STOPWORDS, tokenize
-from ..functions.det import cos_grid_sql, mean_grid, mean_grid_sql
+from ..functions.det import cos_grid_sql, mean_grid, mean_grid_sql, quant, r6
 from ..registry import query
 from ..sources import read_table
 
@@ -128,7 +128,7 @@ def ml_map_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("ap_u"),
         F.floor(F.lit(1e12) / F.col("first_rnk") + F.lit(0.5)).cast("long").alias("rr_u"),
     )
-    r6of = lambda c: F.floor(c / F.lit(1e12) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
+    r6of = lambda c: r6(c / F.lit(1e12))  # noqa: E731
     return au.agg(
         F.count(F.lit(1)).alias("n_users"),
         r6of(F.sum("ap_u").cast("double") / F.count(F.lit(1))).alias("map_score"),
@@ -211,8 +211,6 @@ def similarity_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast)."""
     docs = read_table(spark, sf_dir, "documents")
     emb = read_table(spark, sf_dir, "embeddings")
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
-
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     lex = docs.select(
         "doc_id",
@@ -236,23 +234,18 @@ def similarity_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(mean_grid(F.col("v")).alias("c"))
     )
     # exact-integer grid cosine (r5, functions/det.py doctrine)
-    qv = F.floor(F.col("v") * F.lit(1e6) + F.lit(0.5)).cast("long")
-    qc = F.floor(F.col("c") * F.lit(1e6) + F.lit(0.5)).cast("long")
+    qv = quant(F.col("v")).cast("long")
+    qc = quant(F.col("c")).cast("long")
     sims = (
         flat.join(F.broadcast(cent), "pos")
         .groupBy("vec_id")
         .agg(
-            (
-                F.floor(
-                    F.sum(qv * qc).cast("double")
-                    / (
-                        F.sqrt(F.sum(qv * qv).cast("double"))
-                        * F.sqrt(F.sum(qc * qc).cast("double"))
-                    )
-                    * F.lit(1e6)
-                    + F.lit(0.5)
+            r6(
+                F.sum(qv * qc).cast("double")
+                / (
+                    F.sqrt(F.sum(qv * qv).cast("double"))
+                    * F.sqrt(F.sum(qc * qc).cast("double"))
                 )
-                / F.lit(1e6)
             ).alias("sim")
         )
     )
@@ -365,9 +358,7 @@ def stats_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "n",
         "k",
-        (F.floor(F.col("cum_u").cast("double") / F.lit(1e9) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).alias(
-            "cum_llr"
-        ),
+        r6(F.col("cum_u").cast("double") / F.lit(1e9)).alias("cum_llr"),
         F.when(F.col("cum_u") >= F.lit(bound_u), "accept_h1")
         .when(F.col("cum_u") <= F.lit(-bound_u), "accept_h0")
         .otherwise("continue")
@@ -485,10 +476,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         ph.groupBy("phrase")
         .agg(
             F.count(F.lit(1)).alias("n_occurrences"),
-            (
-                F.floor(F.max("ps_u").cast("double") / F.lit(1e9) * F.lit(1e6) + F.lit(0.5))
-                / F.lit(1e6)
-            ).alias("score"),
+            r6(F.max("ps_u").cast("double") / F.lit(1e9)).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc("phrase"))
         .limit(15)

@@ -32,6 +32,7 @@ Scale notes baked into each builder:
 
 from __future__ import annotations
 
+from ..functions.det import r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -39,10 +40,6 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
-
-
-def _q6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
 # ---------------------------------------------------------------------------
@@ -134,7 +131,7 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "n",
         w_plus.alias("w_plus"),
-        _q6((w_plus - mean) / F.sqrt(var)).alias("z_stat"),
+        r6((w_plus - mean) / F.sqrt(var)).alias("z_stat"),
     )
 
 
@@ -241,7 +238,7 @@ def stats_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisor = 1.0 - (F.col("tcorr").cast("double") / F.col("ncells")) / (
         kd * kd - 1
     )
-    return s.select("n", "k", _q6(chi2 / divisor).alias("chi2_stat"))
+    return s.select("n", "k", r6(chi2 / divisor).alias("chi2_stat"))
 
 
 # ---------------------------------------------------------------------------
@@ -397,5 +394,5 @@ def stats_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.col("swn").cast("double") * F.col("swn") / nd
     )
     return s.select(
-        "n_months", "n", "n_pos", _q6(num / F.sqrt(var)).alias("z_stat")
+        "n_months", "n", "n_pos", r6(num / F.sqrt(var)).alias("z_stat")
     )

@@ -24,6 +24,7 @@ Scale notes baked into each builder:
 
 from __future__ import annotations
 
+from ..functions.det import r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -187,7 +188,7 @@ def ml_data_scaling_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k",
         "n_train",
         (F.floor(F.col("mse") * 1e4 + F.lit(0.5)) / 1e4).alias("test_mse"),
-        (F.floor(expo * 1e6 + F.lit(0.5)) / 1e6).alias("scaling_exponent"),
+        r6(expo).alias("scaling_exponent"),
     )
 
 
@@ -312,7 +313,7 @@ def stats_hotelling_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wide.select(
         "n0",
         "n1",
-        (F.floor(t2 * 1e6 + F.lit(0.5)) / 1e6).alias("t2"),
+        r6(t2).alias("t2"),
     )
 
 

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..registry import query
 from .sql_common import _p_two_sided  # noqa: F401 — re-exported for compat
 from ..sources import read_table
@@ -247,8 +248,8 @@ def stats_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "dow",
         "n",
-        (F.floor(F.col("zval") * 1e6 + F.lit(0.5)) / 1e6).alias("z"),
-        (F.floor(F.col("pval") * 1e6 + F.lit(0.5)) / 1e6).alias("p"),
+        r6(F.col("zval")).alias("z"),
+        r6(F.col("pval")).alias("p"),
         (F.col("rnk") <= F.col("kstar")).alias("rejected"),
     )
 
@@ -405,9 +406,7 @@ def dq_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(0.0)
     return prefixed.groupBy("c_mktsegment", "c_nationkey").agg(
         F.max("ng").alias("n_group"),
-        (F.floor(F.sum(gap) / (_BANDS - 1) * 1e6 + F.lit(0.5)) / 1e6).alias(
-            "emd"
-        ),
+        r6(F.sum(gap) / (_BANDS - 1)).alias("emd"),
         (F.sum(gap) / (_BANDS - 1) * _T_DEN > _T_NUM).alias("breach"),
     )
 
@@ -532,7 +531,7 @@ def ml_cv_fold_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     return f.select(
         "fold",
         F.col("n").alias("n_test"),
-        (F.floor(b * 1e6 + F.lit(0.5)) / 1e6).alias("slope"),
+        r6(b).alias("slope"),
         (F.floor(a / 100 * 1e4 + F.lit(0.5)) / 1e4).alias("intercept"),
         (
             F.floor(F.sqrt(sse / F.col("n")) / 100 * 1e4 + F.lit(0.5)) / 1e4

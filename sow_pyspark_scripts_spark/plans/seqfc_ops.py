@@ -36,12 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import quant, r6
 from ..registry import query
 from ..sources import read_table
-
-
-def _q6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
 # ---------------------------------------------------------------------------
@@ -121,7 +118,7 @@ def events_brown_double_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("t", "day", "y")
         .agg(
             F.sum(
-                F.floor(w1 * F.col("by") * 1e6 + F.lit(0.5)).cast("long")
+                quant(w1 * F.col("by")).cast("long")
             ).alias("s1q")
         )
     )
@@ -142,13 +139,13 @@ def events_brown_double_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame
     return s2.select(
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         "y",
-        _q6(F.col("s1q") / 1e6).alias("s1"),
-        _q6(F.col("s2q") / 1e6).alias("s2"),
-        _q6((2.0 * F.col("s1q") - F.col("s2q")) / 1e6).alias("level"),
-        _q6(
+        r6(F.col("s1q") / 1e6).alias("s1"),
+        r6(F.col("s2q") / 1e6).alias("s2"),
+        r6((2.0 * F.col("s1q") - F.col("s2q")) / 1e6).alias("level"),
+        r6(
             (F.col("s1q").cast("double") - F.col("s2q")) / 1e6
         ).alias("trend"),
-        _q6(
+        r6(
             (3.0 * F.col("s1q") - 2.0 * F.col("s2q")) / 1e6
         ).alias("forecast_next"),
     )
@@ -298,12 +295,12 @@ def stats_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "lag_k",
         "n",
-        _q6(
+        r6(
             F.when(F.col("lag_k") == 1, F.col("r1"))
             .when(F.col("lag_k") == 2, F.col("r2"))
             .otherwise(F.col("r3"))
         ).alias("acf"),
-        _q6(
+        r6(
             F.when(F.col("lag_k") == 1, F.col("r1"))
             .when(F.col("lag_k") == 2, F.col("p2"))
             .otherwise(F.col("p3"))
@@ -375,7 +372,7 @@ def stats_theil_u2_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_eval",
         "sse_seasonal",
         "sse_naive",
-        _q6(
+        r6(
             F.sqrt(F.col("sse_seasonal").cast("double") / F.col("sse_naive"))
         ).alias("theil_u2"),
         (F.col("sse_seasonal") < F.col("sse_naive")).alias("seasonal_wins"),
@@ -503,8 +500,8 @@ def stats_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return fit.select(
         "n",
-        _q6(f_stat).alias("f_stat"),
-        _q6(
+        r6(f_stat).alias("f_stat"),
+        r6(
             (F.col("sse_r_n") - F.col("sse_u_n")) / F.col("sse_r_n")
         ).alias("delta_r2"),
         (f_stat > 4.0).alias("granger_causal"),

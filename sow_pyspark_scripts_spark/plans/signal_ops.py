@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..registry import query
 from ..sources import read_table
 
@@ -112,7 +113,7 @@ def stats_extreme_value_gumbel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_blocks",
         (F.floor(mu * 1e4 + F.lit(0.5)) / 1e4).alias("mu"),
         (F.floor(beta * 1e4 + F.lit(0.5)) / 1e4).alias("beta"),
-        (F.floor(p * 1e6 + F.lit(0.5)) / 1e6).alias("p_exceed_150pct"),
+        r6(p).alias("p_exceed_150pct"),
     )
 
 
@@ -286,6 +287,6 @@ def stats_kendall_tau_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_total",
             F.col("c").alias("concordant"),
             F.col("d").alias("discordant"),
-            (F.floor(tau * 1e6 + F.lit(0.5)) / 1e6).alias("tau_b"),
+            r6(tau).alias("tau_b"),
         )
     )

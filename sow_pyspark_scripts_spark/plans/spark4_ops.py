@@ -26,6 +26,7 @@ Scale notes:
 
 from __future__ import annotations
 
+from ..functions.det import r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -278,7 +279,7 @@ def api_pandas_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sdf.select(
         "o_orderpriority",
         F.col("n_orders").cast("long").alias("n_orders"),
-        (F.floor(F.col("avg_price") * 1e6 + F.lit(0.5)) / 1e6).alias("avg_price"),
+        r6(F.col("avg_price")).alias("avg_price"),
     )
 
 

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..functions.det import cos_grid_sql, d2_grid_sql, mean_grid_sql
+from ..functions.det import cos_grid_sql, d2_grid_sql, mean_grid_sql, r6
 from ..sources import read_table
 
 _M6V = mean_grid_sql("v")
@@ -465,16 +465,9 @@ def events_bot_score_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ent = by_type.groupBy("user_id").agg(
         F.sum("c").alias("n_events"),
-        (
-            F.floor(
-                (
-                    F.log(F.sum("c"))
-                    - F.sum(F.col("c") * F.log("c")) / F.sum("c")
-                )
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        r6(
+            F.log(F.sum("c"))
+            - F.sum(F.col("c") * F.log("c")) / F.sum("c")
         ).alias("type_entropy"),
     )
     wu = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -499,7 +492,7 @@ def events_bot_score_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "n_events",
         "type_entropy",
-        (F.floor(cv * 1e6 + F.lit(0.5)) / 1e6).alias("gap_cv"),
+        r6(cv).alias("gap_cv"),
         (
             F.when(F.col("n_events") >= 40, 1).otherwise(0)
             + F.when(F.col("type_entropy") < 0.75, 1).otherwise(0)

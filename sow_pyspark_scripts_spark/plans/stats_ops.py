@@ -41,7 +41,7 @@ from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.det import cos_grid_sql, mean_grid, mean_grid_sql
+from ..functions.det import cos_grid_sql, mean_grid, mean_grid_sql, quant, r6
 
 _M6V = mean_grid_sql("v")
 from ..registry import query
@@ -156,7 +156,7 @@ def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_a",
         "n_b",
         u2.alias("u2_a"),
-        (F.floor(z * 1e6 + F.lit(0.5)) / 1e6).alias("z"),
+        r6(z).alias("z"),
     )
 
 
@@ -306,10 +306,8 @@ def stats_delta_method_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.select(
         "event_type",
         "n",
-        (F.floor(F.col("mx") / F.col("my") * 1e6 + F.lit(0.5)) / 1e6).alias(
-            "ratio_cents"
-        ),
-        (F.floor(F.sqrt(var_ratio) * 1e6 + F.lit(0.5)) / 1e6).alias("se_cents"),
+        r6(F.col("mx") / F.col("my")).alias("ratio_cents"),
+        r6(F.sqrt(var_ratio)).alias("se_cents"),
     ).orderBy("event_type")
 
 
@@ -416,7 +414,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         "duration",
         "n_at_risk",
         "d_events",
-        (F.floor(surv * 1e6 + F.lit(0.5)) / 1e6).alias("survival"),
+        r6(surv).alias("survival"),
     ).orderBy("duration")
 
 
@@ -484,16 +482,11 @@ def ml_naive_bayes_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "tok",
             "c",
-            (
-                F.floor(
-                    F.log(
-                        (F.col("c") + 1)
-                        / (F.col("tot") + F.col("v")).cast("double")
-                    )
-                    * 1e6
-                    + F.lit(0.5)
+            r6(
+                F.log(
+                    (F.col("c") + 1)
+                    / (F.col("tot") + F.col("v")).cast("double")
                 )
-                / 1e6
             ).alias("loglik"),
             rn.alias("rn"),
         )
@@ -592,8 +585,8 @@ def ml_silhouette_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-integer grid sums (r5): neither engine pins its float
     # partial-aggregate merge order, so dot/norm sums quantize first
     # (functions/det.py doctrine)
-    qv = F.floor(F.col("v") * F.lit(1e6) + F.lit(0.5)).cast("long")
-    qc = F.floor(F.col("c") * F.lit(1e6) + F.lit(0.5)).cast("long")
+    qv = quant(F.col("v")).cast("long")
+    qc = quant(F.col("c")).cast("long")
     cnorm = cent.groupBy("clabel").agg(
         F.sqrt(F.sum(qc * qc).cast("double")).alias("cn")
     )
@@ -923,7 +916,6 @@ def stats_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     z = s_adj / F.sqrt(n * (n - 1) * (2 * n + 5) / F.lit(18.0))
     tau = F.col("s_stat") / (n * (n - 1) / F.lit(2.0))
-    r6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return s.select("n", "s_stat", r6(z).alias("z"), r6(tau).alias("tau"))
 
 
@@ -998,7 +990,6 @@ def stats_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     vy = (F.col("syy") - F.col("sy") * (F.col("sy") / nd)) / (F.col("n") - 1)
     cxy = (F.col("sxy") - F.col("sx") * (F.col("sy") / nd)) / (F.col("n") - 1)
     c = m.select("n", vx.alias("vx"), vy.alias("vy"), cxy.alias("cxy"))
-    r6 = lambda col: F.floor(col * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     r4 = lambda col: F.floor(col * 1e4 + F.lit(0.5)) / 1e4  # noqa: E731
     return c.select(
         "n",
@@ -1194,7 +1185,6 @@ def ml_confusion_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("actual_n").alias("actual_n"),
         F.sum("pred_n").alias("pred_n"),
     )
-    r6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return m.select(
         "cls",
         "tp",
@@ -1300,7 +1290,7 @@ def ml_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "n_pos",
         "n_neg",
-        (F.floor(auc * 1e6 + F.lit(0.5)) / 1e6).alias("auc"),
+        r6(auc).alias("auc"),
     )
 
 
@@ -1361,15 +1351,10 @@ def events_forecast_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFram
             )
             / 1e4
         ).alias("mae_cents"),
-        (
-            F.floor(
-                F.avg(
-                    2.0 * err / (F.abs(F.col("rev")) + F.abs(F.col("forecast")))
-                )
-                * 1e6
-                + F.lit(0.5)
+        r6(
+            F.avg(
+                2.0 * err / (F.abs(F.col("rev")) + F.abs(F.col("forecast")))
             )
-            / 1e6
         ).alias("smape"),
     )
 
@@ -1528,20 +1513,13 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w1",
             "w2",
             "c",
-            (
-                F.floor(
-                    (
-                        (F.col("c") - 0.75) / F.col("tot")
-                        + 0.75
-                        * F.col("n_types")
-                        / F.col("tot")
-                        * F.col("cont_c")
-                        / F.col("nbt").cast("double")
-                    )
-                    * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
+            r6(
+                (F.col("c") - 0.75) / F.col("tot")
+                + 0.75
+                * F.col("n_types")
+                / F.col("tot")
+                * F.col("cont_c")
+                / F.col("nbt").cast("double")
             ).alias("p_kn"),
         )
     )
@@ -1632,16 +1610,11 @@ def graph_jaccard_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             "co_n",
             "deg_a",
             "deg_b",
-            (
-                F.floor(
-                    F.col("co_n")
-                    / (F.col("deg_a") + F.col("deg_b") - F.col("co_n")).cast(
-                        "double"
-                    )
-                    * 1e6
-                    + F.lit(0.5)
+            r6(
+                F.col("co_n")
+                / (F.col("deg_a") + F.col("deg_b") - F.col("co_n")).cast(
+                    "double"
                 )
-                / 1e6
             ).alias("jaccard"),
         )
     )
@@ -1713,7 +1686,6 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("score_pct").alias("score_sum"),
         F.sum((p - F.col("label")) * (p - F.col("label"))).alias("brier_sum"),
     )
-    r6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return binned.select(
         "bin",
         "n",
@@ -1778,14 +1750,9 @@ def stats_hill_tail_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.lit(_HILL_K).alias("k"),
             F.first("xk").alias("x_k"),
-            (
-                F.floor(
-                    _HILL_K
-                    / F.sum(F.log(F.col("x") / F.col("xk").cast("double")))
-                    * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
+            r6(
+                _HILL_K
+                / F.sum(F.log(F.col("x") / F.col("xk").cast("double")))
             ).alias("alpha_hill"),
         )
     )
@@ -1840,7 +1807,6 @@ def corpus_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_ish_token_count(F.col("text")).alias("n_tokens"),
         F.length("text").cast("long").alias("n_chars"),
     )
-    r6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         counts.groupBy("lang")
         .agg(
@@ -1933,7 +1899,7 @@ def events_periodicity_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.select(
         "lag_k",
         "n",
-        (F.floor(num / den * 1e6 + F.lit(0.5)) / 1e6).alias("autocorr"),
+        r6(num / den).alias("autocorr"),
     ).orderBy("lag_k")
 
 
@@ -2010,16 +1976,11 @@ def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "both_n",
             "aud_a",
             "aud_b",
-            (
-                F.floor(
-                    F.col("both_n")
-                    / (F.col("aud_a") + F.col("aud_b") - F.col("both_n")).cast(
-                        "double"
-                    )
-                    * 1e6
-                    + F.lit(0.5)
+            r6(
+                F.col("both_n")
+                / (F.col("aud_a") + F.col("aud_b") - F.col("both_n")).cast(
+                    "double"
                 )
-                / 1e6
             ).alias("jaccard"),
         )
         .orderBy("ta", "tb")
@@ -2183,7 +2144,6 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "jaccard", (eq / F.lit(float(NUM_SEEDS))).alias("mh_est")
         )
     )
-    r6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return est.agg(
         F.count(F.lit(1)).alias("n_pairs"),
         r6(F.avg(F.abs(F.col("mh_est") - F.col("jaccard")))).alias("mae"),
@@ -2272,13 +2232,7 @@ def similarity_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            (
-                F.floor(
-                    F.coalesce("n_hits", F.lit(0)) / F.lit(5.0) * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
-            ).alias("recall_at_5"),
+            r6(F.coalesce("n_hits", F.lit(0)) / F.lit(5.0)).alias("recall_at_5"),
         )
         .orderBy("qid")
     )
@@ -2341,9 +2295,7 @@ def events_weekday_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dow",
             "n_days",
             (F.floor(avg_day * 1e4 + F.lit(0.5)) / 1e4).alias("avg_cents"),
-            (F.floor(avg_day / grand * 1e6 + F.lit(0.5)) / 1e6).alias(
-                "seasonal_index"
-            ),
+            r6(avg_day / grand).alias("seasonal_index"),
         )
         .orderBy("dow")
     )
@@ -2409,7 +2361,7 @@ def dq_control_chart_pchart(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("day", "yyyy-MM-dd").alias("day"),
             "n",
             "errs",
-            (F.floor(p * 1e6 + F.lit(0.5)) / 1e6).alias("p"),
+            r6(p).alias("p"),
             F.when(p > F.col("pbar") + band, "above")
             .otherwise("below")
             .alias("breach_side"),
@@ -2464,7 +2416,6 @@ def text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_tokens"),
         F.countDistinct("tok").alias("n_types"),
     )
-    r6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return counts.select(
         "doc_id",
         "n_tokens",
@@ -2628,7 +2579,7 @@ def events_fano_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return f.agg(
         F.count(F.lit(1)).alias("n_users"),
         F.sum(F.when(F.col("fano") > 2.0, 1).otherwise(0)).alias("n_bursty"),
-        (F.floor(F.avg("fano") * 1e6 + F.lit(0.5)) / 1e6).alias("mean_fano"),
+        r6(F.avg("fano")).alias("mean_fano"),
     )
 
 
@@ -2709,13 +2660,7 @@ def events_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_sessions"),
             bounce.alias("n_bounces"),
-            (
-                F.floor(
-                    bounce / F.count(F.lit(1)).cast("double") * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
-            ).alias("bounce_rate"),
+            r6(bounce / F.count(F.lit(1)).cast("double")).alias("bounce_rate"),
         )
         .orderBy("entry_type")
     )
@@ -2797,7 +2742,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return m.select(
         F.col("n").alias("n_edge_ends"),
-        (F.floor(num / den * 1e6 + F.lit(0.5)) / 1e6).alias("assortativity"),
+        r6(num / den).alias("assortativity"),
     )
 
 
@@ -2851,14 +2796,9 @@ def agg_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         "m",
         "rev",
         "rev_prev_year",
-        (
-            F.floor(
-                (F.col("rev") - F.col("rev_prev_year"))
-                / F.col("rev_prev_year").cast("double")
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+        r6(
+            (F.col("rev") - F.col("rev_prev_year"))
+            / F.col("rev_prev_year").cast("double")
         ).alias("yoy_growth"),
     ).orderBy("m")
 
@@ -2917,12 +2857,7 @@ def agg_new_vs_repeat_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             new_c.alias("new_cents"),
             rep_c.alias("repeat_cents"),
-            (
-                F.floor(
-                    new_c / F.sum("cents").cast("double") * 1e6 + F.lit(0.5)
-                )
-                / 1e6
-            ).alias("new_share"),
+            r6(new_c / F.sum("cents").cast("double")).alias("new_share"),
         )
         .orderBy("m")
     )
@@ -3002,7 +2937,7 @@ def win_rolling_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return framed.select(
         F.date_format("day", "yyyy-MM-dd").alias("day"),
-        (F.floor(num / den * 1e6 + F.lit(0.5)) / 1e6).alias("roll_corr_7d"),
+        r6(num / den).alias("roll_corr_7d"),
     ).orderBy("day")
 
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.det import r6, split_bucket
 from ..functions.scalar import empty_to_null
 from ..functions.text import (
     LANG_MARKERS,
@@ -291,14 +292,9 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "tok",
             "tf",
-            (
-                F.floor(
-                    F.col("tf")
-                    * (F.log((F.col("n") + F.lit(1.0)) / (F.col("df") + F.lit(1.0))) + F.lit(1.0))
-                    * F.lit(1000000.0)
-                    + F.lit(0.5)
-                )
-                / F.lit(1000000.0)
+            r6(
+                F.col("tf")
+                * (F.log((F.col("n") + F.lit(1.0)) / (F.col("df") + F.lit(1.0))) + F.lit(1.0))
             ).alias("tfidf"),
         )
     )
@@ -330,9 +326,7 @@ def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental appends (a doc's split never changes). The salt isolates
     this split from any other hash use of doc_id."""
     docs = read_table(spark, sf_dir, "documents")
-    h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":split")))
-    nib = lambda j: F.instr(F.lit("0123456789abcdef"), F.substring(h, j, 1)) - 1  # noqa: E731
-    bucket = (nib(1) * 16 + nib(2)) % 100
+    bucket = split_bucket()
     return docs.select(
         "doc_id",
         F.when(bucket < 80, "train").when(bucket < 90, "valid").otherwise("test").alias("split"),

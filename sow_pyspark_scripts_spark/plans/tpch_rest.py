@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..registry import query
 from ..sources import read_table
 
@@ -353,10 +354,7 @@ def subq_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").alias("ps_partkey"),
         F.col("l_suppkey").alias("ps_suppkey"),
     ).agg(
-        (
-            F.floor(F.min(F.col("l_extendedprice") / F.col("l_quantity")) * 1e6 + 0.5)
-            / 1e6
-        ).alias("ps_unitcost")
+        r6(F.min(F.col("l_extendedprice") / F.col("l_quantity"))).alias("ps_unitcost")
     )
     eu = (
         ps.join(F.broadcast(supp), F.col("s_suppkey") == F.col("ps_suppkey"))

@@ -22,16 +22,12 @@ can never flip row membership (see operators/similarity.py note).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.det import r6
 from ..registry import query
 from ..sources import read_table
-
-
-def _round6(c: Column) -> Column:
-    """Half-up 6dp rounding, bit-identical to DuckDB floor(x*1e6+0.5)/1e6."""
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
 _R6 = "floor(({}) * 1e6 + 0.5) / 1e6"
@@ -63,7 +59,7 @@ def subq_scalar_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
     part = read_table(spark, sf_dir, "part")
     thresh = li.groupBy("l_partkey").agg(
-        _round6(F.avg("l_quantity") * 0.5).alias("qty_thresh")
+        r6(F.avg("l_quantity") * 0.5).alias("qty_thresh")
     )
     return (
         li.join(thresh, "l_partkey")
@@ -145,7 +141,7 @@ def subq_antijoin_topbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = read_table(spark, sf_dir, "customer")
     orders = read_table(spark, sf_dir, "orders")
     avg_bal = cust.where(F.col("c_acctbal") > 0).agg(
-        _round6(F.avg("c_acctbal")).alias("bal_thresh")
+        r6(F.avg("c_acctbal")).alias("bal_thresh")
     )
     return (
         cust.crossJoin(F.broadcast(avg_bal))
@@ -410,7 +406,7 @@ def agg_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.agg(
         F.round(F.sum(promo), 2).cast("double").alias("promo_revenue"),
         F.round(F.sum(dec_rev), 2).cast("double").alias("total_revenue"),
-        _round6(
+        r6(
             F.sum(promo).cast("double") / F.sum(dec_rev).cast("double") * 100
         ).alias("promo_pct"),
     )

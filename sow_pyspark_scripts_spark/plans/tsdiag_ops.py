@@ -34,6 +34,7 @@ Scale notes baked into each builder:
 
 from __future__ import annotations
 
+from ..functions.det import r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -44,10 +45,6 @@ from ..sources import read_table
 
 _LAGS = (1, 2, 3, 4, 5, 6, 7)
 _MARKOV_ITERS = 12
-
-
-def _q6(c):
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
 # ---------------------------------------------------------------------------
@@ -153,9 +150,9 @@ def stats_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return s.select(
         F.col("n").alias("n_days"),
-        _q6(rho(1)).alias("rho_1"),
-        _q6(rho(7)).alias("rho_7"),
-        _q6(q).alias("q_stat"),
+        r6(rho(1)).alias("rho_1"),
+        r6(rho(7)).alias("rho_7"),
+        r6(q).alias("q_stat"),
     )
 
 
@@ -251,8 +248,8 @@ def stats_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shares.select(
         "pattern",
         "cnt",
-        _q6(sh).alias("share"),
-        _q6(
+        r6(sh).alias("share"),
+        r6(
             F.sum(-sh * F.log2(sh)).over(wall) / F.log2(F.lit(6.0))
         ).alias("h_norm"),
     )
@@ -361,6 +358,6 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pi.join(F.broadcast(er)).select(
         F.col("st").alias("state"),
-        _q6(F.col("pi")).alias("pi"),
-        _q6(F.col("entropy_rate")).alias("entropy_rate"),
+        r6(F.col("pi")).alias("pi"),
+        r6(F.col("entropy_rate")).alias("entropy_rate"),
     )

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.det import cos_grid_sql, d2_grid_sql, mean_grid_sql
+from ..functions.det import cos_grid_sql, d2_grid_sql, mean_grid_sql, r6
 from ..registry import query
 
 _M6V = mean_grid_sql("v")
@@ -418,5 +418,5 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n1",
         "n2",
         "r",
-        (F.floor((r - er) / F.sqrt(vr) * 1e6 + F.lit(0.5)) / 1e6).alias("z"),
+        r6((r - er) / F.sqrt(vr)).alias("z"),
     )

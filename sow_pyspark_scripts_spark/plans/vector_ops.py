@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.sketch import approx_pctl, approx_pctls
-from ..functions.det import mean_grid, mean_grid_sql
+from ..functions.det import mean_grid, mean_grid_sql, r6
 from ..registry import query
 from ..sources import read_table
 
@@ -365,7 +365,6 @@ def text_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.log((F.col("c") + 1.0) / (F.col("big_n") + F.col("vocab") + 1.0))
         ).alias("ll"),
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return scored.select(
         "n_tokens",
         "n_oov",
@@ -615,9 +614,7 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = within.agg(
         F.sum("t_u").alias("t_total_u"), F.sum(tb_u).alias("t_between_u")
     )
-    r6u = lambda c: (  # noqa: E731
-        F.floor(c.cast("double") / F.lit(1e12) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-    )
+    r6u = lambda c: r6(c.cast("double") / F.lit(1e12))  # noqa: E731
     return parts.select(
         r6u(F.col("t_total_u")).alias("theil_total"),
         r6u(F.col("t_between_u")).alias("theil_between"),
@@ -672,7 +669,6 @@ def stats_beta_binomial(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean = a / (a + b)
     sd = F.sqrt(a * b / ((a + b) * (a + b) * (a + b + 1)))
     z = F.lit(1.959963984540054)
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     return d.select(
         "day", "n", "k",
         r6(mean).alias("posterior_mean"),
@@ -820,7 +816,6 @@ def ml_best_threshold_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
         score.alias("score"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
     )
-    r6 = lambda c: F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)  # noqa: E731
     deciles = [k / 10.0 for k in range(1, 10)]
     # ONE sketch queried at all 9 ranks (r9, functions/sketch.approx_pctls)
     b = base.agg(F.transform(approx_pctls("score", tuple(deciles)), r6).alias("bl"))
@@ -1059,11 +1054,5 @@ def corpus_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_shingles",
         "n_novel",
-        (
-            F.floor(
-                F.col("n_novel").cast("double") / F.col("n_shingles") * F.lit(1e6)
-                + F.lit(0.5)
-            )
-            / F.lit(1e6)
-        ).alias("novelty_rate"),
+        r6(F.col("n_novel").cast("double") / F.col("n_shingles")).alias("novelty_rate"),
     )

@@ -18,9 +18,10 @@ both; PageRank emits 6dp half-up-rounded scores.
 
 from __future__ import annotations
 
+from ..functions.det import r6
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
@@ -28,10 +29,6 @@ from ..sources import read_table
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
-
-
-def _round6(c: Column) -> Column:
-    return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
 
 
 @query(
@@ -353,7 +350,7 @@ def graph_pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.concat(F.lit("c"), ((F.col("node") - 1) / 2).cast("long")))
         .alias("node"),
-        _round6(F.col("pr")).alias("pagerank"),
+        r6(F.col("pr")).alias("pagerank"),
     )
 
 
@@ -449,7 +446,7 @@ def feature_scale_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.when(F.col("vmax") == F.col("vmin"), F.lit(0.0))
             .otherwise(
-                _round6((F.col("value") - F.col("vmin")) / (F.col("vmax") - F.col("vmin")))
+                r6((F.col("value") - F.col("vmin")) / (F.col("vmax") - F.col("vmin")))
             )
             .alias("value_scaled"),
         )
@@ -561,7 +558,7 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cur",
             "nxt",
             "n",
-            _round6(F.col("n").cast("double") / F.col("tot")).alias("p"),
+            r6(F.col("n").cast("double") / F.col("tot")).alias("p"),
         )
     )
 
@@ -605,7 +602,7 @@ def feature_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_id",
             "event_type",
-            _round6(clamped).alias("value_w"),
+            r6(clamped).alias("value_w"),
             ((F.col("value") < F.col("p05")) | (F.col("value") > F.col("p95"))).alias(
                 "clipped"
             ),

@@ -74,6 +74,30 @@ def test_pin_eager_materializes(spark):
     release_pins(spark)
 
 
+def test_connected_components_releases_each_round_in_persist_mode(spark):
+    """Each propagation round pins its labels; the round after must free
+    them. On a path graph the label of vertex 0 moves one hop per round,
+    so 6 vertices take 6 rounds and a leak leaves ~6 cached frames.
+    The path is short because persist mode keeps lineage: the logical
+    plan doubles every round, and past ~7 rounds planning alone runs a
+    1 GB heap out of memory."""
+    from sow_pyspark_scripts_spark.operators.graph import connected_components
+
+    _with_mode(spark, "persist")
+    n = 6
+    vertices = spark.range(n).select(F.col("id").alias("doc_id"))
+    edges = spark.range(n - 1).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    start = cached().size()
+    out = connected_components(vertices, edges)
+    assert cached().size() - start <= 1  # only the final round's labels
+    assert sorted(map(tuple, out.collect())) == [(i, 0) for i in range(n)]
+    release_pins(spark)
+    assert cached().size() <= start
+
+
 def test_full_query_identical_under_persist_mode(spark):
     """A real registered query (semdedup — multiple pins inside) returns
     identical rows in persist mode as in the default mode."""

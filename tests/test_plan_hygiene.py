@@ -79,6 +79,59 @@ def test_no_exact_percentile_on_continuous_columns():
     )
 
 
+def test_no_hand_written_6dp_rounding():
+    """The 6-dp rounding rule floor(x*1e6 + 0.5) has one Column-API
+    spelling, functions.det.r6 / quant; a copy in plans/ or operators/
+    could drift from the oracles' SQL. Parsed, not grepped, so a copy
+    split over several lines is caught too."""
+    import ast
+    import pathlib
+
+    import sow_pyspark_scripts_spark as pkg
+
+    def num(node, value):
+        if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "lit":
+            node = node.args[0] if len(node.args) == 1 else None
+        return (
+            isinstance(node, ast.Constant)
+            and type(node.value) in (int, float)
+            and node.value == value
+        )
+
+    def is_rule(arg):
+        if not (isinstance(arg, ast.BinOp) and isinstance(arg.op, ast.Add)):
+            return False
+        for scaled, half in ((arg.left, arg.right), (arg.right, arg.left)):
+            if (
+                num(half, 0.5)
+                and isinstance(scaled, ast.BinOp)
+                and isinstance(scaled.op, ast.Mult)
+                and (num(scaled.left, 1e6) or num(scaled.right, 1e6))
+            ):
+                return True
+        return False
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for sub in ("plans", "operators"):
+        for py in sorted((root / sub).rglob("*.py")):
+            for node in ast.walk(ast.parse(py.read_text())):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "floor"
+                    and isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == "F"
+                    and len(node.args) == 1
+                    and is_rule(node.args[0])
+                ):
+                    offenders.append(f"{sub}/{py.name}:{node.lineno}")
+    assert not offenders, (
+        "hand-written 6-dp rounding (use functions.det.r6 or quant):\n"
+        + "\n".join(offenders)
+    )
+
+
 def test_pctl_exact_acc_covers_every_fixture_relation():
     """ADVICE r7: PCTL_EXACT_ACC guarantees oracle-exactness only while
     accuracy >= 2x the largest oracle-compared relation (rank error

@@ -164,30 +164,3 @@ def test_queries_survive_empty_input(spark, tmp_path_factory):
         "flagship_incident_etl",
     ]:
         assert queries[name](spark, str(base)).count() == 0, name
-
-
-def test_observation_metrics_match_aggregate(spark):
-    """Observation API surface: metrics observed inline during an action
-    (zero extra pass — piggybacked on the job) must equal a separate
-    aggregate. This is how production writes audit row counts and sums
-    without re-scanning the output."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    from sow_pyspark_scripts_spark.sources import read_table
-    from .conftest import SF_DIR
-
-    li = read_table(spark, SF_DIR, "lineitem")
-    obs = Observation("audit")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    observed = li.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.sum(cents).alias("cents"),
-    )
-    observed.write.format("noop").mode("overwrite").save()
-    direct = li.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(cents).alias("cents")
-    ).collect()[0]
-    assert obs.get["n"] == direct["n"]
-    assert obs.get["cents"] == direct["cents"]

@@ -39,31 +39,10 @@ sys.path.insert(0, str(REPO))
 
 
 def canary() -> dict:
-    """Fixed-work GEMM probe (bench.py's host-throttle canary)."""
-    import concurrent.futures as cf
-    import time as t
+    """bench.py's host-throttle canary (fixed-work GEMM probe)."""
+    import bench
 
-    import numpy as np
-
-    a = np.ones((512, 512), dtype=np.float64) * 1.000001
-
-    def unit(_=None, reps=40):
-        x = a
-        for _i in range(reps):
-            x = x @ a * 1e-3
-        return float(x[0, 0])
-
-    unit(reps=5)
-    t0 = t.perf_counter()
-    unit()
-    single = t.perf_counter() - t0
-    t0 = t.perf_counter()
-    with cf.ThreadPoolExecutor(max_workers=16) as ex:
-        list(ex.map(unit, range(16)))
-    return {
-        "gemm_1t_sec": round(single, 3),
-        "gemm_16t_sec": round(t.perf_counter() - t0, 3),
-    }
+    return bench._cpu_microbench()
 
 
 def run_one(spark, qs, name, sf_dir):

@@ -226,37 +226,13 @@ def main() -> None:
     names = args.queries.split(",") if args.queries else QUERIES
     results = {}
 
-    def canary() -> dict:
-        """Fixed-work GEMM probe (bench.py's host-throttle canary).
-        Round 7 finding: the host throttles under SUSTAINED load and
-        recovers at idle, so bracketing canaries read healthy while
-        mid-battery entries inflate 10-50x (measured: embedding_pq_encode
-        162.7s in-battery vs 6.8-19.8s isolated same boot). Interleaving
-        the probe every few queries makes each row attributable."""
-        import concurrent.futures as cf
-        import time as t
-
-        import numpy as np
-
-        a = np.ones((512, 512), dtype=np.float64) * 1.000001
-
-        def unit(_=None, reps=40):
-            x = a
-            for _i in range(reps):
-                x = x @ a * 1e-3
-            return float(x[0, 0])
-
-        unit(reps=5)
-        t0 = t.perf_counter()
-        unit()
-        single = t.perf_counter() - t0
-        t0 = t.perf_counter()
-        with cf.ThreadPoolExecutor(max_workers=16) as ex:
-            list(ex.map(unit, range(16)))
-        return {
-            "gemm_1t_sec": round(single, 3),
-            "gemm_16t_sec": round(t.perf_counter() - t0, 3),
-        }
+    # bench.py's host-throttle canary, interleaved every few queries.
+    # Round 7 finding: the host throttles under SUSTAINED load and
+    # recovers at idle, so bracketing canaries read healthy while
+    # mid-battery entries inflate 10-50x (measured: embedding_pq_encode
+    # 162.7s in-battery vs 6.8-19.8s isolated same boot). Interleaving
+    # the probe makes each row attributable.
+    from bench import _cpu_microbench as canary
 
     print(json.dumps({"canary": canary(), "at": "pre"}))
     for i, name in enumerate(names):
