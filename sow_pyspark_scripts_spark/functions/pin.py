@@ -14,7 +14,8 @@ plan decision (ADVICE r4 #2):
   queries in one session (the r3 ADVICE that moved the repo off
   ``persist()``).
 - ``persist`` — MEMORY_AND_DISK cache with lineage kept: a lost block
-  recomputes. The multi-executor production mode. Pinned frames are
+  recomputes. The multi-executor production mode. ``pin_eager`` still
+  cuts the logical plan here (see its docstring). Pinned frames are
   tracked per-session; call :func:`release_pins` when the query's
   results are consumed (bench.py does this per query) so the
   CacheManager never accumulates.
@@ -59,6 +60,11 @@ def _pin(df: DataFrame, eager: bool) -> DataFrame:
     if mode == "persist":
         from pyspark import StorageLevel
 
+        if eager:
+            # re-root on the frame's own RDD: the logical plan becomes a
+            # LogicalRDD leaf, the RDD keeps its lineage for recompute
+            jdf = spark._jsparkSession.createDataFrame(df._jdf.javaRDD(), df._jdf.schema())
+            df = DataFrame(jdf, spark)
         out = df.persist(StorageLevel.MEMORY_AND_DISK)
         _PINNED.setdefault(_session_key(spark), []).append(out)
         if eager:
@@ -84,7 +90,17 @@ def pin(df: DataFrame) -> DataFrame:
 def pin_eager(df: DataFrame) -> DataFrame:
     """Eager barrier (materializes now) — ``df.transform(pin_eager)``.
     Used where the caller frees an upstream resource (a shard
-    broadcast) immediately after."""
+    broadcast) immediately after, and by iterative operators whose
+    next round must start from a bounded plan.
+
+    Every mode cuts the LOGICAL plan: in ``persist`` mode the output is
+    rebuilt as ``createDataFrame(rdd, schema)`` on the JVM side, so its
+    plan is a ``LogicalRDD`` leaf (as ``localCheckpoint`` and
+    ``checkpoint`` give), then persisted and tracked for
+    :func:`release_pins`. Unlike the checkpoint modes the RDD keeps its
+    lineage, so a lost block recomputes. Without the cut, a loop that
+    reads its previous output more than once per round grows its plan
+    geometrically."""
     return _pin(df, eager=True)
 
 

@@ -56,7 +56,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.det import d2_grid_sql, d2r6_grid_sql, quant, r6
+from ..functions.det import d2_grid_sql, d2r6_grid_sql, r6
 from ..functions.vectors import d2r6_grid
 from ..registry import query
 from ..sources import read_table
@@ -71,6 +71,7 @@ from .pq_common import (
     _PQ_REFINE_ORACLE,
     _PQ_REFINE_R,
     _PQ_TOPK_ORACLE,
+    _ivf_residuals,
     _ivfadc_d2,
     _ivfadc_residuals,
     _ivfadc_subvecs,
@@ -606,24 +607,8 @@ def similarity_topk_ivfadc_stored(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = read_table(spark, sf_dir, "embeddings")
     ivf = spark.read.parquet(os.path.join(idx, "ivf_cells.parquet"))
     cents = spark.read.parquet(os.path.join(idx, "ivf_centroids.parquet"))
-    cq = cents.select(
-        F.col("cent_id").alias("ivf_cell"),
-        F.transform("centroid", lambda c: quant(c)).alias("c6"),
-    )
-    q_resid = (
-        emb.where(F.col("vec_id") < 20)
-        .select(
-            "vec_id",
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda v: quant(v),
-            ).alias("x6"),
-        )
-        .join(ivf.where(F.col("vec_id") < 20), "vec_id")
-        .join(F.broadcast(cq), "ivf_cell")
-        .select(
-            "vec_id", "ivf_cell", F.zip_with("x6", "c6", lambda a, b: a - b).alias("r6")
-        )
+    q_resid = _ivf_residuals(
+        emb.where(F.col("vec_id") < 20), ivf.where(F.col("vec_id") < 20), cents
     )
     rcw = spark.read.parquet(os.path.join(idx, "ivfadc_codebook.parquet"))
     lut = (
@@ -685,26 +670,11 @@ def similarity_topk_ivfadc_multiprobe_stored(spark: SparkSession, sf_dir: str) -
     probes = probes_from_centroids(
         emb.where(F.col("vec_id") < 20), cents, nprobe=2
     )
-    cq = cents.select(
-        F.col("cent_id").alias("probe_cell"),
-        F.transform("centroid", lambda c: quant(c)).alias("c6"),
-    )
-    q_resid = (
-        emb.where(F.col("vec_id") < 20)
-        .select(
-            "vec_id",
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda v: quant(v),
-            ).alias("x6"),
-        )
-        .join(probes.select("vec_id", F.col("cell").alias("probe_cell")), "vec_id")
-        .join(F.broadcast(cq), "probe_cell")
-        .select(
-            "vec_id",
-            F.col("probe_cell").alias("ivf_cell"),
-            F.zip_with("x6", "c6", lambda a, b: a - b).alias("r6"),
-        )
+    q_resid = _ivf_residuals(
+        emb.where(F.col("vec_id") < 20),
+        probes.select("vec_id", F.col("cell").alias("probe_cell")),
+        cents,
+        cell="probe_cell",
     )
     rcw = spark.read.parquet(os.path.join(idx, "ivfadc_codebook.parquet"))
     lut = (

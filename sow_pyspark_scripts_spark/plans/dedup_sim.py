@@ -49,6 +49,7 @@ from ..registry import query
 from ..sources import read_table, spread
 from .sql_common import (  # noqa: F401 — re-exported for compat
     _EXACT_SIM_CTE,
+    DEDUP_CLUSTERS_ORACLE,
     SHINGLES_CTE,
     _minhash_incr_sql,
     _minhash_sql,
@@ -513,39 +514,10 @@ def corpus_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- dedup clustering (transitive closure) ----------------------------------
 
 
-@query(
-    "dedup_clusters",
-    f"""
-    WITH RECURSIVE {_SHINGLES_CTE},
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT doc_a, doc_b
-      FROM inter
-      JOIN sizes sa ON inter.doc_a = sa.doc_id
-      JOIN sizes sb ON inter.doc_b = sb.doc_id
-      WHERE floor(CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 >= 0.5
-    ),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION
-      SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ),
-    reach(v, lbl) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.v
-    )
-    SELECT v AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY v
-    """,
-)
+@query("dedup_clusters", DEDUP_CLUSTERS_ORACLE)
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive dedup clustering: 3-gram Jaccard >= 0.5 pairs as edges,
-    connected components via min-label propagation (operators/graph.py)
+    connected components via pointer jumping (operators/graph.py)
     so A~B~C collapses to ONE group even when A!~C. cluster_id = min
     doc_id of the component; singletons keep their own id. Oracle is a
     recursive CTE computing the same min-reachable-label."""
@@ -886,8 +858,8 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     longest/most complete variant of the duplicated content (the
     canonical example: a truncated mirror vs the full page).
 
-    Plan: the component labels come from the same iterative
-    min-label-propagation operator; quality is one codegen expression
+    Plan: the component labels come from the same pointer-jumping
+    connected-components operator; quality is one codegen expression
     per doc; the keeper is a per-cluster window rank (sizes are cluster-
     bounded). Swapping the policy touches ONLY the ORDER BY — the
     cluster machinery is shared, which is the point of keeping
@@ -940,7 +912,7 @@ def corpus_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count + count_distinct in a single aggregate), and all five
     numbers return as one plan (three 1-row aggregates broadcast-
     crossed), so the only driver-side actions left are the bounded
-    label-propagation rounds inside connected_components. Measured at
+    pointer-jumping rounds inside connected_components. Measured at
     sf0.1: 9.0s -> 4.3s with identical output."""
     docs = read_table(spark, sf_dir, "documents")
     near = (

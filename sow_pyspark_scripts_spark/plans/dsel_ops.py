@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from ..functions.vectors import d2r6_grid
 from ..registry import query
 from ..sources import read_table
-from ..functions.det import d2r6_grid_sql, quant, r6
+from ..functions.det import d2r6_grid_sql, r6
 from .pq_common import (  # noqa: F401 — re-exported for ann_index compat
     _IVFADC_MP_ORACLE,
     _IVFADC_ORACLE,
@@ -65,6 +65,7 @@ from .pq_common import (  # noqa: F401 — re-exported for ann_index compat
     _PQ_REFINE_R,
     _PQ_SUB,
     _PQ_TOPK_ORACLE,
+    _ivf_residuals,
     _ivfadc_d2,
     _ivfadc_residuals,
     _ivfadc_subvecs,
@@ -869,31 +870,13 @@ def similarity_topk_ivfadc_multiprobe(spark: SparkSession, sf_dir: str) -> DataF
         .select("sub", "cell", F.col("pc.c").alias("cw6"))
     )
     centroids, probes = ivf_cells_multi(emb, nprobe=2)
-    cq = centroids.select(
-        F.col("cent_id").alias("probe_cell"),
-        F.transform("centroid", lambda c: quant(c)).alias("c6"),
-    )
-    q_resid = (
-        emb.where(F.col("vec_id") < 20)
-        .select(
-            "vec_id",
-            F.transform(
-                F.col("embedding").cast("array<double>"),
-                lambda v: quant(v),
-            ).alias("x6"),
-        )
-        .join(
-            probes.where(F.col("vec_id") < 20).select(
-                "vec_id", F.col("cell").alias("probe_cell")
-            ),
-            "vec_id",
-        )
-        .join(F.broadcast(cq), "probe_cell")
-        .select(
-            "vec_id",
-            F.col("probe_cell").alias("ivf_cell"),
-            F.zip_with("x6", "c6", lambda a, b: a - b).alias("r6"),
-        )
+    q_resid = _ivf_residuals(
+        emb.where(F.col("vec_id") < 20),
+        probes.where(F.col("vec_id") < 20).select(
+            "vec_id", F.col("cell").alias("probe_cell")
+        ),
+        centroids,
+        cell="probe_cell",
     )
     lut = (
         _ivfadc_subvecs(q_resid)

@@ -184,11 +184,13 @@ def sink_manifest_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matched against the source table, proving the round trip is
     lossless; `test_manifest_publish_idempotent_and_exact` asserts
     stale extra files in the directory are ignored and re-publish is
-    idempotent. At 100 TB the manifest also carries min/max zone maps
-    per file for skipping.
+    idempotent. Each publish keeps its own and the previous data
+    directory and deletes older ones. At 100 TB the manifest also
+    carries min/max zone maps per file for skipping.
     """
     import json
     import os
+    import shutil
     import tempfile
 
     src = read_table(spark, sf_dir, "orders").select(
@@ -229,6 +231,12 @@ def sink_manifest_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(tmp_manifest, "w") as fh:
         json.dump(manifest, fh)
     os.replace(tmp_manifest, mpath)  # the atomic commit point
+    # prune superseded snapshots; the previous one stays so readers
+    # still holding the old manifest keep their files
+    for d in os.listdir(base):
+        v = d[len("data-v"):]
+        if d.startswith("data-v") and v.isdigit() and int(v) < version - 1:
+            shutil.rmtree(os.path.join(base, d), ignore_errors=True)
     committed = json.load(open(mpath))
     return spark.read.parquet(*committed["files"])
 

@@ -405,22 +405,20 @@ SELECT qid, cid, adc_d2, CAST(rnk AS BIGINT) AS rank FROM (
 """
 
 
-def _ivfadc_residuals(spark: SparkSession, sf_dir: str, coarse=None):
+def _ivf_residuals(
+    emb: DataFrame, cells: DataFrame, centroids: DataFrame, cell: str = "ivf_cell"
+) -> DataFrame:
     """(vec_id, ivf_cell, r6): per-vector integer residual array on the
     1e-6 grid — x and its assigned coarse centroid are both quantized
     BEFORE subtracting, so every downstream statistic is exact integer
-    arithmetic. The centroid table broadcasts (KB); the residual is one
-    zip_with over the scan, no per-dimension rows. Pass ``coarse`` =
-    (centroids, cells) to reuse an assignment already computed — the
-    numpy coarse kernel is the dominant cost at 500k+ vectors and the
-    index build needs the same relation twice."""
-    from ..operators.similarity import ivf_cells
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    centroids, icells = coarse if coarse is not None else ivf_cells(emb)
-    ivf = icells.select("vec_id", F.col("cell").alias("ivf_cell"))
+    arithmetic. ``emb`` is (vec_id, embedding), ``cells`` the
+    assignment (vec_id, ``cell``) — one row per probed cell for
+    multi-probe, whose callers name the column ``probe_cell`` — and
+    ``centroids`` (cent_id, centroid). The centroid table broadcasts
+    (KB); the residual is one zip_with over the scan, no per-dimension
+    rows."""
     cq = centroids.select(
-        F.col("cent_id").alias("ivf_cell"),
+        F.col("cent_id").alias(cell),
         F.transform("centroid", lambda c: quant(c)).alias("c6"),
     )
     xq = emb.select(
@@ -431,14 +429,28 @@ def _ivfadc_residuals(spark: SparkSession, sf_dir: str, coarse=None):
         ).alias("x6"),
     )
     return (
-        xq.join(ivf, "vec_id")
-        .join(F.broadcast(cq), "ivf_cell")
+        xq.join(cells, "vec_id")
+        .join(F.broadcast(cq), cell)
         .select(
             "vec_id",
-            "ivf_cell",
+            F.col(cell).alias("ivf_cell"),
             F.zip_with("x6", "c6", lambda a, b: a - b).alias("r6"),
         )
     )
+
+
+def _ivfadc_residuals(spark: SparkSession, sf_dir: str, coarse=None):
+    """`_ivf_residuals` of the whole corpus against its coarse
+    assignment. Pass ``coarse`` = (centroids, cells) to reuse an
+    assignment already computed — the numpy coarse kernel is the
+    dominant cost at 500k+ vectors and the index build needs the same
+    relation twice."""
+    from ..operators.similarity import ivf_cells
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    centroids, icells = coarse if coarse is not None else ivf_cells(emb)
+    ivf = icells.select("vec_id", F.col("cell").alias("ivf_cell"))
+    return _ivf_residuals(emb, ivf, centroids)
 
 
 def _ivfadc_subvecs(resid: DataFrame) -> DataFrame:

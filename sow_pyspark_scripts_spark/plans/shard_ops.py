@@ -1,17 +1,12 @@
-"""Shard / scale-algorithm tier: the log-round connected-components
-upgrade (pointer jumping), per-row linear-model explanations, and
-byte-targeted shard packing for training-data export.
+"""Shard / scale-algorithm tier: connected components under its graph
+name, per-row linear-model explanations, and byte-targeted shard
+packing for training-data export.
 
 Scale notes baked into each builder:
-- pointer-jumping CC replaces min-label flooding: after seeding each
-  vertex with the min of its 1-hop neighborhood, each round rewrites
-  label(v) <- min(label(v), label(label(v))) by joining the label
-  table to itself on the label — reach DOUBLES per round (1 -> 2 ->
-  4 -> 8 hops), so chains that take diameter rounds to flood converge
-  in O(log diameter) joins. Labels localCheckpoint between rounds
-  (the `embedding_pca_power_iter` lineage discipline). A property
-  test asserts exact equality with the flooding implementation
-  (`dedup_clusters`);
+- connected components is the one pointer-jumping operator
+  (`operators/graph.connected_components`): each round a hop (1-hop
+  min label) plus a jump (the label of that label), run to a fixpoint
+  over a plan cut every round — O(log diameter) rounds on a chain;
 - linear SHAP is pure arithmetic once the two-feature OLS closed form
   is in hand: coefficients come from ONE exact co-moment pass
   (bigint sums), and each row's contributions are b_j·(x_j - mean_j)
@@ -27,119 +22,28 @@ Scale notes baked into each builder:
 
 from __future__ import annotations
 
-from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
-from .sql_common import SHINGLES_CTE as _SHINGLES_CTE
+from .sql_common import DEDUP_CLUSTERS_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# graph_cc_pointer_jumping — O(log d) connected components
+# graph_cc_pointer_jumping — connected components under the graph name
 # ---------------------------------------------------------------------------
 
-_CCPJ_ORACLE = f"""
-WITH RECURSIVE {_SHINGLES_CTE},
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM inter
-  JOIN sizes sa ON inter.doc_a = sa.doc_id
-  JOIN sizes sb ON inter.doc_b = sb.doc_id
-  WHERE floor(CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 >= 0.5
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-reach(v, lbl) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.v
-)
-SELECT v AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY v
-"""
 
-
-@query("graph_cc_pointer_jumping", _CCPJ_ORACLE)
+@query("graph_cc_pointer_jumping", DEDUP_CLUSTERS_ORACLE)
 def graph_cc_pointer_jumping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components by pointer jumping — the O(log diameter)
-    upgrade of `dedup_clusters`' min-label flooding. Flooding moves a
-    component's min label ONE hop per round, so a w-long near-dup
-    chain (common in scraped corpora: A~B~C~…) costs w fact-scale
-    iterations; pointer jumping seeds label(v) with the 1-hop min and
-    then rewrites label(v) <- min(label(v), label(label(v))) each
-    round — a self-join of the (vertex, label) table on the label —
-    doubling reach per round: 3 jumps cover diameter 8, 10 cover
-    1024. Same edge derivation as `dedup_clusters` (3-gram Jaccard >=
-    0.5) and EXACTLY the same output (oracle: the recursive
-    min-reachable CTE; a property test also pins equality against the
-    flooding operator). Labels localCheckpoint between rounds so each
-    join reads a materialized table, not a growing lineage.
-    """
-    from ..operators.dedup import jaccard_pairs, word_shingles
+    """Connected components of the 3-gram Jaccard >= 0.5 document graph:
+    the `dedup_clusters` relation (same edges, same pointer-jumping
+    operator, same recursive min-reachable-label oracle), registered
+    under the graph-algorithm name."""
+    from .dedup_sim import dedup_clusters
 
-    docs = read_table(spark, sf_dir, "documents")
-    pairs = jaccard_pairs(word_shingles(docs), 0.5).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    sym = pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    nbr_min = sym.groupBy("src").agg(F.min("dst").alias("m"))
-    labels = (
-        docs.select(F.col("doc_id").alias("v"))
-        .join(nbr_min, F.col("v") == F.col("src"), "left")
-        .select(
-            "v",
-            F.least(F.col("v"), F.coalesce(F.col("m"), F.col("v"))).alias(
-                "lbl"
-            ),
-        )
-        .transform(_pin_lazy)
-    )
-    # adjacency min per vertex (1-hop min including self, fixed table)
-    adj = sym.transform(_pin_lazy)
-    for _ in range(3):
-        # hop step: min label among neighbors' labels
-        nbr_lbl = (
-            adj.join(labels, F.col("dst") == F.col("v"))
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nl"))
-        )
-        hopped = (
-            labels.join(nbr_lbl, F.col("v") == F.col("src"), "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nl"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-        )
-        # jump step: label(v) <- min(label(v), label(label(v)))
-        parent = hopped.select(
-            F.col("v").alias("pv"), F.col("lbl").alias("plbl")
-        )
-        labels = (
-            hopped.join(parent, hopped.lbl == parent.pv, "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("plbl"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .transform(_pin_lazy)
-        )
-    return labels.select(F.col("v").alias("doc_id"), F.col("lbl").alias("cluster_id"))
+    return dedup_clusters(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,37 @@ sh AS (
 """
 
 
+# Min-reachable-label connected components over the 3-gram Jaccard >= 0.5
+# graph — the oracle of `dedup_clusters` and `graph_cc_pointer_jumping`.
+DEDUP_CLUSTERS_ORACLE = f"""
+    WITH RECURSIVE {SHINGLES_CTE},
+    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    inter AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
+      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    ),
+    pairs AS (
+      SELECT doc_a, doc_b
+      FROM inter
+      JOIN sizes sa ON inter.doc_a = sa.doc_id
+      JOIN sizes sb ON inter.doc_b = sb.doc_id
+      WHERE floor(CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 >= 0.5
+    ),
+    edges AS (
+      SELECT doc_a AS src, doc_b AS dst FROM pairs
+      UNION
+      SELECT doc_b AS src, doc_a AS dst FROM pairs
+    ),
+    reach(v, lbl) AS (
+      SELECT doc_id, doc_id FROM documents
+      UNION
+      SELECT e.src, r.lbl FROM edges e JOIN reach r ON e.dst = r.v
+    )
+    SELECT v AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY v
+    """
+
+
 # MinHash / SRP / exact-similarity oracle fragments shared by the
 # dedup, similarity, stats and stored-index plan modules. Constants
 # come from the operator layer (leaf-safe: operators never import

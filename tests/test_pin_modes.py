@@ -74,28 +74,51 @@ def test_pin_eager_materializes(spark):
     release_pins(spark)
 
 
-def test_connected_components_releases_each_round_in_persist_mode(spark):
-    """Each propagation round pins its labels; the round after must free
-    them. On a path graph the label of vertex 0 moves one hop per round,
-    so 6 vertices take 6 rounds and a leak leaves ~6 cached frames.
-    The path is short because persist mode keeps lineage: the logical
-    plan doubles every round, and past ~7 rounds planning alone runs a
-    1 GB heap out of memory."""
-    from sow_pyspark_scripts_spark.operators.graph import connected_components
-
-    _with_mode(spark, "persist")
-    n = 6
+def _path(spark, n):
     vertices = spark.range(n).select(F.col("id").alias("doc_id"))
     edges = spark.range(n - 1).select(
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
+    return vertices, edges
+
+
+def test_connected_components_releases_each_round_in_persist_mode(spark):
+    """Each round pins its labels; the round after must free them, so
+    a 256-vertex path (9 rounds) leaves at most the final labels
+    cached. The result's logical plan stays bounded: cut every round,
+    it is no longer for 256 vertices than twice that for 16."""
+    from sow_pyspark_scripts_spark.operators.graph import connected_components
+
+    _with_mode(spark, "persist")
     cached = spark.sparkContext._jsc.getPersistentRDDs
     start = cached().size()
-    out = connected_components(vertices, edges)
+    small = connected_components(*_path(spark, 16))
+    small_plan = len(small._jdf.queryExecution().logical().toString())
+    release_pins(spark)
+    n = 256
+    out = connected_components(*_path(spark, n))
     assert cached().size() - start <= 1  # only the final round's labels
+    assert len(out._jdf.queryExecution().logical().toString()) <= 2 * small_plan
     assert sorted(map(tuple, out.collect())) == [(i, 0) for i in range(n)]
     release_pins(spark)
     assert cached().size() <= start
+
+
+def test_persist_mode_pin_eager_is_a_released_leaf(spark):
+    """A persist-mode eager pin re-roots the frame on its RDD (a leaf
+    logical plan, lineage kept in the RDD) and is still tracked and
+    freed by ``release_pins``."""
+    _with_mode(spark, "persist")
+    df = (
+        read_table(spark, SF_DIR, "nation")
+        .groupBy("n_regionkey")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .transform(pin_eager)
+    )
+    assert df._jdf.queryExecution().logical().children().isEmpty()
+    assert df.storageLevel.useMemory or df.storageLevel.useDisk
+    assert release_pins(spark) >= 1
+    assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
 
 
 def test_full_query_identical_under_persist_mode(spark):

@@ -9,13 +9,14 @@ Each property runs a handful of examples with one Spark job per example
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from sow_pyspark_scripts_spark.functions.text import normalize_text
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, assert_oracle_match
 from .test_normalize_fidelity import ref_normalize
 from sow_pyspark_scripts_spark.operators.relational import salted_join
 from sow_pyspark_scripts_spark.operators.temporal import asof_join
@@ -980,6 +981,27 @@ def test_manifest_publish_idempotent_and_exact(spark):
     assert first.exceptAll(second).count() == 0
 
 
+def test_manifest_publish_prunes_superseded_versions(spark, duck):
+    """Each publish writes a new data-vN directory; only the committed
+    and the previous version survive, and the read-back still matches
+    the source (the driver's oracle compare)."""
+    import glob
+    import os
+    import tempfile
+
+    from sow_pyspark_scripts_spark.plans.platform_ops import (
+        _MANIFEST_ORACLE,
+        sink_manifest_publish,
+    )
+
+    for _ in range(3):
+        out = sink_manifest_publish(spark, SF_DIR)
+    tag = SF_DIR.strip("/").replace("/", "_")
+    base = os.path.join(tempfile.gettempdir(), f"spark_manifest_pub_{tag}")
+    assert len(glob.glob(os.path.join(base, "data-v*"))) <= 2
+    assert_oracle_match(out, duck, _MANIFEST_ORACLE)
+
+
 def test_lsh_band_tuning_monotone_tradeoff(spark):
     """LSH S-curve coherence: more rows per band => higher threshold
     (more precise) and no more candidate pairs than a looser layout."""
@@ -1070,24 +1092,82 @@ def test_base62_codec_bijective(spark):
     assert len(set(codes)) == len(codes)
     assert all(len(c) == 6 for c in codes)
 
-def test_pointer_jumping_equals_flooding_cc(spark):
-    """Pointer-jumping CC must label every vertex identically to the
-    min-label flooding operator (same edges, same semantics)."""
-    import sow_pyspark_scripts_spark.registry  # noqa: F401
-    from sow_pyspark_scripts_spark.plans.dedup_sim import dedup_clusters
-    from sow_pyspark_scripts_spark.plans.shard_ops import (
-        graph_cc_pointer_jumping,
-    )
+def _union_find_labels(ids, edges):
+    """Reference connected components: union by smaller root, so every
+    root is its component's minimum id."""
+    parent = {v: v for v in ids}
 
-    flood = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup_clusters(spark, SF_DIR).collect()
-    }
-    jump = {
-        r["doc_id"]: r["cluster_id"]
-        for r in graph_cc_pointer_jumping(spark, SF_DIR).collect()
-    }
-    assert flood == jump
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in ids}
+
+
+def _cc_graph(kind):
+    import random
+
+    if kind == "path256":
+        return range(256), [(i, i + 1) for i in range(255)]
+    if kind == "star":
+        return range(41), [(40, i) for i in range(40)]
+    if kind == "clusters":
+        rng = random.Random(7)
+        ids, edges, nxt = [], [], 0
+        while nxt < 200:
+            size = rng.choice([1, 1, 2, 3, 5])
+            members = list(range(nxt, nxt + size))
+            rng.shuffle(members)
+            edges += [(members[i], members[rng.randrange(i)]) for i in range(1, size)]
+            ids += members
+            nxt += size
+        return ids, edges
+    if kind == "dup_selfloop":
+        edges = [(3, 1), (1, 3), (3, 1), (2, 2), (5, 4), (4, 4), (4, 5)]
+        return range(7), edges
+    assert kind == "empty"
+    return range(10), []
+
+
+@pytest.mark.parametrize("mode", ["localCheckpoint", "persist"])
+@pytest.mark.parametrize("kind", ["path256", "star", "clusters", "dup_selfloop", "empty"])
+def test_connected_components_matches_union_find(spark, mode, kind):
+    """The pointer-jumping operator returns the union-find labels in
+    both the lineage-truncating and the lineage-keeping pin mode —
+    including a path far deeper than any fixed round count covers and
+    an empty edge set (typed singleton labels)."""
+    from sow_pyspark_scripts_spark.functions.pin import release_pins
+    from sow_pyspark_scripts_spark.operators.graph import connected_components
+
+    ids, edges = _cc_graph(kind)
+    vertices = spark.createDataFrame([(v,) for v in ids], "doc_id long")
+    edge_df = spark.createDataFrame(edges, "src long, dst long")
+    spark.conf.set("spark.sowps.pinMode", mode)
+    try:
+        out = connected_components(vertices, edge_df)
+        got = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+        assert dict(out.dtypes) == {"doc_id": "bigint", "cluster_id": "bigint"}
+    finally:
+        spark.conf.set("spark.sowps.pinMode", "localCheckpoint")
+        release_pins(spark)
+    assert got == _union_find_labels(ids, edges)
+
+
+def test_connected_components_raises_at_round_cap(spark, monkeypatch):
+    """Running out of rounds is an error naming the cap, never a
+    silently partial labelling."""
+    from sow_pyspark_scripts_spark.operators import graph
+
+    monkeypatch.setattr(graph, "MAX_ITERATIONS", 3)
+    vertices = spark.range(64).select(F.col("id").alias("doc_id"))
+    edges = spark.range(63).select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
+    with pytest.raises(RuntimeError, match="after 3 rounds"):
+        graph.connected_components(vertices, edges)
 
 
 def test_shard_packing_contiguous_and_conserving(spark, duck):
