@@ -12,7 +12,11 @@ plan decision (ADVICE r4 #2):
   (executor loss == application loss anyway) and for bench runs, where
   it also avoids unbounded CacheManager growth across hundreds of
   queries in one session (the r3 ADVICE that moved the repo off
-  ``persist()``).
+  ``persist()``). The blocks are NOT owned by the frame's lifecycle:
+  the JVM can keep the checkpointed RDD reachable after every Python
+  handle is gone (the ANN index build left two behind for the rest of
+  the session), so each pin's RDD id is tracked and freed by
+  :func:`release_pins` as well.
 - ``persist`` — MEMORY_AND_DISK cache with lineage kept: a lost block
   recomputes. The multi-executor production mode. ``pin_eager`` still
   cuts the logical plan here (see its docstring). Pinned frames are
@@ -37,7 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-_PINNED: dict[str, list[DataFrame]] = {}
+# per session: persist-mode frames, and the RDD ids of localCheckpoints
+_PINNED: dict[str, list[DataFrame | int]] = {}
 
 
 def _default_mode(spark) -> str:
@@ -75,7 +80,23 @@ def _pin(df: DataFrame, eager: bool) -> DataFrame:
         if ckdir and spark.sparkContext.getCheckpointDir() is None:
             spark.sparkContext.setCheckpointDir(ckdir)
         return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+    out = df.localCheckpoint(eager=eager)
+    _PINNED.setdefault(_session_key(spark), []).append(_rdd_id(out))
+    return out
+
+
+def _rdd_id(df: DataFrame) -> int:
+    """Id of the RDD under a checkpointed frame's ``LogicalRDD`` leaf."""
+    return df._jdf.queryExecution().logical().rdd().id()
+
+
+def _free(spark, pinned: DataFrame | int) -> None:
+    if isinstance(pinned, DataFrame):
+        pinned.unpersist()
+        return
+    rdd = spark.sparkContext._jsc.getPersistentRDDs().get(pinned)
+    if rdd is not None:
+        rdd.unpersist(False)
 
 
 def _session_key(spark) -> str:
@@ -104,15 +125,22 @@ def pin_eager(df: DataFrame) -> DataFrame:
     return _pin(df, eager=True)
 
 
+def unpin(df: DataFrame) -> None:
+    """Free one pinned frame now, once all its consumers have run (a
+    build's intermediates), instead of at the next :func:`release_pins`."""
+    _free(df.sparkSession, df if df.is_cached else _rdd_id(df))
+
+
 def release_pins(spark) -> int:
-    """Unpersist every frame pinned in ``persist`` mode for this
-    session since the last release. Returns the number released.
-    No-op in the other modes (their blocks are owned by the frames'
-    lifecycles)."""
-    frames = _PINNED.pop(_session_key(spark), [])
-    for df in frames:
+    """Free every frame pinned for this session since the last release:
+    unpersist the ``persist``-mode frames and the ``localCheckpoint``
+    RDDs. Returns the number released. Call it only once the pinned
+    frames' results are consumed. ``checkpoint`` mode keeps its files
+    (the checkpoint dir owns them)."""
+    pins = _PINNED.pop(_session_key(spark), [])
+    for p in pins:
         try:
-            df.unpersist()
+            _free(spark, p)
         except Exception:  # noqa: BLE001 — session may be stopping
             pass
-    return len(frames)
+    return len(pins)

@@ -25,20 +25,13 @@ semdedup driver-flake class).
 from __future__ import annotations
 
 from ..functions.det import quant, r6
-from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
+from ..functions.pin import pin_eager as _pin_eager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.gridnp import guarded_pair_sims
-from ..functions.vectors import (
-    dot_grid,
-    dot_grid_pre,
-    dot_product,
-    l2_norm,
-    norm2_grid,
-    quant_arr,
-)
+from ..functions.vectors import dot_grid_pre, quant_arr
 
 NUM_PLANES = 4
 
@@ -64,6 +57,33 @@ def _sim_grid(qe: Column, ce: Column, qn2: Column, cn2: Column) -> Column:
     )
 
 
+def topk_per_query(
+    df: DataFrame, order: Column | str, k: int, shortlist: bool = False
+) -> DataFrame:
+    """The one per-query top-k rule: rows of ``df`` numbered by
+    ``row_number() over (partition by qid order by <order>, cid)`` and
+    kept while the number is <= ``k``. ``order`` is the rounded distance
+    (ascending) or similarity (``.desc()``); the ``cid`` tie-break makes
+    the ranking total, so it cannot depend on partitioning. The SQL twin
+    is the oracles' ``row_number() OVER (PARTITION BY qid ORDER BY ...,
+    cid)``.
+
+    Returns ``df`` plus ``rank`` (long), the output column of every
+    top-k query. With ``shortlist`` only (qid, cid) come back: the
+    candidate set a refine or recall step joins against, whose rank is
+    never read."""
+    w = Window.partitionBy("qid").orderBy(order, F.col("cid"))
+    if shortlist:
+        return (
+            df.withColumn("rnk", F.row_number().over(w))
+            .where(F.col("rnk") <= k)
+            .select("qid", "cid")
+        )
+    return df.withColumn("rank", F.row_number().over(w).cast("long")).where(
+        F.col("rank") <= k
+    )
+
+
 def topk_exact(
     emb: DataFrame, query_pred: Column, k: int = 5, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
@@ -81,11 +101,7 @@ def topk_exact(
         "cid",
         _sim_grid(F.col("qe"), F.col("ce"), F.col("qn2"), F.col("cn2")).alias("sim"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return topk_per_query(sims, F.col("sim").desc(), k)
 
 
 # Deterministic integer hyperplane family. A plane is the coefficient
@@ -207,11 +223,7 @@ def topk_lsh(
         F.col("bucket"),
         _sim_grid(F.col("qe"), F.col("ce"), F.col("qn2"), F.col("cn2")).alias("sim"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return topk_per_query(sims, F.col("sim").desc(), k)
 
 
 def ivf_cells(emb: DataFrame, centroid_col: str = "label") -> tuple[DataFrame, DataFrame]:
@@ -322,11 +334,7 @@ def topk_ivf(emb: DataFrame, query_pred: Column, k: int = 5) -> DataFrame:
         F.col("cell"),
         _sim_grid(F.col("qe"), F.col("ce"), F.col("qn2"), F.col("cn2")).alias("sim"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return topk_per_query(sims, F.col("sim").desc(), k)
 
 
 def cosine_neardup_bucketed(emb: DataFrame, threshold: float) -> DataFrame:
@@ -742,11 +750,7 @@ def knn_loo_neighbors(
     merged = per_shard[0]
     for df in per_shard[1:]:
         merged = merged.unionByName(df)
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= int(k))
-    )
+    return topk_per_query(merged, F.col("sim").desc(), int(k))
 
 
 def ivf_cells_multi(

@@ -46,18 +46,17 @@ build-once/read-many pattern to the ANN tier.
 
 from __future__ import annotations
 
-from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
+from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager, unpin
 
 import hashlib
 import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.det import d2_grid_sql, d2r6_grid_sql, r6
-from ..functions.vectors import d2r6_grid
 from ..registry import query
 from ..sources import read_table
 from .pq_common import (
@@ -71,13 +70,18 @@ from .pq_common import (
     _PQ_REFINE_ORACLE,
     _PQ_REFINE_R,
     _PQ_TOPK_ORACLE,
+    _codes_long,
     _ivf_residuals,
-    _ivfadc_d2,
+    _ivfadc_codebook,
+    _ivfadc_lut,
     _ivfadc_residuals,
     _ivfadc_subvecs,
     _pq_codebook,
     _pq_d2,
+    _pq_lut,
     _pq_subvecs,
+    _refine_top5,
+    adc_topk,
 )
 
 _MARKER = "_INDEX_DONE"
@@ -187,15 +191,7 @@ def build_ann_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
         rsv = _ivfadc_subvecs(
             _ivfadc_residuals(spark, sf_dir, coarse=(centroids, cells_p))
         ).transform(_pin_lazy)
-        rcw = (
-            rsv.select("sub", "cell", F.posexplode("rsv").alias("p", "v"))
-            .groupBy("sub", "cell", "p")
-            .agg(F.floor(F.sum("v") / F.count(F.lit(1)) + F.lit(0.5)).alias("c"))
-            .groupBy("sub", "cell")
-            .agg(F.array_sort(F.collect_list(F.struct("p", "c"))).alias("pc"))
-            .select("sub", "cell", F.col("pc.c").alias("cw6"))
-        )
-        rcw.write.mode("overwrite").parquet(
+        _ivfadc_codebook(rsv).write.mode("overwrite").parquet(
             os.path.join(out_dir, "ivfadc_codebook.parquet")
         )
         rcodes = rsv.groupBy("vec_id").agg(
@@ -208,6 +204,8 @@ def build_ann_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
         rcodes.write.mode("overwrite").parquet(
             os.path.join(out_dir, "ivfadc_codes.parquet")
         )
+        unpin(rsv)
+        unpin(cells_p)
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         futures = [pool.submit(_pq_chain), pool.submit(_ivf_chain)]
@@ -398,20 +396,8 @@ def stored_dsir_tables(
 
 
 def _read_codes_long(spark: SparkSession, idx: str) -> DataFrame:
-    """Stored codes, exploded to the (vec_id, sub, cell) relation the
-    ADC joins consume — a constant 4-row fan-out per vector, no shuffle."""
-    codes = spark.read.parquet(os.path.join(idx, "pq_codes.parquet"))
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("long").alias("sub"), F.col(f"c{s}").alias("cell")
-            )
-            for s in range(_PQ_M)
-        ]
-    )
-    return codes.select("vec_id", F.explode(rows).alias("sc")).select(
-        "vec_id", "sc.sub", "sc.cell"
-    )
+    """Stored PQ codes as (vec_id, sub, cell) rows."""
+    return _codes_long(spark.read.parquet(os.path.join(idx, "pq_codes.parquet")), "c")
 
 
 def _query_lut(spark: SparkSession, sf_dir: str, idx: str) -> DataFrame:
@@ -421,12 +407,7 @@ def _query_lut(spark: SparkSession, sf_dir: str, idx: str) -> DataFrame:
     the refine twin's R-row fetch."""
     emb = read_table(spark, sf_dir, "embeddings")
     cw = spark.read.parquet(os.path.join(idx, "pq_codebook.parquet"))
-    sv_q = _pq_subvecs(emb.where(F.col("vec_id") < 20))
-    return (
-        sv_q.select(F.col("vec_id").alias("qid"), "sub", "sv")
-        .join(F.broadcast(cw), "sub")
-        .select("qid", "sub", "cell", _pq_d2("sv", "carr").alias("pd2"))
-    )
+    return _pq_lut(_pq_subvecs(emb.where(F.col("vec_id") < 20)), cw)
 
 
 _BUILD_ORACLE = f"""
@@ -501,20 +482,8 @@ def similarity_topk_pq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 16B vectors the query job reads 2 bytes/vector, not 256."""
     idx = ensure_ann_index(spark, sf_dir)
     lut = _query_lut(spark, sf_dir, idx)
-    adc = (
-        _read_codes_long(spark, idx)
-        .withColumnRenamed("vec_id", "cid")
-        .join(F.broadcast(lut), ["sub", "cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(r6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    cand = _read_codes_long(spark, idx).withColumnRenamed("vec_id", "cid")
+    return adc_topk(cand, lut, ["sub", "cell"], 5)
 
 
 @query("similarity_topk_ivfpq_stored", _IVFPQ_ORACLE)
@@ -536,18 +505,7 @@ def similarity_topk_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(ivf, "vec_id")
         .withColumnRenamed("vec_id", "cid")
     )
-    adc = (
-        cand.join(F.broadcast(lutq), ["sub", "cell", "ivf_cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(r6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    return adc_topk(cand, lutq, ["sub", "cell", "ivf_cell"], 5)
 
 
 @query("similarity_topk_pq_refine_stored", _PQ_REFINE_ORACLE)
@@ -559,38 +517,21 @@ def similarity_topk_pq_refine_stored(spark: SparkSession, sf_dir: str) -> DataFr
     side is probed, never shuffled) for the exact L2 re-rank to top-5."""
     idx = ensure_ann_index(spark, sf_dir)
     lut = _query_lut(spark, sf_dir, idx)
-    adc = (
-        _read_codes_long(spark, idx)
-        .withColumnRenamed("vec_id", "cid")
-        .join(F.broadcast(lut), ["sub", "cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(r6(F.sum("pd2")).alias("adc_d2"))
-    )
-    ws = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    short = (
-        adc.withColumn("rnk", F.row_number().over(ws))
-        .where(F.col("rnk") <= _PQ_REFINE_R)
-        .select("qid", "cid")
-    )
-    emb = read_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    ex = (
-        F.broadcast(short)
-        .join(vecs.select(F.col("vec_id").alias("qid"), F.col("e").alias("qe")), "qid")
-        .join(vecs.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce")), "cid")
-        .select(
-            "qid",
-            "cid",
-            d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"),
-        )
-    )
-    wf = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cid"))
-    return (
-        ex.withColumn("rank", F.row_number().over(wf).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "d2", "rank")
-    )
+    cand = _read_codes_long(spark, idx).withColumnRenamed("vec_id", "cid")
+    short = adc_topk(cand, lut, ["sub", "cell"], _PQ_REFINE_R, shortlist=True)
+    return _refine_top5(read_table(spark, sf_dir, "embeddings"), short)
+
+
+def _ivfadc_stored_top5(spark: SparkSession, idx: str, q_resid: DataFrame) -> DataFrame:
+    """ADC top-5 of the query residuals ``q_resid`` (`_ivf_residuals`,
+    one row per probed cell) against the stored residual codebook and
+    codes: a candidate is scored by the LUT of the probe matching its
+    own stored cell."""
+    rcw = spark.read.parquet(os.path.join(idx, "ivfadc_codebook.parquet"))
+    lut = _ivfadc_lut(_ivfadc_subvecs(q_resid), rcw)
+    rcodes = spark.read.parquet(os.path.join(idx, "ivfadc_codes.parquet"))
+    cand = _codes_long(rcodes, "rc", cid="cid", carry=("ivf_cell",))
+    return adc_topk(cand, lut, ["sub", "cell", "ivf_cell"], 5)
 
 
 @query("similarity_topk_ivfadc_stored", _IVFADC_ORACLE)
@@ -610,43 +551,7 @@ def similarity_topk_ivfadc_stored(spark: SparkSession, sf_dir: str) -> DataFrame
     q_resid = _ivf_residuals(
         emb.where(F.col("vec_id") < 20), ivf.where(F.col("vec_id") < 20), cents
     )
-    rcw = spark.read.parquet(os.path.join(idx, "ivfadc_codebook.parquet"))
-    lut = (
-        _ivfadc_subvecs(q_resid)
-        .select(F.col("vec_id").alias("qid"), "ivf_cell", "sub", "rsv")
-        .join(F.broadcast(rcw), "sub")
-        .select(
-            "qid",
-            "ivf_cell",
-            "sub",
-            "cell",
-            _ivfadc_d2("rsv", "cw6").alias("pd2"),
-        )
-    )
-    rcodes = spark.read.parquet(os.path.join(idx, "ivfadc_codes.parquet"))
-    code_rows = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("long").alias("sub"), F.col(f"rc{s}").alias("cell")
-            )
-            for s in range(_PQ_M)
-        ]
-    )
-    cand = rcodes.select(
-        F.col("vec_id").alias("cid"), "ivf_cell", F.explode(code_rows).alias("sc")
-    ).select("cid", "ivf_cell", "sc.sub", "sc.cell")
-    adc = (
-        cand.join(F.broadcast(lut), ["sub", "cell", "ivf_cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(r6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    return _ivfadc_stored_top5(spark, idx, q_resid)
 
 
 @query("similarity_topk_ivfadc_multiprobe_stored", _IVFADC_MP_ORACLE)
@@ -676,43 +581,7 @@ def similarity_topk_ivfadc_multiprobe_stored(spark: SparkSession, sf_dir: str) -
         cents,
         cell="probe_cell",
     )
-    rcw = spark.read.parquet(os.path.join(idx, "ivfadc_codebook.parquet"))
-    lut = (
-        _ivfadc_subvecs(q_resid)
-        .select(F.col("vec_id").alias("qid"), "ivf_cell", "sub", "rsv")
-        .join(F.broadcast(rcw), "sub")
-        .select(
-            "qid",
-            "ivf_cell",
-            "sub",
-            "cell",
-            _ivfadc_d2("rsv", "cw6").alias("pd2"),
-        )
-    )
-    rcodes = spark.read.parquet(os.path.join(idx, "ivfadc_codes.parquet"))
-    code_rows = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("long").alias("sub"), F.col(f"rc{s}").alias("cell")
-            )
-            for s in range(_PQ_M)
-        ]
-    )
-    cand = rcodes.select(
-        F.col("vec_id").alias("cid"), "ivf_cell", F.explode(code_rows).alias("sc")
-    ).select("cid", "ivf_cell", "sc.sub", "sc.cell")
-    adc = (
-        cand.join(F.broadcast(lut), ["sub", "cell", "ivf_cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(r6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    return _ivfadc_stored_top5(spark, idx, q_resid)
 
 
 # ---------------------------------------------------------------------------

@@ -974,10 +974,8 @@ def similarity_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     full recompute over the union, proving the algebra exact, ties
     (sim desc, cid) included.
     """
-    from pyspark.sql import Window
-
     from ..functions.vectors import quant_arr
-    from ..operators.similarity import _norm2_pre, _sim_grid
+    from ..operators.similarity import _norm2_pre, _sim_grid, topk_per_query
 
     emb = read_table(spark, sf_dir, "embeddings")
     base = emb.filter(F.col("vec_id") % 10 != 0)
@@ -1001,20 +999,13 @@ def similarity_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sim"),
         )
 
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
     base_topk = (
-        sims_against(base)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+        topk_per_query(sims_against(base), F.col("sim").desc(), 5)
         .select("qid", "cid", "sim")
         .transform(_pin_lazy)
     )
     merged = base_topk.unionByName(sims_against(delta))
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "cid", "sim", "rank")
-    )
+    return topk_per_query(merged, F.col("sim").desc(), 5)
 
 
 # --- SimHash pigeonhole (hamming <= 3) --------------------------------------

@@ -39,40 +39,37 @@ the selection stage that follows it in a real pretraining pipeline.
 
 from __future__ import annotations
 
-from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager
+from ..functions.pin import pin as _pin_lazy
 
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vectors import d2r6_grid
 from ..registry import query
 from ..sources import read_table
 from ..functions.det import d2r6_grid_sql, r6
-from .pq_common import (  # noqa: F401 — re-exported for ann_index compat
+from .pq_common import (
     _IVFADC_MP_ORACLE,
     _IVFADC_ORACLE,
-    _MEAN6_V,
-    _IVFADC_RCELL,
-    _IVFADC_RPROJ,
     _IVFPQ_ORACLE,
     _PQ_CODE_CTE,
-    _PQ_M,
-    _PQ_PLANES,
     _PQ_REFINE_ORACLE,
     _PQ_REFINE_R,
-    _PQ_SUB,
     _PQ_TOPK_ORACLE,
     _ivf_residuals,
-    _ivfadc_d2,
+    _ivfadc_codebook,
+    _ivfadc_lut,
     _ivfadc_residuals,
     _ivfadc_subvecs,
     _pq_codebook,
     _pq_d2,
+    _pq_lut,
     _pq_subvecs,
-    _pq_w,
+    _recall_at_5,
+    _refine_top5,
+    adc_topk,
 )
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -261,26 +258,9 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside zip_with — no per-dimension rows anywhere at query time."""
     emb = read_table(spark, sf_dir, "embeddings")
     sv = _pq_subvecs(emb)
-    cw = _pq_codebook(sv)
-    lut = (
-        sv.where(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("qid"), "sub", "sv")
-        .join(F.broadcast(cw), "sub")
-        .select("qid", "sub", "cell", _pq_d2("sv", "carr").alias("pd2"))
-    )
-    adc = (
-        sv.select(F.col("vec_id").alias("cid"), "sub", "cell")
-        .join(F.broadcast(lut), ["sub", "cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(r6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    lut = _pq_lut(sv.where(F.col("vec_id") < 20), _pq_codebook(sv))
+    cand = sv.select(F.col("vec_id").alias("cid"), "sub", "cell")
+    return adc_topk(cand, lut, ["sub", "cell"], 5)
 
 
 @query("similarity_topk_pq_refine", _PQ_REFINE_ORACLE)
@@ -299,43 +279,10 @@ def similarity_topk_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     `similarity_topk_pq` plan (codes + broadcast LUT)."""
     emb = read_table(spark, sf_dir, "embeddings")
     sv = _pq_subvecs(emb)
-    cw = _pq_codebook(sv)
-    lut = (
-        sv.where(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("qid"), "sub", "sv")
-        .join(F.broadcast(cw), "sub")
-        .select("qid", "sub", "cell", _pq_d2("sv", "carr").alias("pd2"))
-    )
-    adc = (
-        sv.select(F.col("vec_id").alias("cid"), "sub", "cell")
-        .join(F.broadcast(lut), ["sub", "cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(r6(F.sum("pd2")).alias("adc_d2"))
-    )
-    ws = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    short = (
-        adc.withColumn("rnk", F.row_number().over(ws))
-        .where(F.col("rnk") <= _PQ_REFINE_R)
-        .select("qid", "cid")
-    )
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    ex = (
-        F.broadcast(short)
-        .join(vecs.select(F.col("vec_id").alias("qid"), F.col("e").alias("qe")), "qid")
-        .join(vecs.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce")), "cid")
-        .select(
-            "qid",
-            "cid",
-            d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"),
-        )
-    )
-    wf = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cid"))
-    return (
-        ex.withColumn("rank", F.row_number().over(wf).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "d2", "rank")
-    )
+    lut = _pq_lut(sv.where(F.col("vec_id") < 20), _pq_codebook(sv))
+    cand = sv.select(F.col("vec_id").alias("cid"), "sub", "cell")
+    short = adc_topk(cand, lut, ["sub", "cell"], _PQ_REFINE_R, shortlist=True)
+    return _refine_top5(emb, short)
 
 
 @query("similarity_topk_ivfpq", _IVFPQ_ORACLE)
@@ -368,31 +315,14 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lifetime (ADVICE r3 leak pattern; same fix as sql_recursive_bom)
     ivf = icells.select("vec_id", F.col("cell").alias("ivf_cell")).transform(_pin_lazy)
     sv = _pq_subvecs(emb)
-    cw = _pq_codebook(sv)
-    lut = (
-        sv.where(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("qid"), "sub", "sv")
-        .join(F.broadcast(cw), "sub")
-        .select("qid", "sub", "cell", _pq_d2("sv", "carr").alias("pd2"))
-    )
+    lut = _pq_lut(sv.where(F.col("vec_id") < 20), _pq_codebook(sv))
     lutq = lut.join(ivf.withColumnRenamed("vec_id", "qid"), "qid")
     cand = (
         sv.select("vec_id", "sub", "cell")
         .join(ivf, "vec_id")
         .withColumnRenamed("vec_id", "cid")
     )
-    adc = (
-        cand.join(F.broadcast(lutq), ["sub", "cell", "ivf_cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(r6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    return adc_topk(cand, lutq, ["sub", "cell", "ivf_cell"], 5)
 
 
 # ---------------------------------------------------------------------------
@@ -625,44 +555,10 @@ def similarity_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-rows-per-query broadcast join."""
     from .ann_index import similarity_topk_pq_stored
 
-    emb = read_table(spark, sf_dir, "embeddings")
     # gate the STORED index (what a rebuild audits); results identical
     # to the in-query form (test_stored_twins), cost excludes encoding
     pq5 = similarity_topk_pq_stored(spark, sf_dir).select("qid", "cid")
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    q = vecs.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
-    )
-    pairs = vecs.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce")).crossJoin(
-        F.broadcast(q)
-    ).where(F.col("qid") != F.col("cid"))
-    d2 = pairs.select(
-        "qid",
-        "cid",
-        d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"),
-    )
-    wex = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cid"))
-    ex5 = (
-        d2.withColumn("rnk", F.row_number().over(wex))
-        .where(F.col("rnk") <= 5)
-        .select("qid", "cid")
-    )
-    hits = (
-        ex5.join(
-            F.broadcast(pq5.withColumn("hit", F.lit(1))), ["qid", "cid"], "left"
-        )
-        .groupBy("qid")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"))
-    )
-    return hits.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        # integer-exact mean: sum(n_hit) is an exact long, one double
-        # division at the end — no float-sum merge-order exposure
-        r6(
-            F.sum("n_hit").cast("double")
-            / (F.lit(5.0) * F.count(F.lit(1)))
-        ).alias("recall_at_5"),
-    )
+    return _recall_at_5(read_table(spark, sf_dir, "embeddings"), pq5)
 
 
 # ---------------------------------------------------------------------------
@@ -704,41 +600,9 @@ def similarity_topk_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream: truncate its lineage so the coarse numpy kernel + coding
     # run once, not once per consumer (3.3x at the 250x smoke)
     sv = _ivfadc_subvecs(resid).transform(_pin_lazy)
-    cw = (
-        sv.select("sub", "cell", F.posexplode("rsv").alias("p", "v"))
-        .groupBy("sub", "cell", "p")
-        .agg(
-            F.floor(F.sum("v") / F.count(F.lit(1)) + F.lit(0.5)).alias("c")
-        )
-        .groupBy("sub", "cell")
-        .agg(F.array_sort(F.collect_list(F.struct("p", "c"))).alias("pc"))
-        .select("sub", "cell", F.col("pc.c").alias("cw6"))
-    )
-    lut = (
-        sv.where(F.col("vec_id") < 20)
-        .select(F.col("vec_id").alias("qid"), "ivf_cell", "sub", "rsv")
-        .join(F.broadcast(cw), "sub")
-        .select(
-            "qid",
-            "ivf_cell",
-            "sub",
-            "cell",
-            _ivfadc_d2("rsv", "cw6").alias("pd2"),
-        )
-    )
+    lut = _ivfadc_lut(sv.where(F.col("vec_id") < 20), _ivfadc_codebook(sv))
     cand = sv.select(F.col("vec_id").alias("cid"), "ivf_cell", "sub", "cell")
-    adc = (
-        cand.join(F.broadcast(lut), ["sub", "cell", "ivf_cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(r6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    return adc_topk(cand, lut, ["sub", "cell", "ivf_cell"], 5)
 
 
 _IVFADC_RECALL_ORACLE = f"""
@@ -797,44 +661,7 @@ def similarity_ivfadc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gate the STORED index (what a rebuild audits); results identical
     # to the in-query form (test_stored_twins), cost excludes encoding
     a5 = similarity_topk_ivfadc_stored(spark, sf_dir).select("qid", "cid")
-    emb = read_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    q = vecs.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
-    )
-    d2 = (
-        vecs.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
-        .crossJoin(F.broadcast(q))
-        .where(F.col("qid") != F.col("cid"))
-        .select(
-            "qid",
-            "cid",
-            d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"),
-        )
-    )
-    wex = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cid"))
-    ex5 = (
-        d2.withColumn("rnk", F.row_number().over(wex))
-        .where(F.col("rnk") <= 5)
-        .select("qid", "cid")
-    )
-    hits = (
-        ex5.join(F.broadcast(a5.withColumn("hit", F.lit(1))), ["qid", "cid"], "left")
-        .groupBy("qid")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"))
-    )
-    return hits.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        # integer-exact mean, see similarity_pq_recall
-        r6(
-            F.sum("n_hit").cast("double")
-            / (F.lit(5.0) * F.count(F.lit(1)))
-        ).alias("recall_at_5"),
-    )
-
-
-# _IVFADC_MP_ORACLE moved to pq_common (leaf) so the stored twin in
-# ann_index can share it at decoration time without a module cycle
+    return _recall_at_5(read_table(spark, sf_dir, "embeddings"), a5)
 
 
 @query("similarity_topk_ivfadc_multiprobe", _IVFADC_MP_ORACLE)
@@ -861,14 +688,7 @@ def similarity_topk_ivfadc_multiprobe(spark: SparkSession, sf_dir: str) -> DataF
     # stream: truncate its lineage so the coarse numpy kernel + coding
     # run once, not once per consumer (3.3x at the 250x smoke)
     sv = _ivfadc_subvecs(resid).transform(_pin_lazy)
-    cw = (
-        sv.select("sub", "cell", F.posexplode("rsv").alias("p", "v"))
-        .groupBy("sub", "cell", "p")
-        .agg(F.floor(F.sum("v") / F.count(F.lit(1)) + F.lit(0.5)).alias("c"))
-        .groupBy("sub", "cell")
-        .agg(F.array_sort(F.collect_list(F.struct("p", "c"))).alias("pc"))
-        .select("sub", "cell", F.col("pc.c").alias("cw6"))
-    )
+    cw = _ivfadc_codebook(sv)
     centroids, probes = ivf_cells_multi(emb, nprobe=2)
     q_resid = _ivf_residuals(
         emb.where(F.col("vec_id") < 20),
@@ -878,31 +698,9 @@ def similarity_topk_ivfadc_multiprobe(spark: SparkSession, sf_dir: str) -> DataF
         centroids,
         cell="probe_cell",
     )
-    lut = (
-        _ivfadc_subvecs(q_resid)
-        .select(F.col("vec_id").alias("qid"), "ivf_cell", "sub", "rsv")
-        .join(F.broadcast(cw), "sub")
-        .select(
-            "qid",
-            "ivf_cell",
-            "sub",
-            "cell",
-            _ivfadc_d2("rsv", "cw6").alias("pd2"),
-        )
-    )
+    lut = _ivfadc_lut(_ivfadc_subvecs(q_resid), cw)
     cand = sv.select(F.col("vec_id").alias("cid"), "ivf_cell", "sub", "cell")
-    adc = (
-        cand.join(F.broadcast(lut), ["sub", "cell", "ivf_cell"])
-        .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(r6(F.sum("pd2")).alias("adc_d2"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_d2"), F.col("cid"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-        .select("qid", "cid", "adc_d2", "rank")
-    )
+    return adc_topk(cand, lut, ["sub", "cell", "ivf_cell"], 5)
 
 
 # ---------------------------------------------------------------------------
@@ -933,40 +731,7 @@ def similarity_ivfadc_multiprobe_recall(spark: SparkSession, sf_dir: str) -> Dat
     from .ann_index import similarity_topk_ivfadc_multiprobe_stored
 
     a5 = similarity_topk_ivfadc_multiprobe_stored(spark, sf_dir).select("qid", "cid")
-    emb = read_table(spark, sf_dir, "embeddings")
-    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    q = vecs.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
-    )
-    d2 = (
-        vecs.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
-        .crossJoin(F.broadcast(q))
-        .where(F.col("qid") != F.col("cid"))
-        .select(
-            "qid",
-            "cid",
-            d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"),
-        )
-    )
-    wex = Window.partitionBy("qid").orderBy(F.col("d2"), F.col("cid"))
-    ex5 = (
-        d2.withColumn("rnk", F.row_number().over(wex))
-        .where(F.col("rnk") <= 5)
-        .select("qid", "cid")
-    )
-    hits = (
-        ex5.join(F.broadcast(a5.withColumn("hit", F.lit(1))), ["qid", "cid"], "left")
-        .groupBy("qid")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"))
-    )
-    return hits.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        # integer-exact mean, see similarity_pq_recall
-        r6(
-            F.sum("n_hit").cast("double")
-            / (F.lit(5.0) * F.count(F.lit(1)))
-        ).alias("recall_at_5"),
-    )
+    return _recall_at_5(read_table(spark, sf_dir, "embeddings"), a5)
 
 
 # ---------------------------------------------------------------------------

@@ -8,6 +8,15 @@ plan file can pull these at import time without re-entering the
 registry's import chain half-initialized (importing dsel_ops directly
 used to crash exactly that way once ann_index imported its symbols).
 
+Every ANN read ranks through ONE path: ``adc_topk`` is the only ADC
+scoring kernel (broadcast LUT join, self-match dropped, per-pair 6-dp
+sum) and `operators.similarity.topk_per_query` the only per-query
+top-k rule (row_number over qid ordered by distance, then ``cid``).
+Their SQL twins are the oracles below: the ``adc`` CTE and its
+``row_number() OVER (PARTITION BY qid ORDER BY adc_d2, cid)``. The
+query LUTs, the IVFADC codebook, the stored-code explode and the
+exact refine / recall tails sit beside the codebooks they read.
+
 See dsel_ops.py for the tier design notes and Jegou et al. 2011
 citations; everything here follows the house determinism rules
 (fixed integer plane weights, exact integer arithmetic for sign cells,
@@ -20,14 +29,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.det import (
-    cos_grid_sql,
     d2_grid_sql,
     d2r6_grid_sql,
-    mean_grid,
     mean_grid_sql,
     quant,
     quant_sql,
+    r6,
 )
+from ..functions.vectors import d2r6_grid
+from ..operators.similarity import topk_per_query
 from ..sources import read_table
 
 # Exact-integer 1e-6 grid mean (functions/det.py): every centroid /
@@ -202,6 +212,38 @@ def _pq_d2(sv: str, carr: str):
     )
     return F.expr(
         f"floor(cast(({total}) as double) / 1e6 + 0.5D) / 1e6"
+    )
+
+
+def _pq_lut(sv_q: DataFrame, cw: DataFrame) -> DataFrame:
+    """(qid, sub, cell, pd2): the PQ query LUT. Each query subvector of
+    ``sv_q`` (vec_id, sub, sv) is scored against every codeword of the
+    broadcast codebook ``cw`` (sub, cell, carr); queries keep full
+    precision under ADC."""
+    return (
+        sv_q.select(F.col("vec_id").alias("qid"), "sub", "sv")
+        .join(F.broadcast(cw), "sub")
+        .select("qid", "sub", "cell", _pq_d2("sv", "carr").alias("pd2"))
+    )
+
+
+def _codes_long(
+    codes: DataFrame, prefix: str, cid: str = "vec_id", carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Stored codes (vec_id, *carry, <prefix>0..<prefix>3) exploded to
+    the (``cid``, *carry, sub, cell) rows an ADC join consumes — a
+    constant 4-row fan-out per vector, no shuffle."""
+    rows = F.array(
+        *[
+            F.struct(
+                F.lit(s).cast("long").alias("sub"), F.col(f"{prefix}{s}").alias("cell")
+            )
+            for s in range(_PQ_M)
+        ]
+    )
+    vid = "vec_id" if cid == "vec_id" else F.col("vec_id").alias(cid)
+    return codes.select(vid, *carry, F.explode(rows).alias("sc")).select(
+        cid, *carry, "sc.sub", "sc.cell"
     )
 
 
@@ -488,6 +530,39 @@ def _ivfadc_d2(rsv: str, cw: str):
     return F.expr(f"floor(({total}) / 1e6 + 0.5D) / 1e6")
 
 
+
+def _ivfadc_codebook(rsv: DataFrame) -> DataFrame:
+    """(sub, cell, cw6): the trained integer residual codeword per cell
+    — the `_pq_codebook` shape on `_ivfadc_subvecs` rows, each
+    coordinate the exact integer mean floor(sum/count + 0.5)."""
+    return (
+        rsv.select("sub", "cell", F.posexplode("rsv").alias("p", "v"))
+        .groupBy("sub", "cell", "p")
+        .agg(F.floor(F.sum("v") / F.count(F.lit(1)) + F.lit(0.5)).alias("c"))
+        .groupBy("sub", "cell")
+        .agg(F.array_sort(F.collect_list(F.struct("p", "c"))).alias("pc"))
+        .select("sub", "cell", F.col("pc.c").alias("cw6"))
+    )
+
+
+def _ivfadc_lut(rsv_q: DataFrame, rcw: DataFrame) -> DataFrame:
+    """(qid, ivf_cell, sub, cell, pd2): the IVFADC query LUT. Each query
+    residual subvector of ``rsv_q`` (`_ivfadc_subvecs` rows; one
+    ``ivf_cell`` per probed cell) is scored against every codeword of the
+    broadcast residual codebook ``rcw``."""
+    return (
+        rsv_q.select(F.col("vec_id").alias("qid"), "ivf_cell", "sub", "rsv")
+        .join(F.broadcast(rcw), "sub")
+        .select(
+            "qid",
+            "ivf_cell",
+            "sub",
+            "cell",
+            _ivfadc_d2("rsv", "cw6").alias("pd2"),
+        )
+    )
+
+
 _IVFADC_MP_ORACLE = f"""
 WITH iflat AS (
   SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
@@ -567,3 +642,83 @@ SELECT qid, cid, adc_d2, CAST(rnk AS BIGINT) AS rank FROM (
   FROM adc
 ) WHERE rnk <= 5
 """
+
+
+# ---------------------------------------------------------------------------
+# the ADC scoring kernel and the exact tails that consume its top-k
+# ---------------------------------------------------------------------------
+
+
+def adc_topk(
+    cand: DataFrame, lut: DataFrame, keys: list[str], k: int, shortlist: bool = False
+) -> DataFrame:
+    """The one ADC scoring kernel (Jegou et al. 2011 §IV): candidate code
+    rows (cid, *keys) look up their partial distances in the broadcast
+    query LUT (qid, *keys, pd2); a query never scores itself; a pair's
+    partials sum and round to the 6-dp grid as ``adc_d2``, ranked by
+    `topk_per_query` (``shortlist`` returns only (qid, cid)). Twin of
+    the oracles' ``adc`` CTE and its row_number."""
+    adc = (
+        cand.join(F.broadcast(lut), keys)
+        .where(F.col("cid") != F.col("qid"))
+        .groupBy("qid", "cid")
+        .agg(r6(F.sum("pd2")).alias("adc_d2"))
+    )
+    return topk_per_query(adc, "adc_d2", k, shortlist)
+
+
+def _refine_top5(emb: DataFrame, short: DataFrame) -> DataFrame:
+    """(qid, cid, d2, rank): the exact-L2 re-rank of an ADC shortlist
+    ``short`` (qid, cid) to the final top-5. Only the shortlisted
+    vectors are read — a broadcast join on vec_id probes the big side,
+    never shuffles it."""
+    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+    ex = (
+        F.broadcast(short)
+        .join(vecs.select(F.col("vec_id").alias("qid"), F.col("e").alias("qe")), "qid")
+        .join(vecs.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce")), "cid")
+        .select(
+            "qid",
+            "cid",
+            d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"),
+        )
+    )
+    return topk_per_query(ex, "d2", 5)
+
+
+def _recall_at_5(emb: DataFrame, approx5: DataFrame) -> DataFrame:
+    """(n_queries, recall_at_5): mean over the 20 queries of
+    |approx5 ∩ exact L2 top-5| / 5, where ``approx5`` is an ANN top-5
+    (qid, cid). The exact side is a broadcast-query L2 ranking; the
+    intersection a 5-rows-per-query broadcast join."""
+    vecs = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+    q = vecs.where(F.col("vec_id") < 20).select(
+        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
+    )
+    d2 = (
+        vecs.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
+        .crossJoin(F.broadcast(q))
+        .where(F.col("qid") != F.col("cid"))
+        .select(
+            "qid",
+            "cid",
+            d2r6_grid(F.col("qe"), F.col("ce")).alias("d2"),
+        )
+    )
+    ex5 = topk_per_query(d2, "d2", 5, shortlist=True)
+    hits = (
+        ex5.join(
+            F.broadcast(approx5.withColumn("hit", F.lit(1))), ["qid", "cid"], "left"
+        )
+        .groupBy("qid")
+        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"))
+    )
+    return hits.agg(
+        F.count(F.lit(1)).alias("n_queries"),
+        # integer-exact mean: sum(n_hit) is an exact long, one double
+        # division at the end — no float-sum merge-order exposure
+        r6(
+            F.sum("n_hit").cast("double")
+            / (F.lit(5.0) * F.count(F.lit(1)))
+        ).alias("recall_at_5"),
+    )

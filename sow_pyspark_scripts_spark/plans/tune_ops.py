@@ -185,7 +185,7 @@ def similarity_topk_ivf_multiprobe(
     tie-break).
     """
     from ..functions.vectors import quant_arr
-    from ..operators.similarity import _norm2_pre, _sim_grid, ivf_cells_multi
+    from ..operators.similarity import _norm2_pre, _sim_grid, ivf_cells_multi, topk_per_query
 
     emb = read_table(spark, sf_dir, "embeddings")
     _, probes = ivf_cells_multi(emb, nprobe=2)
@@ -218,11 +218,7 @@ def similarity_topk_ivf_multiprobe(
         "cid",
         _sim_grid(F.col("qe"), F.col("ce"), F.col("qn2"), F.col("cn2")).alias("sim"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-    )
+    return topk_per_query(sims, F.col("sim").desc(), 5)
 
 
 # ---------------------------------------------------------------------------

@@ -66,6 +66,40 @@ def test_persist_mode_tracks_and_releases(spark):
     assert release_pins(spark) == 0  # drained
 
 
+def test_ann_index_rebuild_leaves_no_persisted_rdds(spark):
+    """The stored ANN index build pins the coarse assignment and the
+    residual codes with localCheckpoint; once the build is done and
+    ``release_pins`` has run, the session holds no more persisted RDDs
+    than before it (the build used to leave two for the session's life)."""
+    from sow_pyspark_scripts_spark.plans.ann_index import ensure_ann_index
+
+    _with_mode(spark, "localCheckpoint")
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    release_pins(spark)
+    start = cached().size()
+    ensure_ann_index(spark, SF_DIR, rebuild=True)
+    release_pins(spark)
+    assert cached().size() <= start
+
+
+def test_release_pins_frees_local_checkpoints(spark):
+    """A localCheckpoint pin is tracked by its RDD id and unpersisted by
+    ``release_pins``, lazy or eager."""
+    from sow_pyspark_scripts_spark.functions.pin import _rdd_id
+
+    _with_mode(spark, "localCheckpoint")
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    release_pins(spark)
+    nation = read_table(spark, SF_DIR, "nation")
+    lazy = nation.transform(pin)
+    eager = nation.transform(pin_eager)
+    assert lazy.count() == eager.count() == 25
+    ids = [_rdd_id(lazy), _rdd_id(eager)]
+    assert all(cached().containsKey(i) for i in ids)
+    assert release_pins(spark) == 2
+    assert not any(cached().containsKey(i) for i in ids)
+
+
 def test_pin_eager_materializes(spark):
     _with_mode(spark, "persist")
     df = read_table(spark, SF_DIR, "region").transform(pin_eager)

@@ -132,6 +132,77 @@ def test_no_hand_written_6dp_rounding():
     )
 
 
+def test_no_hand_written_ann_topk():
+    """The ANN tier ranks through two kernels: the per-query top-k window
+    (partitionBy("qid"), ordered by a distance or similarity and then
+    by cid) is spelled only in operators.similarity.topk_per_query, and
+    the ADC pair sum groupBy("qid", "cid") only in plans.pq_common.adc_topk.
+    A copy elsewhere could drift from the oracles' tie-break. Parsed,
+    not grepped, like the 6-dp rule above."""
+    import ast
+    import pathlib
+
+    import sow_pyspark_scripts_spark as pkg
+
+    kernels = {
+        ("operators", "similarity.py", "topk_per_query"),
+        ("plans", "pq_common.py", "adc_topk"),
+    }
+
+    def strs(args):
+        return [a.value for a in args if isinstance(a, ast.Constant)]
+
+    def is_cid(node):
+        if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "col":
+            node = node.args[0] if len(node.args) == 1 else None
+        return isinstance(node, ast.Constant) and node.value == "cid"
+
+    def is_qid_window(node):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "partitionBy"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "Window"
+            and len(node.args) == 1
+            and strs(node.args) == ["qid"]
+        )
+
+    def offends(node):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            return False
+        if node.func.attr == "groupBy":
+            return len(node.args) == 2 and strs(node.args) == ["qid", "cid"]
+        return (
+            node.func.attr == "orderBy"
+            and len(node.args) >= 2
+            and is_cid(node.args[-1])
+            and is_qid_window(node.func.value)
+        )
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for sub in ("plans", "operators"):
+        for py in sorted((root / sub).rglob("*.py")):
+            tree = ast.parse(py.read_text())
+            inside = {
+                id(n)
+                for fn in ast.walk(tree)
+                if isinstance(fn, ast.FunctionDef) and (sub, py.name, fn.name) in kernels
+                for n in ast.walk(fn)
+            }
+            offenders += [
+                f"{sub}/{py.name}:{node.lineno}"
+                for node in ast.walk(tree)
+                if offends(node) and id(node) not in inside
+            ]
+    assert not offenders, (
+        f"{len(offenders)} hand-written ANN rank/score blocks (use "
+        "operators.similarity.topk_per_query or plans.pq_common.adc_topk):\n"
+        + "\n".join(offenders)
+    )
+
+
 def test_pctl_exact_acc_covers_every_fixture_relation():
     """ADVICE r7: PCTL_EXACT_ACC guarantees oracle-exactness only while
     accuracy >= 2x the largest oracle-compared relation (rank error

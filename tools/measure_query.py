@@ -2,7 +2,9 @@
 
 For each named query: clear cache, release pins, one unmeasured warm
 pass (codegen/page-cache), one measured pass through the noop sink
-(guide §1.4), then dump ``.explain("formatted")`` to a file. GEMM
+(guide §1.4), then dump ``.explain("formatted")`` to a file with the
+process-global counters normalised (see ``normalise_plan``), so two
+captures compare with plain ``diff``. GEMM
 canaries bracket the run (BASELINE.md healthy reference ~0.06/0.9-1.1)
 so a throttled host is visible in the artifact itself.
 
@@ -20,11 +22,31 @@ import argparse
 import gc
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+
+# Counters a plan string takes from the JVM rather than from the query:
+# expression ids (#12), plan ids, RDD ids and the
+# lambda variables of higher-order functions (x_18, y_3). They move with
+# whatever ran earlier in the process, e.g. an ANN index build.
+_PLAN_COUNTERS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"\b([xy])_\d+\b"), r"\1_N"),
+)
+
+
+def normalise_plan(plan: str) -> str:
+    """``plan`` with the process-global counters replaced by ``N``."""
+    for pat, repl in _PLAN_COUNTERS:
+        plan = pat.sub(repl, plan)
+    return plan
 
 
 def _canary() -> dict:
@@ -93,7 +115,7 @@ def main() -> None:
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
                 )
                 p = Path(args.plans_out) / f"{name}{suffix}.txt"
-                p.write_text(plan)
+                p.write_text(normalise_plan(plan))
                 rec["plan"] = str(p)
         except Exception as exc:  # noqa: BLE001 — recorded per query
             rec["error"] = f"{type(exc).__name__}: {exc}"[:300]
