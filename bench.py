@@ -7,6 +7,9 @@ Prints ONE JSON line:
 
 Each query is materialized through the noop sink (full computation, no
 collect-to-driver cost in the measurement, mirroring a cluster write).
+A CLI over ``tools/runner.py``. ``BENCH_DETAIL.json`` holds the
+canaries, the rotation slice and one layered record per query, read
+from the run's Spark event log.
 """
 
 from __future__ import annotations
@@ -19,7 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from sow_pyspark_scripts_spark import registry  # noqa: E402
-from sow_pyspark_scripts_spark.session import get_spark  # noqa: E402
+from tools import runner  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -111,11 +114,7 @@ HEADLINE = [
 ]
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _cpu_microbench(seconds: float = 10.0) -> dict[str, float]:
+def _cpu_microbench() -> dict[str, float]:
     """Fixed sustained-CPU workload, timed — the host-throttle canary
     (VERDICT r5 task #6). Run before AND after the bench: on a healthy
     host both numbers match the BASELINE.md reference within noise; a
@@ -150,129 +149,30 @@ def _cpu_microbench(seconds: float = 10.0) -> dict[str, float]:
     return {"gemm_1t_sec": round(single, 3), "gemm_16t_sec": round(multi, 3)}
 
 
-def _stage_stats_by_group(sc) -> dict[str, dict]:
-    """Per-job-group stage aggregates from the UI REST API — measured
-    (not guessed) evidence of what each headline query did: shuffle
-    bytes moved, summed executor run time, summed stage wall, stage
-    count. run-vs-wall separates compute from scheduling when a timing
-    outlier needs a post-hoc diagnosis. Returns {} if unavailable."""
-    import json as js
-    import urllib.request
-
-    try:
-        base, app = sc.uiWebUrl, sc.applicationId
-        jobs = js.load(urllib.request.urlopen(f"{base}/api/v1/applications/{app}/jobs"))
-        stages = js.load(
-            urllib.request.urlopen(f"{base}/api/v1/applications/{app}/stages")
-        )
-    except Exception:
-        return {}
-    stage_group: dict[int, str] = {}
-    for j in jobs:
-        g = j.get("jobGroup")
-        if g:
-            for sid in j.get("stageIds", []):
-                stage_group[sid] = g
-    out: dict[str, dict] = {}
-    for st in stages:
-        g = stage_group.get(st.get("stageId"))
-        if g and st.get("status") == "COMPLETE":
-            agg = out.setdefault(
-                g,
-                {
-                    "shuffle_bytes": 0,
-                    "executor_run_ms": 0,
-                    "stage_wall_ms": 0,
-                    "n_stages": 0,
-                },
-            )
-            agg["shuffle_bytes"] += int(st.get("shuffleWriteBytes", 0))
-            agg["executor_run_ms"] += int(st.get("executorRunTime", 0))
-            try:
-                sub = st.get("submissionTime")
-                done = st.get("completionTime")
-                if sub and done:
-                    from datetime import datetime
-
-                    fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-                    wall = (
-                        datetime.strptime(done.replace("GMT", ""), fmt[:-2])
-                        - datetime.strptime(sub.replace("GMT", ""), fmt[:-2])
-                    ).total_seconds()
-                    agg["stage_wall_ms"] += int(wall * 1000)
-            except Exception:
-                pass
-            agg["n_stages"] += 1
-    return out
-
-
 def main() -> None:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     cpu_pre = _cpu_microbench()
-    spark = get_spark(
-        app_name="bench", extra_conf={"spark.ui.enabled": "true"}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    run = runner.Runner("bench", SF_DIR, event_log=True)
 
     # Steady-state methodology (JMH-style), ISOLATED per query (r3):
-    # each query clears the cache, runs once unmeasured (JVM whole-stage-
-    # codegen compilation, page-cache warm-up, its OWN persisted
-    # intermediates), then once measured. First-run codegen latency
-    # (observed 2.0s -> 0.7s on scd2_intervals by run 3) is a per-plan
-    # constant that amortizes to zero over a 100 TB execution. The
-    # clearCache between queries is the same honesty fix the r2 scale
-    # smoke needed: without it, 120+ query runs accumulate every
-    # .persist()/localCheckpoint block in one block manager —
+    # each pass starts with the runner's isolation step, and each
+    # headline query runs once unmeasured (JVM whole-stage-codegen
+    # compilation, page-cache warm-up), then once measured. First-run
+    # codegen latency (observed 2.0s -> 0.7s on scd2_intervals by run 3)
+    # is a per-plan constant that amortizes to zero over a 100 TB
+    # execution. Without the isolation step, 120+ query runs accumulate
+    # every .persist()/localCheckpoint block in one block manager —
     # CacheManager leftovers both flatter queries whose canonicalized
     # subplans match an earlier query's cache AND crowd out later
     # queries' working sets (measured: similarity_topk_ivfpq 5.5s
     # isolated vs 14.4s late in an unisolated 61-query session).
-    materialize(registry.QUERIES["agg_distinct"](spark, SF_DIR))
-
-    timings: dict[str, float] = {}
+    # One failing query records its error and the run continues.
+    run.run("agg_distinct")
     t_all = time.perf_counter()
-    import gc
-
-    errors: dict[str, str] = {}
-    from sow_pyspark_scripts_spark.functions.pin import release_pins
-
-    for name in HEADLINE:
-        release_pins(spark)  # persist-mode pins from the previous query
-        spark.catalog.clearCache()
-        gc.collect()  # free localCheckpoint blocks (ContextCleaner runs on GC)
-        # per-query isolation (ADVICE r3): one failing query must not
-        # discard every timing already collected — record and continue
-        try:
-            materialize(registry.QUERIES[name](spark, SF_DIR))  # warm, unmeasured
-            spark.sparkContext.setJobGroup(f"bench:{name}", name)
-            t0 = time.perf_counter()
-            materialize(registry.QUERIES[name](spark, SF_DIR))
-            timings[name] = round(time.perf_counter() - t0, 3)
-        except Exception as exc:  # noqa: BLE001 — recorded, not swallowed
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-        finally:
-            spark.sparkContext.setJobGroup("", "")
-    total = round(
-        sum(timings.values()), 3
-    )  # measured passes only; warmups excluded
+    head = [run.run(name, warm=1) for name in HEADLINE]
     wall = round(time.perf_counter() - t_all, 3)
-
-    stage_stats = _stage_stats_by_group(spark.sparkContext)
-    shuffle_mb = {
-        name: round(
-            stage_stats.get(f"bench:{name}", {}).get("shuffle_bytes", 0) / 1e6, 2
-        )
-        for name in HEADLINE
-    }
-    stages = {
-        name: {
-            k: v
-            for k, v in stage_stats.get(f"bench:{name}", {}).items()
-            if k != "shuffle_bytes"
-        }
-        for name in HEADLINE
-        if f"bench:{name}" in stage_stats
-    }
+    timings = {r["query"]: r["sec"][-1] for r in head if "error" not in r}
+    total = round(sum(timings.values()), 3)  # measured passes only; warmups excluded
 
     # Rotating extension-tier slice (VERDICT r2 #8): the headline covers
     # ~60 of 450 registered queries; each round additionally times a
@@ -288,19 +188,12 @@ def main() -> None:
     slice_n = 40
     start = (rot_idx * slice_n) % max(len(rest), 1)
     rotation_names = (rest + rest)[start : start + min(slice_n, len(rest))]
-    rotation: dict[str, float] = {}
-    for name in rotation_names:
-        release_pins(spark)
-        spark.catalog.clearCache()
-        gc.collect()
-        try:
-            t0 = time.perf_counter()
-            materialize(registry.QUERIES[name](spark, SF_DIR))
-            rotation[name] = round(time.perf_counter() - t0, 3)
-        except Exception as exc:  # noqa: BLE001
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+    rot = [run.run(name) for name in rotation_names]
+    rotation = {r["query"]: r["sec"][-1] for r in rot if "error" not in r}
 
     cpu_post = _cpu_microbench()
+    run.stop()
+    errors = {r["query"]: r["error"] for r in run.records if "error" in r}
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     detail = {
         "metric": "headline_total_sec",
@@ -312,10 +205,14 @@ def main() -> None:
         "cpu_microbench_pre": cpu_pre,
         "cpu_microbench_post": cpu_post,
         "queries": timings,
-        "shuffle_mb": shuffle_mb,
-        # per-query stage aggregates: executor_run_ms vs stage_wall_ms
-        # separates compute from scheduling in post-hoc outlier triage
-        "stages": stages,
+        # per query, from the event log: build_s / materialize_s of the
+        # measured pass, its jobs (build_jobs run while the DataFrame is
+        # built), stages, tasks, executor/CPU/GC time, shuffle, spill,
+        # task skew and driver idle time
+        "layers": {
+            r["query"]: {k: v for k, v in r.items() if k not in ("query", "sec", "start", "end")}
+            for r in run.records
+        },
         "rotation_index": rot_idx,
         "rotation": rotation,
         "errors": errors,
@@ -324,12 +221,9 @@ def main() -> None:
     # Full diagnostic detail goes to disk; stdout gets ONE JSON line LAST
     # (a few KB — it carries the per-query seconds map the driver
     # contract requires, r8) so tail-capture harnesses see a parseable
-    # object as the final line. (ADVICE r8: the old "<200 bytes" claim
-    # predated the inline queries map and is gone.)
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
-    with open(detail_path, "w") as fh:
+    # object as the final line.
+    with open(os.path.join(repo, "BENCH_DETAIL.json"), "w") as fh:
         json.dump(detail, fh, indent=1)
-    spark.stop()
     sys.stdout.flush()
     print(
         json.dumps(
@@ -338,8 +232,8 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 # per-query seconds inline (driver contract); the full
-                # detail (canaries, shuffle bytes, stage aggregates,
-                # rotation slice) stays in BENCH_DETAIL.json
+                # detail (canaries, layered records, rotation slice)
+                # stays in BENCH_DETAIL.json
                 "queries": timings,
                 "sf": sf_val,
                 "n_queries": len(HEADLINE),

@@ -227,7 +227,8 @@ def _ensure_index(
     ``builder(spark, sf_dir, dir)`` if absent (or if ``rebuild``). The
     dir name embeds the fixture fingerprint, so a regenerated fixture
     gets a fresh build; stale siblings of the same fixture+kind are
-    removed."""
+    removed. ``rebuild`` replaces a committed dir: the old one is renamed
+    aside, the new build renamed in, and the old one removed."""
     d = _index_dir(sf_dir, kind, table)
     if rebuild or not os.path.exists(os.path.join(d, _MARKER)):
         # Sweep stale siblings of THIS fixture+kind across any version /
@@ -245,7 +246,7 @@ def _ensure_index(
         pat = _re.compile(
             _re.escape(stem)
             + f"_{kind}_v"
-            + r"\d+_[0-9a-f]{16}(\.build-\d+)?$"  # incl. crashed stagings
+            + r"\d+_[0-9a-f]{16}(\.(build|old)-\d+)?$"  # incl. crashed stagings
         )
         root = _index_root()
         if os.path.isdir(root):
@@ -258,12 +259,15 @@ def _ensure_index(
         # half-written tables before the marker landed, and overlapping
         # Spark overwrites could corrupt each other. With rename-commit,
         # the loser simply discards its build when the winner's marker
-        # is already there.
-        build = f"{d}.build-{os.getpid()}"
+        # is already there — unless this call is a rebuild, which swaps
+        # its build in for the committed one.
+        build, old = f"{d}.build-{os.getpid()}", f"{d}.old-{os.getpid()}"
         shutil.rmtree(build, ignore_errors=True)
         os.makedirs(build, exist_ok=True)
         try:
             builder(spark, sf_dir, build)
+            if rebuild and os.path.exists(d):
+                os.rename(d, old)
             if not os.path.exists(os.path.join(d, _MARKER)):
                 try:
                     os.rename(build, d)
@@ -275,6 +279,7 @@ def _ensure_index(
                         os.rename(build, d)
         finally:
             shutil.rmtree(build, ignore_errors=True)
+            shutil.rmtree(old, ignore_errors=True)
     return d
 
 

@@ -770,25 +770,17 @@ def _stream_events_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never serve a stale staged copy (ADVICE r2 — the bare _STAGED
     # marker never invalidated). Stale fingerprints of the same fixture
     # are removed so reruns don't accumulate.
-    import hashlib
     import shutil
 
-    src = os.path.join(sf_dir, "events.parquet")
-    h = hashlib.md5()
-    if os.path.isdir(src):
-        for p in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, p))
-            h.update(f"{p}:{st.st_size}:{st.st_mtime_ns};".encode())
-    else:
-        st = os.stat(src)
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
+    from .ann_index import _fingerprint
+
     base = "spark_stream_flush_" + sf_dir.strip("/").replace("/", "_").replace(
         ".", "_"
     )
     # "__h" separator keeps the stale-sibling sweep from matching a
     # DIFFERENT fixture whose sanitized name extends this one
     # (ADVICE r3: /data/sf vs /data/sf_x both sanitize via '_')
-    stage = os.path.join(tempfile.gettempdir(), f"{base}__h{h.hexdigest()[:16]}")
+    stage = os.path.join(tempfile.gettempdir(), f"{base}__h{_fingerprint(sf_dir, 'events')}")
     done = os.path.join(stage, "_STAGED")
     if not os.path.exists(done):
         tmp = tempfile.gettempdir()

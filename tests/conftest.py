@@ -12,12 +12,9 @@ import duckdb
 import pytest
 
 from sow_pyspark_scripts_spark.session import get_spark
+from sow_pyspark_scripts_spark.sources import TABLES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
 
 
 @pytest.fixture(scope="session")

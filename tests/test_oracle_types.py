@@ -23,12 +23,9 @@ from sow_pyspark_scripts_spark.registry import (
     _ORACLE_BIGINT_CASTS,
     resolved_oracles,
 )
+from sow_pyspark_scripts_spark.sources import TABLES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TYPE_LINT_SF", "/root/testdata/sf0.001")
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 # The driver hashes these scalar types portably; anything else a new
 # oracle emits should be reviewed (and either allowed here or cast).

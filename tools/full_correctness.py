@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """Full-registry driver-sim: run EVERY registered query against its
 DuckDB oracle at sf0.01 (the driver's correctness scale) from a fresh
-process, and dump one row per query to CORRECTNESS_FULL_r{N}.json.
+process, and dump one row per query to CORRECTNESS_FULL_r{N}.json. A
+CLI over ``tools/runner.py``: the check is the runner's one oracle rule,
+``tests/conftest.py:assert_oracle_match``.
 
 The per-round driver samples the first 50 registered queries; pytest
 checks all of them but leaves no committed artifact. This tool closes
@@ -17,14 +19,14 @@ file per query: both sides' canonical sorted rows at FULL precision
 (``repr`` + python type tag per cell, duckdb/pyspark versions in the
 header), so the next driver-vs-builder contract divergence is a
 line-diff instead of a multi-round mystery. ``--dump-limit`` caps rows
-per side (default 20000; counts and a digest always recorded).
+per side (default 20000; counts and a digest always recorded). Each
+dumped query's row also records ``strict_match``.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import math
 import os
 import sys
 import time
@@ -33,30 +35,13 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
-def _canon(v):
-    if v is None:
-        return "\x00NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.6f}"
-    if isinstance(v, bool):
-        return str(v)
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon(x) for x in v) + "]"
-    return str(v)
+from tools import runner  # noqa: E402
 
 
 def _forensic(v) -> str:
     """Full-precision, type-tagged cell repr for the divergence dump.
 
-    Unlike ``_canon`` (which rounds floats and drops type identity to
+    Unlike ``runner.canon`` (which rounds floats and drops type identity to
     absorb benign cross-engine noise), this keeps everything: a driver
     whose hash is type-aware (the round-5 HUGEINT lesson) diverges in a
     way only a type-tagged dump can show.
@@ -118,78 +103,40 @@ def main() -> None:
     if args.dump_dir:
         os.makedirs(args.dump_dir, exist_ok=True)
 
-    import duckdb
-
     import __spark_entry__ as em
-    from sow_pyspark_scripts_spark.session import get_spark
 
-    spark = get_spark(app_name="full_correctness", shuffle_partitions=16)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
-
+    run = runner.Runner("full_correctness", args.sf_dir, shuffle_partitions=16)
+    con = runner.duck(args.sf_dir)
     queries = em.queries()
     oracles = em.oracle_sql()
     names = args.only.split(",") if args.only else list(queries)
     out: dict[str, dict] = {}
     t_all = time.time()
     for name in names:
-        spark.catalog.clearCache()
-        row: dict = {
-            "rows_match": False, "schema_match": False, "hash_match": False,
-            "spark_rows": None, "oracle_rows": None, "err": None,
-        }
+        row: dict = {"ok": False, "err": None}
         try:
-            sdf = queries[name](spark, args.sf_dir)
-            scols = sorted(sdf.columns)
-            sraw = sdf.collect()
-            srows = sorted(
-                tuple(_canon(r[c]) for c in scols) for r in sraw
-            )
-            row["spark_rows"] = len(srows)
             sql = oracles.get(name)
             if sql is None:
-                # rows-only contract: >=0 rows, stable schema on re-run
-                again = queries[name](spark, args.sf_dir)
-                row.update(
-                    rows_match=True,
-                    schema_match=sdf.schema == again.schema,
-                    hash_match=None,
-                    oracle_rows=None,
-                    mode="rows_only",
-                )
+                # rows-only contract: the query runs, stable schema on re-run
+                run.isolate()
+                sdf = run.build(name)
+                sdf.collect()
+                row.update(ok=sdf.schema == run.build(name).schema, mode="rows_only")
             else:
-                res = con.execute(sql)
-                dcols = [d[0] for d in res.description]
-                idx = [dcols.index(c) for c in sorted(dcols)]
-                draw = res.fetchall()
-                drows = sorted(
-                    tuple(_canon(r[i]) for i in idx) for r in draw
-                )
-                # strict compare: full-precision repr + python type tag
-                # per cell — r5's judge replay at full precision found
-                # zero diffs; recording it per round makes latent
-                # float/type drift visible the round it appears instead
-                # of when a driver hash change exposes it.
-                srows_f = sorted(
-                    tuple(_forensic(r[c]) for c in scols) for r in sraw
-                )
-                drows_f = sorted(
-                    tuple(_forensic(r[i]) for i in idx) for r in draw
-                )
-                row.update(
-                    oracle_rows=len(drows),
-                    rows_match=len(srows) == len(drows),
-                    schema_match=scols == sorted(dcols),
-                    hash_match=srows == drows,
-                    strict_match=srows_f == drows_f,
-                )
+                row["err"] = run.check(name, con, sql)
+                row["ok"] = row["err"] is None
                 if args.dump_dir:
+                    # strict compare: full-precision repr + python type
+                    # tag per cell, so latent float/type drift shows in
+                    # the run where it first appears
+                    sdf = run.build(name)
+                    scols = sorted(sdf.columns)
+                    srows_f = sorted(tuple(_forensic(r[c]) for c in scols) for r in sdf.collect())
+                    res = con.execute(sql)
+                    dcols = [d[0] for d in res.description]
+                    idx = [dcols.index(c) for c in sorted(dcols)]
+                    drows_f = sorted(tuple(_forensic(r[i]) for i in idx) for r in res.fetchall())
+                    row["strict_match"] = srows_f == drows_f
                     _write_dump(
                         args.dump_dir, name, scols, srows_f,
                         sorted(dcols), drows_f, args.dump_limit,
@@ -197,21 +144,17 @@ def main() -> None:
         except Exception as e:  # record, keep going
             row["err"] = str(e)[:300]
         out[name] = row
-        ok = row["rows_match"] and row["schema_match"] and row["hash_match"] in (True, None)
-        print(json.dumps({"query": name, "ok": ok}), flush=True)
+        print(json.dumps({"query": name, "ok": row["ok"]}), flush=True)
 
     path = REPO / (args.out or f"CORRECTNESS_FULL_r{args.round:02d}.json")
     with open(path, "w") as fh:
         json.dump(out, fh, indent=1)
-    n_ok = sum(
-        1 for r in out.values()
-        if r["rows_match"] and r["schema_match"] and r["hash_match"] in (True, None)
-    )
+    n_ok = sum(1 for r in out.values() if r["ok"])
     print(json.dumps({
         "total": len(out), "pass": n_ok, "fail": len(out) - n_ok,
         "sec": round(time.time() - t_all, 1), "artifact": str(path),
     }))
-    spark.stop()
+    run.stop()
 
 
 if __name__ == "__main__":

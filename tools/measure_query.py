@@ -1,58 +1,36 @@
-"""Per-query optimization instrument (round 8): isolated timing + plan capture.
+"""Per-query optimization instrument: isolated timing + plan capture, a
+CLI over ``tools/runner.py``.
 
-For each named query: clear cache, release pins, one unmeasured warm
-pass (codegen/page-cache), one measured pass through the noop sink
-(guide §1.4), then dump ``.explain("formatted")`` to a file with the
-process-global counters normalised (see ``normalise_plan``), so two
-captures compare with plain ``diff``. GEMM
-canaries bracket the run (BASELINE.md healthy reference ~0.06/0.9-1.1)
-so a throttled host is visible in the artifact itself.
+For each named query: one unmeasured warm pass (codegen/page-cache),
+then ``--repeat`` measured passes through the noop sink (guide §1.4),
+each after the runner's isolation step; then dump
+``.explain("formatted")`` to a file with the process-global counters
+normalised (``runner.normalise_plan``), so two captures compare with
+plain ``diff``. GEMM canaries bracket the run (BASELINE.md healthy
+reference ~0.06/0.9-1.1) so a throttled host is visible in the artifact
+itself.
 
 Usage:
   python tools/measure_query.py NAME [NAME ...] [--sf-dir DIR]
       [--plans-out DIR] [--suffix before|after] [--repeat N]
 
 Writes one JSON line per query: {"query":..., "sec":[...], "plan": path}
-and a final summary line with the canaries.
+plus the runner's layered record of the last measured pass (build_s,
+materialize_s, leaked_rdds and the event-log counters), and a final
+summary line with the canaries and the event-log job attribution.
 """
 
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
-import re
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-
-# Counters a plan string takes from the JVM rather than from the query:
-# expression ids (#12), plan ids, RDD ids and the
-# lambda variables of higher-order functions (x_18, y_3). They move with
-# whatever ran earlier in the process, e.g. an ANN index build.
-_PLAN_COUNTERS = (
-    (re.compile(r"#\d+"), "#N"),
-    (re.compile(r"plan_id=\d+"), "plan_id=N"),
-    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
-    (re.compile(r"\b([xy])_\d+\b"), r"\1_N"),
-)
-
-
-def normalise_plan(plan: str) -> str:
-    """``plan`` with the process-global counters replaced by ``N``."""
-    for pat, repl in _PLAN_COUNTERS:
-        plan = pat.sub(repl, plan)
-    return plan
-
-
-def _canary() -> dict:
-    import bench
-
-    return bench._cpu_microbench()
+from tools import runner  # noqa: E402
 
 
 def main() -> None:
@@ -73,56 +51,32 @@ def main() -> None:
         ap.error("--explain-only requires --plans-out (ADVICE r8: "
                  "otherwise the loop records neither timing nor plan)")
 
-    from sow_pyspark_scripts_spark import registry
-    from sow_pyspark_scripts_spark.functions.pin import release_pins
-    from sow_pyspark_scripts_spark.session import get_spark
-
-    pre = _canary()
-    spark = get_spark(app_name="measure_query")
-    spark.sparkContext.setLogLevel("ERROR")
-
+    pre = runner.canary()
+    run = runner.Runner("measure_query", args.sf_dir, event_log=True)
     out = []
     for name in args.names:
-        if name not in registry.QUERIES:
-            print(json.dumps({"query": name, "error": "unknown"}))
+        if name not in runner.registry.QUERIES:
+            out.append({"query": name, "error": "unknown"})
             continue
-        release_pins(spark)
-        spark.catalog.clearCache()
-        gc.collect()
-        rec: dict = {"query": name}
-        try:
-            if not args.no_warm and not args.explain_only:
-                registry.QUERIES[name](spark, args.sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            secs = []
-            for _ in range(0 if args.explain_only else args.repeat):
-                release_pins(spark)
-                spark.catalog.clearCache()
-                gc.collect()
-                spark.sparkContext.setJobGroup(f"measure:{name}", name)
-                t0 = time.perf_counter()
-                registry.QUERIES[name](spark, args.sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                secs.append(round(time.perf_counter() - t0, 3))
-                spark.sparkContext.setJobGroup("", "")
-            rec["sec"] = secs
-            if args.plans_out:
-                Path(args.plans_out).mkdir(parents=True, exist_ok=True)
-                suffix = f"_{args.suffix}" if args.suffix else ""
-                plan = registry.QUERIES[name](spark, args.sf_dir)._jdf.queryExecution().explainString(
-                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-                )
-                p = Path(args.plans_out) / f"{name}{suffix}.txt"
-                p.write_text(normalise_plan(plan))
+        if args.explain_only:
+            rec = {"query": name, "sec": []}
+        else:
+            rec = run.run(name, warm=0 if args.no_warm else 1, repeat=args.repeat)
+        out.append(rec)
+        if args.plans_out and "error" not in rec:
+            Path(args.plans_out).mkdir(parents=True, exist_ok=True)
+            suffix = f"_{args.suffix}" if args.suffix else ""
+            p = Path(args.plans_out) / f"{name}{suffix}.txt"
+            try:
+                p.write_text(run.explain(name))
                 rec["plan"] = str(p)
-        except Exception as exc:  # noqa: BLE001 — recorded per query
-            rec["error"] = f"{type(exc).__name__}: {exc}"[:300]
+            except Exception as exc:  # noqa: BLE001 — recorded per query
+                rec["error"] = f"{type(exc).__name__}: {exc}"[:300]
+    post = runner.canary()
+    attribution = run.stop()
+    for rec in out:
         print(json.dumps(rec))
-        sys.stdout.flush()
-    post = _canary()
-    print(json.dumps({"canary_pre": pre, "canary_post": post, "sf_dir": args.sf_dir}))
+    print(json.dumps({"canary_pre": pre, "canary_post": post, "sf_dir": args.sf_dir, **attribution}))
 
 
 if __name__ == "__main__":

@@ -16,6 +16,9 @@ each fix pinned ONE site; this tool enumerates the class. Two passes:
    result multisets. Any difference is exactly the driver-flake class:
    a value that depends on the engine's parallel sum order.
 
+A CLI over ``tools/runner.py``: the DuckDB views and the cell canon are
+the runner's (those of the oracle rule).
+
 Usage: python tools/oracle_thread_sweep.py [--sf-dir DIR]
 Writes DETERMINISM_SWEEP.json at the repo root; prints one summary line.
 """
@@ -24,7 +27,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import math
 import re
 import sys
 import time
@@ -33,10 +35,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+from tools import runner  # noqa: E402
 
 # Pinned forms emitted by functions/det.py helpers (exact integer sums —
 # associative, no order exposure) and other exact-by-construction sums.
@@ -74,28 +73,12 @@ def lint_oracle(sql: str) -> list[str]:
     return hits
 
 
-def _canon(v):
-    if v is None:
-        return "\x00NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.6f}"
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon(x) for x in v) + "]"
-    return str(v)
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     args = ap.parse_args()
 
-    import duckdb
-
-    from sow_pyspark_scripts_spark.registry import resolved_oracles
-
-    oracles = resolved_oracles()
+    oracles = runner.registry.resolved_oracles()
     t0 = time.time()
 
     lint = {name: lint_oracle(sql) for name, sql in oracles.items()}
@@ -103,17 +86,12 @@ def main() -> int:
 
     results = {}
     for threads in (1, 32):
-        con = duckdb.connect()
+        con = runner.duck(args.sf_dir)
         con.execute(f"SET threads={threads}")
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{args.sf_dir}/{t}.parquet')"
-            )
         for name, sql in oracles.items():
             try:
                 rows = con.execute(sql).fetchall()
-                key = sorted(tuple(_canon(c) for c in r) for r in rows)
+                key = sorted(tuple(runner.canon(c) for c in r) for r in rows)
             except Exception as e:  # noqa: BLE001 — recorded, not hidden
                 key = f"ERROR: {e}"
             results.setdefault(name, {})[threads] = key

@@ -10,7 +10,8 @@ and whether a global top-k uses TakeOrderedAndProject. Queries with
 eager side effects (format writes, streaming drains) are compiled too —
 their side effect at sf0.001 is cheap — so the table is complete.
 
-Run: python tools/plan_report.py  (rewrites PLANS.md)
+A CLI over ``tools/runner.py`` (its session; plans are compiled, not
+run). Run: python tools/plan_report.py  (rewrites PLANS.md)
 """
 
 from __future__ import annotations
@@ -20,6 +21,8 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools import runner  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -60,16 +63,11 @@ def _strip_cached_subtrees(plan: str) -> str:
 
 
 def main() -> None:
-    import __spark_entry__ as em
-    from sow_pyspark_scripts_spark.session import get_spark
-
-    spark = get_spark(app_name="plan_report", master="local[8]", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-
+    run = runner.Runner("plan_report", SF_DIR, master="local[8]", shuffle_partitions=8)
     rows = []
-    for name, fn in sorted(em.queries().items()):
+    for name in sorted(runner.registry.QUERIES):
         try:
-            plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+            plan = run.build(name)._jdf.queryExecution().executedPlan().toString()
             plan = _strip_cached_subtrees(plan)
         except Exception as e:  # noqa: BLE001
             rows.append((name, None, str(e)[:60]))
@@ -111,7 +109,8 @@ def main() -> None:
         )
     if errs:
         lines += ["", "## Compile errors", *errs]
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    run.stop()
+    out = os.path.join(runner.REPO, "PLANS.md")
     with open(out, "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"wrote {out}: {len(rows)} queries")

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Full-registry EXECUTION sweep at a given scale factor, with a
-built-in post-throttle tail recheck.
+built-in post-throttle tail recheck: a CLI over ``tools/runner.py``.
 
 Round-7 lesson (VERDICT r7 "What's wrong" #4): a 30-minute sustained
 sweep throttles this host, so the slowest-tail entries mix genuine
@@ -19,8 +19,10 @@ Usage:
 Writes one JSON artifact at the repo root (default
 ``SF01_RUNSWEEP_r{N}.json``) with: per-query seconds, interleaved GEMM
 canary readings (host-throttle attribution), the slowest tail, and the
-recheck table. Execution-only (``.count()``), no oracle compare — the
-value-parity twin is ``tools/full_correctness.py --sf-dir ... --out
+recheck table. Execution-only: each query is one timed build plus noop
+write after the runner's isolation step, and ``leaked_rdds`` counts the
+persistent RDDs left after the release step that ends it; no oracle
+compare — the value-parity twin is ``tools/full_correctness.py --sf-dir ... --out
 CORRECTNESS_SF01_r{N}.json``; together they form the standing
 per-round sf0.1 gate (VERDICT r7 task #1).
 """
@@ -28,7 +30,6 @@ per-round sf0.1 gate (VERDICT r7 task #1).
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import sys
 import time
@@ -37,20 +38,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-
-def canary() -> dict:
-    """bench.py's host-throttle canary (fixed-work GEMM probe)."""
-    import bench
-
-    return bench._cpu_microbench()
-
-
-def run_one(spark, qs, name, sf_dir):
-    spark.catalog.clearCache()
-    gc.collect()  # release localCheckpoint RDD refs (battery lesson r6)
-    t = time.time()
-    n = qs[name](spark, sf_dir).count()
-    return round(time.time() - t, 2), n
+from tools import runner  # noqa: E402
 
 
 def main() -> None:
@@ -63,32 +51,17 @@ def main() -> None:
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
-    import __spark_entry__ as em
-    from sow_pyspark_scripts_spark.session import get_spark
+    run = runner.Runner("run_sweep", args.sf_dir)
+    names = sorted(runner.registry.QUERIES) if not args.only else args.only.split(",")
 
-    spark = get_spark()
-    qs = em.queries()
-    names = sorted(qs) if not args.only else args.only.split(",")
-
-    canaries = {"pre": canary()}
-    sec_by_query: dict[str, float] = {}
-    errors: dict[str, str] = {}
+    pre = runner.canary()
     t_all = time.time()
-    for i, name in enumerate(names):
-        if i and i % 25 == 0:
-            canaries[f"q{i}"] = canary()
-            print(json.dumps({"canary": canaries[f"q{i}"], "at": i}))
-            sys.stdout.flush()
-        try:
-            sec, n = run_one(spark, qs, name, args.sf_dir)
-            sec_by_query[name] = sec
-            print(json.dumps({"query": name, "sec": sec, "rows": n}))
-        except Exception as e:  # noqa: BLE001 — record, keep sweeping
-            errors[name] = str(e)[:300]
-            print(json.dumps({"query": name, "error": errors[name]}))
-        sys.stdout.flush()
+    recs, canaries = runner.sweep(run, names, canary_every=25)
     total = round(time.time() - t_all, 1)
-    canaries["post"] = canary()
+    canaries = {"pre": pre, **canaries, "post": runner.canary()}
+    sec_by_query = {r["query"]: r["sec"][-1] for r in recs if "error" not in r}
+    errors = {r["query"]: r["error"] for r in recs if "error" in r}
+    leaked = {r["query"]: r["leaked_rdds"] for r in recs if r["leaked_rdds"]}
 
     slowest = sorted(sec_by_query.items(), key=lambda kv: -kv[1])
     tail = [n for n, _ in slowest[: args.tail_recheck]]
@@ -98,20 +71,21 @@ def main() -> None:
     print(json.dumps({"cooldown_sec": args.cooldown_sec}))
     sys.stdout.flush()
     time.sleep(args.cooldown_sec)
-    recheck = {"canary_pre": canary(), "sec_by_query": {}}
+    recheck = {"canary_pre": runner.canary(), "sec_by_query": {}}
     for name in tail:
-        try:
-            sec, _ = run_one(spark, qs, name, args.sf_dir)
+        rec = run.run(name)
+        if "error" in rec:
+            recheck["sec_by_query"][name] = {"error": rec["error"]}
+        else:
             recheck["sec_by_query"][name] = {
                 "in_sweep": sec_by_query[name],
-                "recheck": sec,
+                "recheck": rec["sec"][-1],
             }
-            print(json.dumps({"recheck": name, "sec": sec,
+            print(json.dumps({"recheck": name, "sec": rec["sec"][-1],
                               "in_sweep": sec_by_query[name]}))
-        except Exception as e:  # noqa: BLE001
-            recheck["sec_by_query"][name] = {"error": str(e)[:300]}
         sys.stdout.flush()
-    recheck["canary_post"] = canary()
+    recheck["canary_post"] = runner.canary()
+    run.stop()
 
     artifact = {
         "sf": args.sf_dir,
@@ -120,8 +94,9 @@ def main() -> None:
         "total_sec": total,
         "note": (
             "every registered query executed once (execution sweep, "
-            ".count(), no oracle compare); single warm session, "
-            "alphabetical order, cache cleared per query; slowest "
+            "timed build + noop write, no oracle compare); single warm "
+            "session, alphabetical order, runner isolation step per "
+            "query; slowest "
             f"{args.tail_recheck} re-run in isolation after a "
             f"{args.cooldown_sec}s cooldown (post_throttle_recheck) so "
             "load-band artifacts are separable from genuine walls "
@@ -129,6 +104,8 @@ def main() -> None:
         ),
         "canaries": canaries,
         "slowest": [{n: s} for n, s in slowest[:25]],
+        # persistent RDDs left after each query's release step (only > 0)
+        "leaked_rdds": leaked,
         "post_throttle_recheck": recheck,
         "sec_by_query": dict(sorted(sec_by_query.items())),
     }

@@ -11,8 +11,12 @@ beside the sf0.1 relational tables, and run the heavy corpus operators
 end-to-end. Near-linear wall-clock vs the sf0.1 numbers = the
 partition strategy holds; anything super-linear is a design bug to fix.
 
+A CLI over ``tools/runner.py``: its session (``get_spark`` at
+``local[32]``, 64 shuffle partitions, a 48g heap), its isolation step
+and its timed build plus noop write.
+
 Usage: python tools/scale_smoke.py [--mult 100] [--out /tmp/scale_smoke]
-Writes one JSON line per query: {"query": ..., "sec": ..., "rows": ...}
+Writes one JSON line per query: {"query": ..., "sec": ..., "leaked_rdds": ...}
 and a final summary line. Not part of the default pytest suite (runtime
 is minutes, not seconds); results are recorded in BASELINE.md.
 """
@@ -30,6 +34,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from tools import runner  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 
@@ -207,59 +213,30 @@ def main() -> None:
     ap.add_argument("--queries", default=None, help="comma-separated subset")
     args = ap.parse_args()
 
-    import __spark_entry__ as em
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
     out = Path(args.out) / f"x{args.mult}"
+    run = runner.Runner(
+        "scale_smoke", str(out), master="local[32]", shuffle_partitions=64,
+        extra_conf={"spark.driver.memory": "48g"},
+    )
     t0 = time.time()
-    synth(spark, out, args.mult)
+    synth(run.spark, out, args.mult)
     print(json.dumps({"synth_sec": round(time.time() - t0, 1), "mult": args.mult}))
 
-    qs = em.queries()
     names = args.queries.split(",") if args.queries else QUERIES
-    results = {}
-
     # bench.py's host-throttle canary, interleaved every few queries.
     # Round 7 finding: the host throttles under SUSTAINED load and
     # recovers at idle, so bracketing canaries read healthy while
     # mid-battery entries inflate 10-50x (measured: embedding_pq_encode
     # 162.7s in-battery vs 6.8-19.8s isolated same boot). Interleaving
-    # the probe makes each row attributable.
-    from bench import _cpu_microbench as canary
-
-    print(json.dumps({"canary": canary(), "at": "pre"}))
-    for i, name in enumerate(names):
-        if i and i % 5 == 0:
-            print(json.dumps({"canary": canary(), "at": i}))
-            sys.stdout.flush()
-        # isolate queries: drop persisted blocks left by the previous one
-        # (Spark's CacheManager matches canonicalized plans, so leftovers
-        # can both aid and crowd out later queries — measured 3s -> 30s
-        # drift on late battery entries before this)
-        spark.catalog.clearCache()
-        import gc
-
-        gc.collect()  # release localCheckpoint RDD refs so ContextCleaner
-        # frees their blocks — clearCache alone leaves them resident and
-        # late-battery entries inflate up to 3x from block-manager pressure
-        t = time.time()
-        try:
-            n = qs[name](spark, str(out)).count()
-            sec = round(time.time() - t, 2)
-            results[name] = sec
-            print(json.dumps({"query": name, "sec": sec, "rows": n}))
-        except Exception as e:  # report, keep going
-            print(json.dumps({"query": name, "error": str(e)[:200]}))
-        sys.stdout.flush()
-    print(json.dumps({"canary": canary(), "at": "post"}))
-    print(json.dumps({"total_sec": round(sum(results.values()), 1), "n": len(results)}))
+    # the probe makes each row attributable. Each query runs after the
+    # runner's isolation step: leftover persisted blocks and
+    # localCheckpoints otherwise inflated late battery entries 3-10x.
+    print(json.dumps({"canary": runner.canary(), "at": "pre"}))
+    recs, _ = runner.sweep(run, names, canary_every=5)
+    print(json.dumps({"canary": runner.canary(), "at": "post"}))
+    run.stop()
+    secs = [r["sec"][-1] for r in recs if "error" not in r]
+    print(json.dumps({"total_sec": round(sum(secs), 1), "n": len(secs)}))
 
 
 if __name__ == "__main__":

@@ -18,6 +18,10 @@ Near-linear wall-clock vs the sf0.1 bench numbers = the partition
 strategy holds; anything super-linear is a design bug to fix (round 2's
 smoke caught two). Results are recorded in BASELINE.md.
 
+A CLI over ``tools/runner.py``: its session (``get_spark`` at
+``local[32]``, 64 shuffle partitions, a 48g heap), its isolation step
+and its timed build plus noop write.
+
 Usage: python tools/scale_smoke_relational.py [--mult 10] [--out /tmp/scale_rel]
 Writes one JSON line per query and a final summary line.
 """
@@ -35,6 +39,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from tools import runner  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 
@@ -151,42 +157,23 @@ def main() -> None:
     ap.add_argument("--queries", default=None, help="comma-separated subset")
     args = ap.parse_args()
 
-    import __spark_entry__ as em
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
     out = Path(args.out) / f"x{args.mult}"
+    run = runner.Runner(
+        "scale_smoke_relational", str(out), master="local[32]", shuffle_partitions=64,
+        extra_conf={"spark.driver.memory": "48g"},
+    )
     t0 = time.time()
-    synth(spark, out, args.mult)
+    synth(run.spark, out, args.mult)
     print(json.dumps({"synth_sec": round(time.time() - t0, 1), "mult": args.mult}))
 
-    qs = em.queries()
-    import gc
-
     names = args.queries.split(",") if args.queries else list(dict.fromkeys(QUERIES))
-    results = {}
-    for name in names:
-        # isolate: no cross-query cache reuse, and GC so ContextCleaner
-        # frees localCheckpoint blocks (clearCache alone leaves them
-        # resident — late-battery entries inflate from block pressure)
-        spark.catalog.clearCache()
-        gc.collect()
-        t = time.time()
-        try:
-            n = qs[name](spark, str(out)).count()
-            sec = round(time.time() - t, 2)
-            results[name] = sec
-            print(json.dumps({"query": name, "sec": sec, "rows": n}))
-        except Exception as e:  # report, keep going
-            print(json.dumps({"query": name, "error": str(e)[:200]}))
-        sys.stdout.flush()
-    print(json.dumps({"total_sec": round(sum(results.values()), 1), "n": len(results)}))
+    # each query runs after the runner's isolation step: no cross-query
+    # cache reuse, and localCheckpoint blocks freed (late-battery
+    # entries otherwise inflate from block pressure)
+    recs, _ = runner.sweep(run, names)
+    run.stop()
+    secs = [r["sec"][-1] for r in recs if "error" not in r]
+    print(json.dumps({"total_sec": round(sum(secs), 1), "n": len(secs)}))
 
 
 if __name__ == "__main__":
