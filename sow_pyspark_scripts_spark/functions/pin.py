@@ -23,17 +23,14 @@ plan decision (ADVICE r4 #2):
   tracked per-session; call :func:`release_pins` when the query's
   results are consumed (bench.py does this per query) so the
   CacheManager never accumulates.
-- ``checkpoint`` — reliable checkpoint (fault-tolerant AND
-  lineage-truncating) to ``spark.sowps.checkpointDir``; for iterative
-  plans whose lineage would otherwise explode on a real cluster.
 
-Select with ``spark.conf.set("spark.sowps.pinMode", ...)``. When the
-conf is UNSET the default is master-aware (VERDICT r5 deployment-
-posture flag): ``localCheckpoint`` on a ``local[*]`` master (executor
-loss is application loss there, and bench sessions need the bounded-
-CacheManager property), ``persist`` on anything else — a cluster
-deployment that never sets the conf gets the recompute-safe mode, not
-the non-replicated-blocks one. Call sites use ``df.transform(pin)``
+Select one of the two with ``spark.conf.set("spark.sowps.pinMode",
+...)``; any other value raises. When the conf is UNSET the default is
+master-aware (VERDICT r5 deployment-posture flag): ``localCheckpoint``
+on a ``local[*]`` master (executor loss is application loss there, and
+bench sessions need the bounded-CacheManager property), ``persist`` on
+anything else — a cluster deployment that never sets the conf gets the
+recompute-safe mode, not the non-replicated-blocks one. Call sites use ``df.transform(pin)``
 (or ``pin_eager``), so plan code stays chain-shaped and mode-agnostic.
 """
 
@@ -75,11 +72,8 @@ def _pin(df: DataFrame, eager: bool) -> DataFrame:
         if eager:
             out.count()
         return out
-    if mode == "checkpoint":
-        ckdir = spark.conf.get("spark.sowps.checkpointDir", None)
-        if ckdir and spark.sparkContext.getCheckpointDir() is None:
-            spark.sparkContext.setCheckpointDir(ckdir)
-        return df.checkpoint(eager=eager)
+    if mode != "localCheckpoint":
+        raise ValueError(f"spark.sowps.pinMode: unknown mode {mode!r}")
     out = df.localCheckpoint(eager=eager)
     _PINNED.setdefault(_session_key(spark), []).append(_rdd_id(out))
     return out
@@ -114,11 +108,10 @@ def pin_eager(df: DataFrame) -> DataFrame:
     broadcast) immediately after, and by iterative operators whose
     next round must start from a bounded plan.
 
-    Every mode cuts the LOGICAL plan: in ``persist`` mode the output is
+    Both modes cut the LOGICAL plan: in ``persist`` mode the output is
     rebuilt as ``createDataFrame(rdd, schema)`` on the JVM side, so its
-    plan is a ``LogicalRDD`` leaf (as ``localCheckpoint`` and
-    ``checkpoint`` give), then persisted and tracked for
-    :func:`release_pins`. Unlike the checkpoint modes the RDD keeps its
+    plan is a ``LogicalRDD`` leaf (as ``localCheckpoint`` gives), then
+    persisted and tracked for :func:`release_pins`. Unlike ``localCheckpoint`` the RDD keeps its
     lineage, so a lost block recomputes. Without the cut, a loop that
     reads its previous output more than once per round grows its plan
     geometrically."""
@@ -135,8 +128,7 @@ def release_pins(spark) -> int:
     """Free every frame pinned for this session since the last release:
     unpersist the ``persist``-mode frames and the ``localCheckpoint``
     RDDs. Returns the number released. Call it only once the pinned
-    frames' results are consumed. ``checkpoint`` mode keeps its files
-    (the checkpoint dir owns them)."""
+    frames' results are consumed."""
     pins = _PINNED.pop(_session_key(spark), [])
     for p in pins:
         try:

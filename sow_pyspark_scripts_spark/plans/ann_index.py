@@ -31,11 +31,12 @@ base corpus only — no base re-encoding, no codebook drift. Cells with
 no base member surface as ``n_missing`` (the production signal to
 retrain).
 
-Staging: the index lives under the system tempdir, keyed by the sf_dir
-AND a content fingerprint of ``embeddings.parquet`` (file names, sizes,
-mtimes) — regenerating a fixture can never serve a stale index (the
-failure mode ADVICE flagged on the streaming staging). Stale siblings
-of the same fixture are deleted on rebuild.
+Staging: the index lives under ``<tmp>/spark_ann_index``, built once
+and committed through `sources/staging.stage` — the one build-and-rename
+protocol for derived artifacts, shared with the staged stream sources.
+The dir name embeds a content fingerprint of the source table, so
+regenerating a fixture can never serve a stale index, and a miss sweeps
+stale siblings of the same fixture and kind.
 
 Reference scope note: the reference repo (sbhatm1213/sow-pyspark-scripts)
 persists derived artifacts for downstream reads the same way —
@@ -48,9 +49,7 @@ from __future__ import annotations
 
 from ..functions.pin import pin as _pin_lazy, pin_eager as _pin_eager, unpin
 
-import hashlib
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +58,10 @@ from pyspark.sql import functions as F
 from ..functions.det import d2_grid_sql, d2r6_grid_sql, r6
 from ..registry import query
 from ..sources import read_table
+from ..sources.staging import MARKER as _MARKER  # noqa: F401 — read by the index tests
+from ..sources.staging import fingerprint as _fingerprint  # noqa: F401 — likewise
+from ..sources.staging import sf_tag, stage, staged_path
+from ..streaming.pipeline import drain_batches
 from .pq_common import (
     _IVFADC_MP_ORACLE,
     _IVFADC_ORACLE,
@@ -84,49 +87,12 @@ from .pq_common import (
     adc_topk,
 )
 
-_MARKER = "_INDEX_DONE"
-# Bump whenever the set/layout OR the numerics of index tables change:
-# the version is part of the staging dir name, so an index built by
-# older code can never satisfy a reader expecting newer tables
-# (v2 added the ivfadc_codes/ivfadc_codebook residual layer; v3 pinned
-# IVF centroids and PQ codewords to the exact-integer 1e-6 grid mean —
-# functions/det.mean_grid — the round-3 semdedup determinism fix; v4
-# pinned the REMAINING index numerics to exact integer grid arithmetic —
-# quantized PQ sign projections, integer d2 in the coarse assignment,
-# d2r6 qerr — the round-5 repo-wide close of the flake class; v5 added
-# the stored DSIR layer to the doc index: dsir_doc_buckets +
-# dsir_bucket_lr, VERDICT r4 task #3; v6 switched pq_codebook/pq code
-# paths to INTEGER grid-unit arrays — quantized once at the source, so
-# ADC luts are pure integer diffs, not per-pair re-quantizations).
-_INDEX_VERSION = 6
-
-
-def _fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    """Content fingerprint of one fixture table: names + sizes + mtimes
-    of every file under <table>.parquet. Cheap (os.stat only) and
-    changes whenever the fixture is regenerated."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    h = hashlib.md5()
-    if os.path.isdir(src):
-        for p in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, p))
-            h.update(f"{p}:{st.st_size}:{st.st_mtime_ns};".encode())
-    else:
-        st = os.stat(src)
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:16]
-
-
-def _index_root() -> str:
-    return os.path.join(tempfile.gettempdir(), "spark_ann_index")
+def _index_prefix(sf_dir: str, kind: str) -> str:
+    return os.path.join(tempfile.gettempdir(), "spark_ann_index", f"{sf_tag(sf_dir)}_{kind}")
 
 
 def _index_dir(sf_dir: str, kind: str = "ann", table: str = "embeddings") -> str:
-    name = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    return os.path.join(
-        _index_root(),
-        f"{name}_{kind}_v{_INDEX_VERSION}_{_fingerprint(sf_dir, table)}",
-    )
+    return staged_path(_index_prefix(sf_dir, kind), sf_dir, table)
 
 
 def build_ann_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
@@ -212,79 +178,12 @@ def build_ann_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
         for f in futures:
             f.result()
     spark.sparkContext.setJobDescription(None)
-    open(os.path.join(out_dir, _MARKER), "w").close()
-
-
-def _ensure_index(
-    spark: SparkSession,
-    sf_dir: str,
-    builder,
-    rebuild: bool = False,
-    kind: str = "ann",
-    table: str = "embeddings",
-) -> str:
-    """Return the ``kind`` index dir for ``sf_dir``, building via
-    ``builder(spark, sf_dir, dir)`` if absent (or if ``rebuild``). The
-    dir name embeds the fixture fingerprint, so a regenerated fixture
-    gets a fresh build; stale siblings of the same fixture+kind are
-    removed. ``rebuild`` replaces a committed dir: the old one is renamed
-    aside, the new build renamed in, and the old one removed."""
-    d = _index_dir(sf_dir, kind, table)
-    if rebuild or not os.path.exists(os.path.join(d, _MARKER)):
-        # Sweep stale siblings of THIS fixture+kind across any version /
-        # fingerprint. Matching is a full-name regex, not a bare prefix:
-        # the r4 ADVICE showed prefix matching still collides with a
-        # DIFFERENT fixture whose sanitized name extends this one (e.g.
-        # sf_dir '/data/x' kind 'doc' vs fixture '/data/x_doc_vault' —
-        # 'data_x_doc_vault_doc_v3_…'.startswith('data_x_doc_v')), so the
-        # suffix after '_{kind}_v' must be exactly digits + '_' + the
-        # 16-hex fingerprint for a sibling to be swept.
-        import re as _re
-
-        base = os.path.basename(d)
-        stem = base[: base.rindex(f"_{kind}_v")]
-        pat = _re.compile(
-            _re.escape(stem)
-            + f"_{kind}_v"
-            + r"\d+_[0-9a-f]{16}(\.(build|old)-\d+)?$"  # incl. crashed stagings
-        )
-        root = _index_root()
-        if os.path.isdir(root):
-            for sib in os.listdir(root):
-                if pat.match(sib) and os.path.join(root, sib) != d:
-                    shutil.rmtree(os.path.join(root, sib), ignore_errors=True)
-        # Build into a private staging dir, then one atomic rename (r5):
-        # two sessions racing to build the same fixture previously wrote
-        # into the SAME final dir concurrently — a reader could observe
-        # half-written tables before the marker landed, and overlapping
-        # Spark overwrites could corrupt each other. With rename-commit,
-        # the loser simply discards its build when the winner's marker
-        # is already there — unless this call is a rebuild, which swaps
-        # its build in for the committed one.
-        build, old = f"{d}.build-{os.getpid()}", f"{d}.old-{os.getpid()}"
-        shutil.rmtree(build, ignore_errors=True)
-        os.makedirs(build, exist_ok=True)
-        try:
-            builder(spark, sf_dir, build)
-            if rebuild and os.path.exists(d):
-                os.rename(d, old)
-            if not os.path.exists(os.path.join(d, _MARKER)):
-                try:
-                    os.rename(build, d)
-                except OSError:
-                    # another builder committed first (or a stale empty
-                    # dir exists): keep theirs if complete, else replace
-                    if not os.path.exists(os.path.join(d, _MARKER)):
-                        shutil.rmtree(d, ignore_errors=True)
-                        os.rename(build, d)
-        finally:
-            shutil.rmtree(build, ignore_errors=True)
-            shutil.rmtree(old, ignore_errors=True)
-    return d
 
 
 def ensure_ann_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
-    return _ensure_index(spark, sf_dir, build_ann_index, rebuild)
+    return stage(
+        spark, _index_prefix(sf_dir, "ann"), sf_dir, "embeddings", build_ann_index, rebuild
+    )
 
 
 def build_doc_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
@@ -369,7 +268,6 @@ def build_doc_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
         for f in futures:
             f.result()
     spark.sparkContext.setJobDescription(None)
-    open(os.path.join(out_dir, _MARKER), "w").close()
 
 
 def stored_all_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,8 +278,8 @@ def stored_all_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ensure_doc_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
-    return _ensure_index(
-        spark, sf_dir, build_doc_index, rebuild, kind="doc", table="documents"
+    return stage(
+        spark, _index_prefix(sf_dir, "doc"), sf_dir, "documents", build_doc_index, rebuild
     )
 
 
@@ -770,37 +668,13 @@ def streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(idx, "minhash_base_bands.parquet")
     ).select(F.col("doc_id").alias("dup_of"), "band_id", "bsig")
 
-    src_dir, out_dir, chk_dir = stage_delta_stream(
-        spark, sf_dir, "spark_stream_delta"
-    )
-
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src_dir)
-    )
-
-    def _probe(bdf: DataFrame, _bid: int) -> None:
+    def _probe(bdf: DataFrame) -> DataFrame:
         delta = band_signatures(
             minhash_signatures(word_shingles(bdf, distinct=False))
         ).select(F.col("doc_id").alias("new_doc"), "band_id", "bsig")
-        (
-            delta.join(base, ["band_id", "bsig"])
-            .select("new_doc", "dup_of")
-            .distinct()
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        return delta.join(base, ["band_id", "bsig"]).select("new_doc", "dup_of").distinct()
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", chk_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).distinct()
+    return drain_batches(spark, *stage_delta_stream(spark, sf_dir, "dedup"), _probe)
 
 
 # ---------------------------------------------------------------------------
@@ -835,29 +709,10 @@ def streaming_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         rollup.where(F.col("doc_id") % 10 != 0)
     ).transform(_pin_lazy)
 
-    src_dir, out_dir, chk_dir = stage_delta_stream(
-        spark, sf_dir, "spark_stream_dsir"
-    )
+    def _score(bdf: DataFrame) -> DataFrame:
+        return dsir_weights_from(bdf.select("doc_id"), dsir_rollup(bdf), lr)
 
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src_dir)
-    )
-
-    def _score(bdf: DataFrame, _bid: int) -> None:
-        w = dsir_weights_from(bdf.select("doc_id"), dsir_rollup(bdf), lr)
-        w.write.mode("append").parquet(out_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", chk_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).distinct()
+    return drain_batches(spark, *stage_delta_stream(spark, sf_dir, "dsir"), _score)
 
 
 # ---------------------------------------------------------------------------
@@ -910,129 +765,29 @@ def dedup_semantic_semdedup_sharded_stored(
     return _semdedup_report(cells, emb, _SEMDEDUP_TAU)
 
 
-# A sibling staging younger than this is assumed LIVE (another session
-# may still be draining it) and is never swept; older ones are debris.
-_STAGE_GRACE_SEC = 3600
+def _stage_delta_src(spark: SparkSession, sf_dir: str, out: str) -> None:
+    delta = read_table(spark, sf_dir, "documents").where(F.col("doc_id") % 10 == 0)
+    delta.repartition(4).write.mode("overwrite").parquet(os.path.join(out, "src"))
 
 
-def stage_delta_stream(
-    spark: SparkSession, sf_dir: str, prefix: str
-) -> tuple[str, str, str]:
-    """Shared micro-batch staging for ALL streaming twins (the single
-    implementation — streaming_dedup_incremental / streaming_dsir_score
-    / streaming_quality_score all route here, so a sweep-regex or
-    _STAGED protocol fix can't silently apply to one copy): write the
-    delta slice of `documents` (doc_id % 10 == 0 — the base/delta
-    convention every incremental query uses) as 4 parquet source files
-    under a fingerprinted, "__v"-separated tempdir, sweep stale
-    same-prefix stagings, and return (src_dir, out_dir, chk_dir) for
-    readStream/foreachBatch drains. Idempotent per fixture: the
-    _STAGED marker skips re-staging within a fingerprint's lifetime.
-
-    Concurrency hardening (ADVICE r5): siblings are swept only when
-    their mtime is older than ``_STAGE_GRACE_SEC`` — a fixture
-    regenerated mid-flight no longer deletes a concurrent session's
-    src/chk from under its drain — and staging itself is guarded by an
-    atomic O_CREAT|O_EXCL lock so two sessions staging the same
-    fixture simultaneously can't interleave overwrite writes; the
-    loser polls for the winner's _STAGED marker instead."""
-    import re as _re
-    import time as _time
-
-    name = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    fp = _fingerprint(sf_dir, "documents")
-    stage = os.path.join(
-        tempfile.gettempdir(), f"{prefix}_{name}__v{_INDEX_VERSION}_{fp}"
+def stage_delta_stream(spark: SparkSession, sf_dir: str, twin: str) -> tuple[str, str, str]:
+    """Micro-batch source shared by the streaming twins
+    (streaming_dedup_incremental / streaming_dsir_score /
+    streaming_quality_score): the delta slice of `documents` (doc_id %
+    10 == 0 — the base/delta convention every incremental query uses),
+    staged once per fixture through `sources/staging.stage` as 4 parquet
+    source files. Returns (src_dir, out_dir, chk_dir) for
+    `streaming/pipeline.drain_batches`; each twin drains into its own
+    ``out_<twin>``/``chk_<twin>`` pair beside the one shared ``src``."""
+    d = stage(
+        spark,
+        os.path.join(tempfile.gettempdir(), f"spark_stream_delta_{sf_tag(sf_dir)}_"),
+        sf_dir,
+        "documents",
+        _stage_delta_src,
     )
-    src_dir = os.path.join(stage, "src")
-    out_dir = os.path.join(stage, "out")
-    chk_dir = os.path.join(stage, "chk")
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
-        tmp = tempfile.gettempdir()
-        # full-name regexes (never a bare prefix — the r4 ADVICE
-        # collision class: a sibling fixture whose sanitized name
-        # extends this one), current "__v" layout plus a transitional
-        # sweep of the pre-r4 single-underscore layout the "__v" rename
-        # orphaned permanently.
-        pats = [
-            _re.compile(
-                _re.escape(f"{prefix}_{name}__v") + r"\d+_[0-9a-f]{16}$"
-            ),
-            _re.compile(
-                _re.escape(f"{prefix}_{name}_v") + r"\d+_[0-9a-f]{16}$"
-            ),
-        ]
-        now = _time.time()
-        for sib in os.listdir(tmp):
-            full = os.path.join(tmp, sib)
-            if full == stage or not any(p.match(sib) for p in pats):
-                continue
-            try:
-                fresh = now - os.path.getmtime(full) < _STAGE_GRACE_SEC
-            except OSError:
-                fresh = False  # vanished mid-listing -> nothing to keep
-            if not fresh:
-                shutil.rmtree(full, ignore_errors=True)
-        os.makedirs(stage, exist_ok=True)
-        lock = os.path.join(stage, "_STAGING")
-        # ADVICE r6: stage ONLY while owning the O_EXCL lock. The old
-        # protocol let a poll-timeout loser fall through to an unlocked
-        # concurrent overwrite and then delete the winner's live lock in
-        # its finally. Now: every path to the write goes through a
-        # successful O_CREAT|O_EXCL acquisition (a stale-break removes
-        # the dead lock and LOOPS, so concurrent takers re-serialize on
-        # the retry), deadline expiry on a live lock raises instead of
-        # falling through, and the finally-remove only ever runs in the
-        # owning process.
-        deadline = _time.time() + 600
-        while True:
-            # ADVICE r7: deadline at the TOP of the loop, so the
-            # stale-break and lock-vanished branches cannot spin past it
-            # under pathological contention (lock repeatedly created and
-            # removed, or getmtime persistently failing).
-            if _time.time() > deadline:
-                raise RuntimeError(
-                    "stage_delta_stream: timed out waiting on the "
-                    f"_STAGING lock at {lock}; a concurrent session "
-                    "appears stuck mid-staging — refusing to run an "
-                    "unlocked overwrite under it"
-                )
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.close(fd)
-                break  # lock acquired; we are the stager
-            except FileExistsError:
-                if os.path.exists(done):
-                    return src_dir, out_dir, chk_dir
-                try:
-                    stale = (
-                        _time.time() - os.path.getmtime(lock)
-                        > _STAGE_GRACE_SEC
-                    )
-                except OSError:
-                    # lock vanished mid-check; retry acquire — but sleep
-                    # first (ADVICE r7: every retry path yields, so a
-                    # persistent getmtime failure cannot spin hot)
-                    _time.sleep(0.5)
-                    continue
-                if stale:
-                    try:  # crashed stager: break its lock, then retry
-                        os.remove(lock)  # the O_EXCL acquire (serializes
-                    except OSError:  # concurrent stale-breakers)
-                        pass
-                    _time.sleep(0.5)
-                    continue
-                _time.sleep(0.5)
-        try:
-            if not os.path.exists(done):  # re-check: a winner may have
-                read_table(spark, sf_dir, "documents").where(  # finished
-                    F.col("doc_id") % 10 == 0  # between our stale-break
-                ).repartition(4).write.mode("overwrite").parquet(src_dir)
-                open(done, "w").close()
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
-    return src_dir, out_dir, chk_dir
+    return (
+        os.path.join(d, "src"),
+        os.path.join(d, f"out_{twin}"),
+        os.path.join(d, f"chk_{twin}"),
+    )

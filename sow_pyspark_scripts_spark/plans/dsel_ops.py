@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import read_table
+from ..sources.staging import sf_tag, stage
 from ..functions.det import d2r6_grid_sql, r6
 from .pq_common import (
     _IVFADC_MP_ORACLE,
@@ -751,6 +752,24 @@ LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
 """
 
 
+def _stage_flushed_src(spark: SparkSession, sf_dir: str, out: str) -> None:
+    ev = read_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    sentinel = ev.agg(F.max("ts").alias("mx")).select(
+        F.lit(-1).cast("long").alias("event_id"),
+        (F.col("mx") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
+        F.lit(-1).cast("long").alias("user_id"),
+        F.explode(F.array(F.lit("view"), F.lit("purchase"))).alias(
+            "event_type"
+        ),
+        F.lit(0.0).alias("value"),
+    )
+    ev.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(out, "src")
+    )
+
+
 def _stream_events_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over events plus one far-future sentinel row per
     event_type of interest (user_id = -1, ts = max(ts) + 30 days).
@@ -761,45 +780,11 @@ def _stream_events_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(ts), which would hold back the tail of the result forever — the
     sentinel advances the final watermark past every real event, exactly
     like a producer's end-of-day heartbeat record. The sentinel is
-    filtered back out by user_id >= 0 downstream."""
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    # staging dir keyed by sf_dir AND a content fingerprint of the
-    # source parquet (names + sizes + mtimes): a regenerated fixture can
-    # never serve a stale staged copy (ADVICE r2 — the bare _STAGED
-    # marker never invalidated). Stale fingerprints of the same fixture
-    # are removed so reruns don't accumulate.
-    import shutil
-
-    from .ann_index import _fingerprint
-
-    base = "spark_stream_flush_" + sf_dir.strip("/").replace("/", "_").replace(
-        ".", "_"
-    )
-    # "__h" separator keeps the stale-sibling sweep from matching a
-    # DIFFERENT fixture whose sanitized name extends this one
-    # (ADVICE r3: /data/sf vs /data/sf_x both sanitize via '_')
-    stage = os.path.join(tempfile.gettempdir(), f"{base}__h{_fingerprint(sf_dir, 'events')}")
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
-        tmp = tempfile.gettempdir()
-        for sib in os.listdir(tmp):
-            if sib.startswith(base + "__h") and os.path.join(tmp, sib) != stage:
-                shutil.rmtree(os.path.join(tmp, sib), ignore_errors=True)
-        sentinel = ev.agg(F.max("ts").alias("mx")).select(
-            F.lit(-1).cast("long").alias("event_id"),
-            (F.col("mx") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
-            F.lit(-1).cast("long").alias("user_id"),
-            F.explode(F.array(F.lit("view"), F.lit("purchase"))).alias(
-                "event_type"
-            ),
-            F.lit(0.0).alias("value"),
-        )
-        ev.unionByName(sentinel).coalesce(1).write.mode("overwrite").parquet(stage)
-        open(done, "w").close()
-    schema = spark.read.parquet(stage).schema
-    return spark.readStream.schema(schema).parquet(stage)
+    filtered back out by user_id >= 0 downstream. The source copy is
+    staged once per fixture through `sources/staging.stage`."""
+    prefix = os.path.join(tempfile.gettempdir(), f"spark_stream_flush_{sf_tag(sf_dir)}_")
+    src = os.path.join(stage(spark, prefix, sf_dir, "events", _stage_flushed_src), "src")
+    return spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
 
 
 @query("streaming_join_left_outer", _SJLO_ORACLE)

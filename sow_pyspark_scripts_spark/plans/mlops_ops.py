@@ -706,9 +706,10 @@ def streaming_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming twin of `text_quality_classifier_delta`, and the shape a
     crawl-ingest filter actually runs (new shards land -> featurize the
     shard only -> broadcast the 4-weight row -> append keep/drop
-    scores). Mirrors `streaming_dsir_score`'s frozen-model drain; the
-    shared staging/sweep machinery lives in
-    `plans/ann_index.stage_delta_stream`.
+    scores). Mirrors `streaming_dsir_score`'s frozen-model drain: the
+    three streaming twins share one staged delta slice
+    (`plans/ann_index.stage_delta_stream`) and one drain
+    (`streaming/pipeline.drain_batches`).
 
     State story: no Spark state — a doc's score depends only on its own
     features and the frozen weights, so micro-batch boundaries cannot
@@ -716,6 +717,7 @@ def streaming_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream side is shard-parallel featurization; training never
     re-runs."""
     from ..functions.pin import pin_eager as _pin_eager
+    from ..streaming.pipeline import drain_batches
     from .ann_index import stage_delta_stream
 
     docs = read_table(spark, sf_dir, "documents")
@@ -729,25 +731,7 @@ def streaming_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         _qclf_train(_qclf_features(docs.where(F.col("doc_id") % 10 != 0)))
     )
 
-    src_dir, out_dir, chk_dir = stage_delta_stream(
-        spark, sf_dir, "spark_stream_qclf"
-    )
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src_dir)
-    )
+    def _score(bdf: DataFrame) -> DataFrame:
+        return _qclf_score(_qclf_features(bdf, pin=False), w)
 
-    def _score(bdf: DataFrame, _bid: int) -> None:
-        scored = _qclf_score(_qclf_features(bdf, pin=False), w)
-        scored.write.mode("append").parquet(out_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", chk_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).distinct()
+    return drain_batches(spark, *stage_delta_stream(spark, sf_dir, "qclf"), _score)

@@ -320,15 +320,14 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (~256 MB/file, the guide's 128 MB-1 GB band), not a constant —
     # coalesce(2) was a fixture-scale tune that would under-parallelize
     # a 100 TB nightly compaction to two writer tasks. Derived from the
-    # fragment bytes actually on disk: sub-256 MB inputs compact to one
-    # file (within the <=2-file layout assertion of
-    # test_compaction_reduces_file_count); a 100 TB table gets
-    # bytes/256 MB writers.
-    frag_bytes = sum(
-        os.path.getsize(os.path.join(frag, p))
-        for p in os.listdir(frag)
-        if p.startswith("part-")
-    )
+    # fragment bytes actually written, sized through the Hadoop
+    # FileSystem of the path (local disk, HDFS or an object store alike):
+    # sub-256 MB inputs compact to one file (within the <=2-file layout
+    # assertion of test_compaction_reduces_file_count); a 100 TB table
+    # gets bytes/256 MB writers.
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(frag)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    frag_bytes = fs.getContentSummary(hpath).getLength()
     n_out = max(1, (frag_bytes + 256 * 1024 * 1024 - 1) // (256 * 1024 * 1024))
     spark.read.parquet(frag).coalesce(int(n_out)).write.mode(
         "overwrite"

@@ -32,8 +32,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Column pruning and filter pushdown are

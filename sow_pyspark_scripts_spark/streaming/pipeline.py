@@ -10,7 +10,9 @@ its ES upsert is a merge-by-key sink. Both generalize here:
   watermark instead of by re-running a month);
 - ``dropDuplicatesWithinWatermark`` for stateful dedup;
 - ``foreachBatch`` + ``merge_upsert`` for the upsert sink — the direct
-  streaming twin of ``sink_es_upsert``.
+  streaming twin of ``sink_es_upsert``;
+- ``drain_batches``, the one ``foreachBatch`` append drain of the
+  streaming twins over staged document slices.
 
 Run modes: ``availableNow`` triggers drain the fixture and stop, so the
 same code is testable locally and deployable as a continuous job.
@@ -21,6 +23,7 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -124,6 +127,36 @@ def run_to_memory(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     return stream_df.sparkSession.table(name)
+
+
+def drain_batches(
+    spark: SparkSession,
+    src: str,
+    out: str,
+    chk: str,
+    per_batch: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Drain the parquet files under ``src`` in 2-file micro-batches
+    with an availableNow trigger, appending ``per_batch(batch)`` of each
+    to ``out``; return the distinct rows of ``out``. The checkpoint
+    ``chk`` makes the drain idempotent: a re-run reprocesses nothing."""
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src)
+    )
+
+    def _append(bdf: DataFrame, _bid: int) -> None:
+        per_batch(bdf).write.mode("append").parquet(out)
+
+    (
+        stream.writeStream.foreachBatch(_append)
+        .option("checkpointLocation", chk)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return spark.read.parquet(out).distinct()
 
 
 def tumbling_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -203,6 +203,52 @@ def test_no_hand_written_ann_topk():
     )
 
 
+
+def test_no_hand_written_staging_or_drain():
+    """Derived artifacts are staged through one protocol,
+    sources.staging.stage, and the streaming twins drain through one
+    foreachBatch append, streaming.pipeline.drain_batches. A rename
+    commit, an O_EXCL lock, a tempdir sweep or a foreachBatch written
+    under plans/ would be a second copy with its own concurrency rule."""
+    import ast
+    import pathlib
+
+    import sow_pyspark_scripts_spark as pkg
+
+    def is_attr(node, owner, attr):
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == attr
+            and isinstance(node.value, ast.Name)
+            and node.value.id == owner
+        )
+
+    def offends(node):
+        if is_attr(node, "os", "rename") or is_attr(node, "os", "O_EXCL"):
+            return True
+        if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "foreachBatch":
+            return True
+        return (
+            isinstance(node, ast.Call)
+            and is_attr(node.func, "os", "listdir")
+            and len(node.args) == 1
+            and isinstance(node.args[0], ast.Call)
+            and is_attr(node.args[0].func, "tempfile", "gettempdir")
+        )
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"plans/{py.name}:{node.lineno}"
+        for py in sorted((root / "plans").rglob("*.py"))
+        for node in ast.walk(ast.parse(py.read_text()))
+        if offends(node)
+    ]
+    assert not offenders, (
+        "hand-written staging or drain under plans/ (use "
+        "sources.staging.stage or streaming.pipeline.drain_batches):\n"
+        + "\n".join(offenders)
+    )
+
 def test_pctl_exact_acc_covers_every_fixture_relation():
     """ADVICE r7: PCTL_EXACT_ACC guarantees oracle-exactness only while
     accuracy >= 2x the largest oracle-compared relation (rank error
