@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.det import cos_grid_sql, d2_grid_sql, mean_grid, mean_grid_sql, quant
 from ..registry import query
-from ..sources import read_table
+from ..sources import read_table, scan
 
 _M6EV = mean_grid_sql("e.v")
 
@@ -86,7 +86,7 @@ def events_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(rollup_path)
     )
-    hourly = spark.read.parquet(rollup_path)
+    hourly = scan(spark, rollup_path)
     daily = (
         hourly.groupBy(
             F.date_trunc("day", "bucket").alias("bucket"), "event_type"

@@ -57,10 +57,9 @@ from pyspark.sql import functions as F
 
 from ..functions.det import d2_grid_sql, d2r6_grid_sql, r6
 from ..registry import query
-from ..sources import read_table
+from ..sources import read_table, scan
 from ..sources.staging import MARKER as _MARKER  # noqa: F401 — read by the index tests
-from ..sources.staging import fingerprint as _fingerprint  # noqa: F401 — likewise
-from ..sources.staging import sf_tag, stage, staged_path
+from ..sources.staging import fingerprint, sf_tag, stage, staged_path
 from ..streaming.pipeline import drain_batches
 from .pq_common import (
     _IVFADC_MP_ORACLE,
@@ -89,6 +88,11 @@ from .pq_common import (
 
 def _index_prefix(sf_dir: str, kind: str) -> str:
     return os.path.join(tempfile.gettempdir(), "spark_ann_index", f"{sf_tag(sf_dir)}_{kind}")
+
+
+def _fingerprint(sf_dir: str, table: str = "embeddings") -> str:
+    """The staging key of one fixture table (read by the index tests)."""
+    return fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
 
 
 def _index_dir(sf_dir: str, kind: str = "ann", table: str = "embeddings") -> str:
@@ -229,7 +233,7 @@ def build_doc_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
         # hashing is paid exactly once and nothing is pinned (see the
         # rollup note below for why write-then-read-back beats a
         # localCheckpoint here)
-        spark.read.parquet(all_bands_path).where(
+        scan(spark, all_bands_path).where(
             F.col("doc_id") % 10 != 0
         ).write.mode("overwrite").parquet(
             os.path.join(out_dir, "minhash_base_bands.parquet")
@@ -254,7 +258,7 @@ def build_doc_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
         rollup = dsir_rollup_from_tokens(toks)
         rollup_path = os.path.join(out_dir, "dsir_doc_buckets.parquet")
         rollup.write.mode("overwrite").parquet(rollup_path)
-        dsir_lr(spark.read.parquet(rollup_path)).write.mode("overwrite").parquet(
+        dsir_lr(scan(spark, rollup_path)).write.mode("overwrite").parquet(
             os.path.join(out_dir, "dsir_bucket_lr.parquet")
         )
 
@@ -274,7 +278,7 @@ def stored_all_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-corpus band rows from the stored doc index (built/refreshed
     via the content fingerprint if absent or stale)."""
     idx = ensure_doc_index(spark, sf_dir)
-    return spark.read.parquet(os.path.join(idx, "minhash_all_bands.parquet"))
+    return scan(spark, os.path.join(idx, "minhash_all_bands.parquet"))
 
 
 def ensure_doc_index(spark: SparkSession, sf_dir: str, rebuild: bool = False) -> str:
@@ -293,14 +297,14 @@ def stored_dsir_tables(
     back to in-query scoring with a warning)."""
     idx = ensure_doc_index(spark, sf_dir)
     return (
-        spark.read.parquet(os.path.join(idx, "dsir_doc_buckets.parquet")),
-        spark.read.parquet(os.path.join(idx, "dsir_bucket_lr.parquet")),
+        scan(spark, os.path.join(idx, "dsir_doc_buckets.parquet")),
+        scan(spark, os.path.join(idx, "dsir_bucket_lr.parquet")),
     )
 
 
 def _read_codes_long(spark: SparkSession, idx: str) -> DataFrame:
     """Stored PQ codes as (vec_id, sub, cell) rows."""
-    return _codes_long(spark.read.parquet(os.path.join(idx, "pq_codes.parquet")), "c")
+    return _codes_long(scan(spark, os.path.join(idx, "pq_codes.parquet")), "c")
 
 
 def _query_lut(spark: SparkSession, sf_dir: str, idx: str) -> DataFrame:
@@ -309,7 +313,7 @@ def _query_lut(spark: SparkSession, sf_dir: str, idx: str) -> DataFrame:
     broadcast codebook. The only float-vector read at query time outside
     the refine twin's R-row fetch."""
     emb = read_table(spark, sf_dir, "embeddings")
-    cw = spark.read.parquet(os.path.join(idx, "pq_codebook.parquet"))
+    cw = scan(spark, os.path.join(idx, "pq_codebook.parquet"))
     return _pq_lut(_pq_subvecs(emb.where(F.col("vec_id") < 20)), cw)
 
 
@@ -367,7 +371,7 @@ def similarity_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_cells",
         "n_rows",
     )
-    ivf = spark.read.parquet(os.path.join(idx, "ivf_cells.parquet"))
+    ivf = scan(spark, os.path.join(idx, "ivf_cells.parquet"))
     ivf_row = ivf.agg(
         F.countDistinct("ivf_cell").alias("n_cells"), F.count(F.lit(1)).alias("n_rows")
     ).select(F.lit("ivf").alias("component"), "n_cells", "n_rows")
@@ -399,7 +403,7 @@ def similarity_topk_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     column: each executor holds whole cells of codes and a query
     touches only the executors owning its probed cells."""
     idx = ensure_ann_index(spark, sf_dir)
-    ivf = spark.read.parquet(os.path.join(idx, "ivf_cells.parquet"))
+    ivf = scan(spark, os.path.join(idx, "ivf_cells.parquet"))
     lutq = _query_lut(spark, sf_dir, idx).join(
         ivf.withColumnRenamed("vec_id", "qid"), "qid"
     )
@@ -430,9 +434,9 @@ def _ivfadc_stored_top5(spark: SparkSession, idx: str, q_resid: DataFrame) -> Da
     one row per probed cell) against the stored residual codebook and
     codes: a candidate is scored by the LUT of the probe matching its
     own stored cell."""
-    rcw = spark.read.parquet(os.path.join(idx, "ivfadc_codebook.parquet"))
+    rcw = scan(spark, os.path.join(idx, "ivfadc_codebook.parquet"))
     lut = _ivfadc_lut(_ivfadc_subvecs(q_resid), rcw)
-    rcodes = spark.read.parquet(os.path.join(idx, "ivfadc_codes.parquet"))
+    rcodes = scan(spark, os.path.join(idx, "ivfadc_codes.parquet"))
     cand = _codes_long(rcodes, "rc", cid="cid", carry=("ivf_cell",))
     return adc_topk(cand, lut, ["sub", "cell", "ivf_cell"], 5)
 
@@ -449,8 +453,8 @@ def similarity_topk_ivfadc_stored(spark: SparkSession, sf_dir: str) -> DataFrame
     training and corpus encoding paid by `similarity_index_build`."""
     idx = ensure_ann_index(spark, sf_dir)
     emb = read_table(spark, sf_dir, "embeddings")
-    ivf = spark.read.parquet(os.path.join(idx, "ivf_cells.parquet"))
-    cents = spark.read.parquet(os.path.join(idx, "ivf_centroids.parquet"))
+    ivf = scan(spark, os.path.join(idx, "ivf_cells.parquet"))
+    cents = scan(spark, os.path.join(idx, "ivf_centroids.parquet"))
     q_resid = _ivf_residuals(
         emb.where(F.col("vec_id") < 20), ivf.where(F.col("vec_id") < 20), cents
     )
@@ -474,7 +478,7 @@ def similarity_topk_ivfadc_multiprobe_stored(spark: SparkSession, sf_dir: str) -
 
     idx = ensure_ann_index(spark, sf_dir)
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = spark.read.parquet(os.path.join(idx, "ivf_centroids.parquet"))
+    cents = scan(spark, os.path.join(idx, "ivf_centroids.parquet"))
     probes = probes_from_centroids(
         emb.where(F.col("vec_id") < 20), cents, nprobe=2
     )
@@ -601,7 +605,7 @@ def dedup_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents, proving the persisted index is exactly the deterministic
     16-seed/8-band signature relation."""
     idx = ensure_doc_index(spark, sf_dir, rebuild=True)
-    bands = spark.read.parquet(os.path.join(idx, "minhash_base_bands.parquet"))
+    bands = scan(spark, os.path.join(idx, "minhash_base_bands.parquet"))
     return bands.groupBy("band_id").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("bsig").alias("n_sigs"),
@@ -622,9 +626,7 @@ def dedup_minhash_incremental_stored(spark: SparkSession, sf_dir: str) -> DataFr
     from ..sources import spread
 
     idx = ensure_doc_index(spark, sf_dir)
-    base = spark.read.parquet(
-        os.path.join(idx, "minhash_base_bands.parquet")
-    ).select(F.col("doc_id").alias("dup_of"), "band_id", "bsig")
+    base = scan(spark, os.path.join(idx, "minhash_base_bands.parquet")).select(F.col("doc_id").alias("dup_of"), "band_id", "bsig")
     delta_docs = spread(read_table(spark, sf_dir, "documents")).where(
         F.col("doc_id") % 10 == 0
     )
@@ -664,9 +666,7 @@ def streaming_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import band_signatures, minhash_signatures, word_shingles
 
     idx = ensure_doc_index(spark, sf_dir)
-    base = spark.read.parquet(
-        os.path.join(idx, "minhash_base_bands.parquet")
-    ).select(F.col("doc_id").alias("dup_of"), "band_id", "bsig")
+    base = scan(spark, os.path.join(idx, "minhash_base_bands.parquet")).select(F.col("doc_id").alias("dup_of"), "band_id", "bsig")
 
     def _probe(bdf: DataFrame) -> DataFrame:
         delta = band_signatures(
@@ -750,7 +750,7 @@ def dedup_semantic_semdedup_sharded_stored(
 
     emb = read_table(spark, sf_dir, "embeddings")
     idx = ensure_ann_index(spark, sf_dir)
-    coarse = spark.read.parquet(os.path.join(idx, "ivf_cells.parquet")).select(
+    coarse = scan(spark, os.path.join(idx, "ivf_cells.parquet")).select(
         "vec_id", F.col("ivf_cell").alias("cell")
     )
     sub = srp_buckets(

@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources import read_table
+from ..sources import read_table, scan
 from ..sources.staging import sf_tag, stage
 from ..functions.det import d2r6_grid_sql, r6
 from .pq_common import (
@@ -784,7 +784,7 @@ def _stream_events_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged once per fixture through `sources/staging.stage`."""
     prefix = os.path.join(tempfile.gettempdir(), f"spark_stream_flush_{sf_tag(sf_dir)}_")
     src = os.path.join(stage(spark, prefix, sf_dir, "events", _stage_flushed_src), "src")
-    return spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    return spark.readStream.schema(scan(spark, src).schema).parquet(src)
 
 
 @query("streaming_join_left_outer", _SJLO_ORACLE)

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources import read_table
+from ..sources import read_table, scan
 from ..sources.formats import (
     read_csv,
     read_json,
@@ -109,7 +109,7 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _scratch("partitioned", sf_dir)
     write_partitioned(orders, path, partition_col="month_year")
     return (
-        spark.read.parquet(path)
+        scan(spark, path)
         .filter(F.col("month_year") == "3-1995")
         .select("o_orderkey", "total_price", F.col("month_year").cast("string").alias("month_year"))
     )
@@ -176,8 +176,8 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     v1.write.mode("overwrite").parquet(base + "/batch=v1__part")
     v2.write.mode("overwrite").parquet(base + "/batch=v2__part")
-    merged = spark.read.option("mergeSchema", "true").parquet(
-        base + "/batch=v1__part", base + "/batch=v2__part"
+    merged = scan(
+        spark, base + "/batch=v1__part", base + "/batch=v2__part", mergeSchema="true"
     )
     return merged.select("n_nationkey", "n_name", "region_name", "batch")
 

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources import read_table
+from ..sources import read_table, scan
 
 
 # ---------------------------------------------------------------------------
@@ -238,7 +238,7 @@ def sink_manifest_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         if d.startswith("data-v") and v.isdigit() and int(v) < version - 1:
             shutil.rmtree(os.path.join(base, d), ignore_errors=True)
     committed = json.load(open(mpath))
-    return spark.read.parquet(*committed["files"])
+    return scan(spark, *committed["files"])
 
 
 # ---------------------------------------------------------------------------

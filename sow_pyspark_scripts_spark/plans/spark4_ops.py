@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources import read_table
+from ..sources import read_table, scan
 
 # ---------------------------------------------------------------------------
 # expr_variant_extract — VARIANT semi-structured field access
@@ -267,9 +267,7 @@ def api_pandas_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 6-dp half-up rounding happens in Spark expressions after the
     conversion so float policy matches the rest of the registry.
     """
-    import pyspark.pandas as ps
-
-    psdf = ps.read_parquet(f"{sf_dir}/orders.parquet")
+    psdf = scan(spark, f"{sf_dir}/orders.parquet").pandas_api()
     g = (
         psdf.groupby("o_orderpriority")
         .agg(n_orders=("o_orderkey", "count"), avg_price=("o_totalprice", "mean"))
@@ -329,10 +327,10 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     frag_bytes = fs.getContentSummary(hpath).getLength()
     n_out = max(1, (frag_bytes + 256 * 1024 * 1024 - 1) // (256 * 1024 * 1024))
-    spark.read.parquet(frag).coalesce(int(n_out)).write.mode(
+    scan(spark, frag).coalesce(int(n_out)).write.mode(
         "overwrite"
     ).parquet(compact)
-    return spark.read.parquet(compact)
+    return scan(spark, compact)
 
 
 # ---------------------------------------------------------------------------

@@ -25,6 +25,19 @@ PINNED_NOW = "2002-06-01 00:00:00"
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
 
+def _driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else 32g capped at half the host's
+    physical memory. G1 grows the heap toward its maximum under
+    allocation pressure, so a maximum above RAM gets the JVM OOM-killed
+    instead of collected (seen: a 32g-max test session reached 13.7 GB
+    RSS on a 15 GB host and was killed when a second JVM started)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    half_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    return f"{max(1, min(32, half_gb))}g"
+
+
 def get_spark(
     app_name: str = "sow_pyspark_scripts_spark",
     master: str | None = None,
@@ -81,7 +94,7 @@ def get_spark(
         # heap for N concurrent tasks' execution memory, not for a thin
         # cluster driver (8g across 32 threads = ~100 MB/task -> GC thrash
         # and shuffle spill by the tail of a long bench run)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

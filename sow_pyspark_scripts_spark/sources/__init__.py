@@ -1,4 +1,4 @@
-from .parquet import TABLES, read_table, read_tables, register_tables, spread
+from .parquet import TABLES, read_table, read_tables, register_tables, scan, spread
 from .writers import (
     SchemaContractError,
     assert_schema_contract,
@@ -11,6 +11,7 @@ __all__ = [
     "read_table",
     "read_tables",
     "register_tables",
+    "scan",
     "spread",
     "SchemaContractError",
     "assert_schema_contract",

@@ -7,6 +7,14 @@ directories; Catalyst gives predicate pushdown + column pruning to the
 scan natively, so the "pushed query" becomes ordinary DataFrame ops on
 top of ``read_table``.
 
+``scan`` is the engine's only Parquet batch read path: ``read_table``,
+the stored ANN/doc index tables, the staged stream sources and every
+scratch read-back go through it. A read without a schema runs a Spark
+job to merge the Parquet footers; ``scan`` remembers each path's
+inferred schema, keyed by a listing fingerprint of the files and the
+confs that change the inferred types, so a rebuilt query over unchanged
+files plans with no job at all. Only metadata is reused, never data.
+
 ``register_tables`` is the SQL front door (reference
 ``exec_temp_view_sql``, ``preprocess_and_store_parquets.py:216,226-230``):
 every fixture table becomes a temp view so ``spark.sql(...)`` works
@@ -18,6 +26,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from .staging import fingerprint
 
 TABLES = (
     "region",
@@ -32,6 +43,50 @@ TABLES = (
     "embeddings",
 )
 
+# Session confs that change the schema Spark infers from the same files.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+# absolute path(s) -> (key, inferred schema); a miss replaces the entry.
+# No lock: two racing misses cost one extra inference at worst, and an
+# entry whose files changed during its inference keeps the key of the
+# older listing, which no later read matches.
+_schemas: dict[tuple[str, ...], tuple[tuple, StructType]] = {}
+
+
+def scan(spark: SparkSession, *paths: str, **options: str) -> DataFrame:
+    """``spark.read.parquet(*paths, **options)``, with the inferred
+    schema memoised per path. The key is the listing fingerprint of
+    every path (``sources.staging.fingerprint``), the schema-bearing
+    session confs and the reader options; on a hit the read carries the
+    remembered schema and plans with no footer-merge job. A path that
+    ``os.stat`` cannot see (a remote store, a missing dir) is read as is."""
+    names = tuple(os.path.abspath(p) for p in paths)
+    try:
+        listing = tuple(fingerprint(p) for p in names)
+    except OSError:
+        return spark.read.parquet(*paths, **options)
+    confs = tuple(spark.conf.get(c) for c in _SCHEMA_CONFS)
+    key = (listing, confs, tuple(sorted(options.items())))
+    hit = _schemas.get(names)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(*paths, **options)
+    df = spark.read.parquet(*paths, **options)
+    _schemas[names] = (key, df.schema)
+    return df
+
+
+def ensure_conf(spark: SparkSession, key: str, value: str) -> None:
+    """Set a session conf only when it differs: a write on every read
+    would race other threads planning in the same session."""
+    if spark.conf.get(key) != value:
+        spark.conf.set(key, value)
+
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Column pruning and filter pushdown are
@@ -43,11 +98,11 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # UTC matters because events.ts becomes a local-tz TIMESTAMP after the
     # nanos conversion — date_format/unix_timestamp outputs would shift
     # under a non-UTC session and break oracle parity.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    ensure_conf(spark, "spark.sql.session.timeZone", "UTC")
     if name == "events":
         # must be set before planning the scan
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        ensure_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = scan(spark, os.path.join(sf_dir, f"{name}.parquet"))
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 

@@ -58,24 +58,34 @@ def sf_tag(sf_dir: str) -> str:
     return sf_dir.strip("/").replace("/", "_").replace(".", "_")
 
 
-def fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    """Content fingerprint of one fixture table: names + sizes + mtimes
-    of every file under <table>.parquet. Cheap (one ``os.stat`` for a
-    single-file table) and changes whenever the fixture is regenerated."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    st = os.stat(src)
+def fingerprint(path: str) -> str:
+    """Listing fingerprint of a file or directory: the relative name,
+    size and mtime of every file under ``path``, walked recursively so a
+    partitioned table's ``key=value`` dirs are covered. Cheap (one
+    ``os.stat`` for a single file) and changes whenever the data is
+    rewritten. Raises ``OSError`` when ``path`` cannot be stat'ed."""
     h = hashlib.md5()
+    st = os.stat(path)
     if stat.S_ISDIR(st.st_mode):
-        for p in sorted(os.listdir(src)):
-            pst = os.stat(os.path.join(src, p))
-            h.update(f"{p}:{pst.st_size}:{pst.st_mtime_ns};".encode())
+        _hash_listing(h, path, "")
     else:
         h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
     return h.hexdigest()[:16]
 
 
+def _hash_listing(h, root: str, rel: str) -> None:
+    for p in sorted(os.listdir(os.path.join(root, rel))):
+        name = rel + p
+        pst = os.stat(os.path.join(root, name))
+        if stat.S_ISDIR(pst.st_mode):
+            _hash_listing(h, root, name + "/")
+        else:
+            h.update(f"{name}:{pst.st_size}:{pst.st_mtime_ns};".encode())
+
+
 def staged_path(prefix: str, sf_dir: str, table: str) -> str:
-    return f"{prefix}_v{_INDEX_VERSION}_{fingerprint(sf_dir, table)}"
+    fp = fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
+    return f"{prefix}_v{_INDEX_VERSION}_{fp}"
 
 
 def stage(spark, prefix: str, sf_dir: str, table: str, build, rebuild: bool = False) -> str:

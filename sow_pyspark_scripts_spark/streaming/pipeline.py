@@ -28,6 +28,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.parquet import ensure_conf, scan
+
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over events.parquet with the ts normalization the batch
@@ -37,7 +39,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     a directory to monitor, so the file is exposed through a symlink in a
     scratch directory (a production deployment points this at the real
     landing directory and new files just arrive)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ensure_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
     stream_dir = os.path.join(
         tempfile.gettempdir(), "spark_stream_src_" + path.strip("/").replace("/", "_")
@@ -46,7 +48,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     link = os.path.join(stream_dir, "events.parquet")
     if not os.path.exists(link):
         os.symlink(path, link)
-    schema = spark.read.parquet(path).schema  # long (nanos) or TIMESTAMP_NTZ
+    schema = scan(spark, path).schema  # long (nanos) or TIMESTAMP_NTZ
     stream = spark.readStream.schema(schema).parquet(stream_dir)
     from pyspark.sql.types import LongType, TimestampNTZType
 
@@ -141,7 +143,7 @@ def drain_batches(
     to ``out``; return the distinct rows of ``out``. The checkpoint
     ``chk`` makes the drain idempotent: a re-run reprocesses nothing."""
     stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
+        spark.readStream.schema(scan(spark, src).schema)
         .option("maxFilesPerTrigger", 2)
         .parquet(src)
     )
@@ -156,7 +158,7 @@ def drain_batches(
         .start()
         .awaitTermination()
     )
-    return spark.read.parquet(out).distinct()
+    return scan(spark, out).distinct()
 
 
 def tumbling_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,12 +250,12 @@ def upsert_foreach_batch(
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         try:
-            existing = s.read.parquet(target_path)
+            existing = scan(s, target_path)
         except Exception:
             existing = None
         merged = merge_upsert(existing, batch_df, ["user_id"], "ts", ["event_id"])
         merged.write.mode("overwrite").parquet(target_path + "_tmp")
-        s.read.parquet(target_path + "_tmp").write.mode("overwrite").parquet(target_path)
+        scan(s, target_path + "_tmp").write.mode("overwrite").parquet(target_path)
 
     q = (
         ev.writeStream.foreachBatch(_merge)

@@ -277,3 +277,57 @@ def test_pctl_exact_acc_covers_every_fixture_relation():
         f"({worst}: {n_max} rows) — sketch oracles are no longer exact; "
         "raise the pin in functions/sketch.py"
     )
+
+
+def test_no_raw_parquet_reads():
+    """Every Parquet batch read under plans/ and streaming/ goes through
+    sources.parquet.scan, which remembers inferred schemas; a raw
+    ``.read.parquet(`` (or ``.read.option(...).parquet(``) without a
+    schema, or a pandas-on-Spark ``read_parquet(``, would run a
+    footer-merge job on every build. A read that passes ``.schema(...)``
+    infers nothing and is allowed. Parsed, not grepped."""
+    import ast
+    import pathlib
+
+    import sow_pyspark_scripts_spark as pkg
+
+    def reader_chain(node):
+        """The attribute names a ``.parquet(`` call's receiver goes
+        through, innermost last: spark.read.option(..) -> [option, read]."""
+        names = []
+        node = node.func.value
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Call):
+                node = node.func
+            else:
+                names.append(node.attr)
+                node = node.value
+        return names
+
+    def offends(node):
+        if not isinstance(node, ast.Call):
+            return False
+        name = getattr(node.func, "attr", None) or getattr(node.func, "id", None)
+        if name == "read_parquet":
+            return True
+        if name != "parquet" or not isinstance(node.func, ast.Attribute):
+            return False
+        chain = reader_chain(node)
+        # the reader is the innermost .read; a .write/.readStream chain
+        # or a read that carries a schema is not a raw read
+        if "read" not in chain:
+            return False
+        reader = chain[: chain.index("read")]
+        return "schema" not in reader and "write" not in reader
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{sub}/{py.name}:{node.lineno}"
+        for sub in ("plans", "streaming")
+        for py in sorted((root / sub).rglob("*.py"))
+        for node in ast.walk(ast.parse(py.read_text()))
+        if offends(node)
+    ]
+    assert not offenders, (
+        "raw Parquet read (use sources.parquet.scan):\n" + "\n".join(offenders)
+    )

@@ -78,6 +78,25 @@ def test_global_row_number_empty_and_single(spark):
     assert [(r.k, r.row_num) for r in one.collect()] == [(42, 1)]
 
 
+def test_approx_pctls_empty_and_all_null_keep_the_per_rank_shape(spark):
+    """On empty or all-null input the percentile array is one NULL per
+    rank, so an explode of it yields one row per rank."""
+    from pyspark.sql.types import DoubleType
+
+    from sow_pyspark_scripts_spark.functions.sketch import approx_pctls
+
+    ps = (0.25, 0.5, 0.75)
+    schema = StructType([StructField("x", DoubleType())])
+    empty = spark.createDataFrame([], schema)
+    all_null = spark.createDataFrame([(None,), (None,)], schema)
+    for df in (empty, all_null):
+        b = df.agg(approx_pctls("x", ps).alias("q"))
+        assert b.collect()[0].q == [None, None, None]
+        assert b.select(F.explode("q")).count() == len(ps)
+    one = spark.createDataFrame([(2.0,)], schema).agg(approx_pctls("x", ps).alias("q"))
+    assert one.collect()[0].q == [2.0, 2.0, 2.0]
+
+
 def test_scd2_single_event_user(spark):
     """A user with one event yields exactly one open-ended interval."""
     import pandas as pd

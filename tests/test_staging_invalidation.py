@@ -59,15 +59,22 @@ def test_stream_flush_staging_moves_on_fixture_regeneration(spark, tmp_path):
 
     base = "spark_stream_flush_" + sf.strip("/").replace("/", "_").replace(".", "_")
     tmp = tempfile.gettempdir()
-    dirs1 = {d for d in os.listdir(tmp) if d.startswith(base + "_")}
-    assert len(dirs1) == 1, dirs1
+    try:
+        dirs1 = {d for d in os.listdir(tmp) if d.startswith(base + "_")}
+        assert len(dirs1) == 1, dirs1
 
-    _touch_tree(os.path.join(sf, "events.parquet"))
-    _stream_events_flushed(spark, sf)
-    dirs2 = {d for d in os.listdir(tmp) if d.startswith(base + "_")}
-    # re-staged under the NEW fingerprint; the stale sibling was removed
-    assert len(dirs2) == 1, dirs2
-    assert dirs1 != dirs2
+        _touch_tree(os.path.join(sf, "events.parquet"))
+        _stream_events_flushed(spark, sf)
+        dirs2 = {d for d in os.listdir(tmp) if d.startswith(base + "_")}
+        # re-staged under the NEW fingerprint; the stale sibling was removed
+        assert len(dirs2) == 1, dirs2
+        assert dirs1 != dirs2
+    finally:
+        # the fixture copy's path is unique to this run, so no later
+        # staging would ever sweep what this test staged
+        for d in os.listdir(tmp):
+            if d.startswith(base + "_"):
+                shutil.rmtree(os.path.join(tmp, d), ignore_errors=True)
 
 
 def test_index_build_commits_atomically_and_sweeps_crashed_staging(spark):
