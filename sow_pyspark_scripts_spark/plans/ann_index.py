@@ -80,9 +80,11 @@ from .pq_common import (
     _ivfadc_subvecs,
     _pq_codebook,
     _pq_d2,
+    _pq_grid,
     _pq_lut,
     _pq_subvecs,
     _refine_top5,
+    _subvec_split,
     adc_topk,
 )
 
@@ -314,7 +316,8 @@ def _query_lut(spark: SparkSession, sf_dir: str, idx: str) -> DataFrame:
     the refine twin's R-row fetch."""
     emb = read_table(spark, sf_dir, "embeddings")
     cw = scan(spark, os.path.join(idx, "pq_codebook.parquet"))
-    return _pq_lut(_pq_subvecs(emb.where(F.col("vec_id") < 20)), cw)
+    q = _subvec_split(_pq_grid(emb.where(F.col("vec_id") < 20)), "eq", "sv")
+    return _pq_lut(q, cw)
 
 
 _BUILD_ORACLE = f"""
@@ -435,7 +438,8 @@ def _ivfadc_stored_top5(spark: SparkSession, idx: str, q_resid: DataFrame) -> Da
     codes: a candidate is scored by the LUT of the probe matching its
     own stored cell."""
     rcw = scan(spark, os.path.join(idx, "ivfadc_codebook.parquet"))
-    lut = _ivfadc_lut(_ivfadc_subvecs(q_resid), rcw)
+    q = _subvec_split(q_resid, "r6", "rsv", carry=("ivf_cell",))
+    lut = _ivfadc_lut(q, rcw)
     rcodes = scan(spark, os.path.join(idx, "ivfadc_codes.parquet"))
     cand = _codes_long(rcodes, "rc", cid="cid", carry=("ivf_cell",))
     return adc_topk(cand, lut, ["sub", "cell", "ivf_cell"], 5)

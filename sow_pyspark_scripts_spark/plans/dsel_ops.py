@@ -70,6 +70,7 @@ from .pq_common import (
     _pq_subvecs,
     _recall_at_5,
     _refine_top5,
+    _subvec_split,
     adc_topk,
 )
 
@@ -699,7 +700,8 @@ def similarity_topk_ivfadc_multiprobe(spark: SparkSession, sf_dir: str) -> DataF
         centroids,
         cell="probe_cell",
     )
-    lut = _ivfadc_lut(_ivfadc_subvecs(q_resid), cw)
+    q = _subvec_split(q_resid, "r6", "rsv", carry=("ivf_cell",))
+    lut = _ivfadc_lut(q, cw)
     cand = sv.select(F.col("vec_id").alias("cid"), "ivf_cell", "sub", "cell")
     return adc_topk(cand, lut, ["sub", "cell", "ivf_cell"], 5)
 

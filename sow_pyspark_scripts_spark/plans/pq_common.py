@@ -17,6 +17,15 @@ Their SQL twins are the oracles below: the ``adc`` CTE and its
 query LUTs, the IVFADC codebook, the stored-code explode and the
 exact refine / recall tails sit beside the codebooks they read.
 
+Vectors are cut into subvectors by ONE split, ``_subvec_split``. The
+coding side (``_pq_subvecs``, ``_ivfadc_subvecs``) is the split plus
+each slice's sign cell; every query-side LUT calls the split alone.
+That is a plan-size rule, not style: Catalyst does not drop an unused
+field of a struct built inside ``explode(array(...))``, so a query side
+built through the coding helpers planned 16-32 unrolled sign-plane
+CASE WHEN sums (20-52K plan characters) that no LUT reads, paid in
+code generation, task serialisation and every AQE re-optimisation.
+
 See dsel_ops.py for the tier design notes and Jegou et al. 2011
 citations; everything here follows the house determinism rules
 (fixed integer plane weights, exact integer arithmetic for sign cells,
@@ -24,6 +33,8 @@ citations; everything here follows the house determinism rules
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -122,53 +133,77 @@ cw AS (
 )"""
 
 
+def _subvec_split(
+    df: DataFrame,
+    arr: str,
+    out: str,
+    carry: tuple[str, ...] = (),
+    cell: Callable[[int], str] | None = None,
+) -> DataFrame:
+    """(vec_id, *carry, sub, ``out``): m=4 rows per vector, ``out`` the
+    16-dim slice of the integer grid array ``arr`` for subvector
+    ``sub``. The coding side passes ``cell``, the SQL of subvector
+    ``s``'s sign-cell code over ``arr``, and gets a ``cell`` column
+    after ``sub``; the query side of every ADC LUT calls the split
+    without it (module docstring: Catalyst keeps unread struct fields
+    of an exploded array). The whole array is ONE SQL string -> ONE
+    py4j call (r6: the per-term Column-arithmetic loop this replaced
+    spent 2-3s of driver time per query on py4j round trips)."""
+    structs = ", ".join(
+        f"named_struct('sub', CAST({s} AS BIGINT), "
+        + (f"'cell', {cell(s)}, " if cell else "")
+        + f"'{out}', slice({arr}, {s * _PQ_SUB + 1}, {_PQ_SUB}))"
+        for s in range(_PQ_M)
+    )
+    keep = ["vec_id", *carry]
+    sc_arr = f"array({structs})"
+    if cell:
+        # Code-bearing structs materialize the array as its OWN projection
+        # attribute and explode the attribute: with the array constructor
+        # (4 x unrolled sign sums + slices) inlined in the Generate, the
+        # fused delta-encode stage (generate + % 10 filters + codebook
+        # join feeding d2) grew past janino's 64 KB method limit — ERROR
+        # CodeGenerator, silent interpreted fallback. Project expressions
+        # split into helper methods; Generate's doConsume cannot. The
+        # price: exploding an attribute makes Catalyst infer
+        # size(attr) > 0 and push it below the projection as a second
+        # copy of the whole array. Four bare slices cannot reach the
+        # limit, so the cell-free split stays inline and skips it.
+        df = df.select(*keep, F.expr(sc_arr).alias("sc_arr"))
+        sc_arr = "sc_arr"
+    return df.select(*keep, F.expr(f"explode({sc_arr})").alias("sc")).select(
+        *keep, "sc.sub", *(["sc.cell"] if cell else []), f"sc.{out}"
+    )
+
+
 def _pq_subvecs(emb: DataFrame) -> DataFrame:
-    """(vec_id, sub, cell, sv): m=4 rows per vector — ``sv`` is the
-    16-dim subvector slice, ``cell`` its sign-cell code. The sign
-    projections are UNROLLED per (sub, plane) into explicit
-    element_at-times-literal sum chains (zero-weight terms dropped):
-    plain arithmetic that whole-stage codegen compiles, where the
-    higher-order-function form (zip_with + aggregate lambdas) is
-    interpreted per row — measured 6x slower at the 100x smoke. No
-    dimension explode, no shuffle, no join before the struct explode."""
-    # Quantize the vector to integer grid units ONCE, in its own
-    # projection: everything downstream references the `eq` ATTRIBUTE,
-    # so the unrolled sign sums stay compact element_at terms. Inlining
-    # the floor/cast per term (the first r5 form) grew the Generate
-    # stage past janino's 64 KB method limit — Spark silently fell back
-    # to interpreted evaluation and the PQ bench tier doubled.
-    base = emb.select(
+    """(vec_id, sub, cell, sv): the `_subvec_split` of the quantized
+    embedding plus each slice's sign-cell code. The sign projections
+    are UNROLLED per (sub, plane) into explicit element_at-times-literal
+    sum chains (zero-weight terms dropped): plain arithmetic that
+    whole-stage codegen compiles, where the higher-order-function form
+    (zip_with + aggregate lambdas) is interpreted per row — measured 6x
+    slower at the 100x smoke. No dimension explode, no shuffle, no join
+    before the struct explode."""
+    return _subvec_split(_pq_grid(emb), "eq", "sv", cell=lambda s: _cell_sql("eq", s))
+
+
+def _pq_grid(emb: DataFrame) -> DataFrame:
+    """(vec_id, eq): the embedding in integer 1e-6 grid units.
+
+    Quantized ONCE, in its own projection: everything downstream
+    references the ``eq`` ATTRIBUTE, so the unrolled sign sums stay
+    compact element_at terms and every d2 is pure integer diffs (r5:
+    the per-pair re-quantization this replaced cost the PQ bench tier
+    ~2x). Inlining the floor/cast per term (the first r5 form) grew the
+    Generate stage past janino's 64 KB method limit — Spark silently
+    fell back to interpreted evaluation and the PQ bench tier doubled."""
+    return emb.select(
         "vec_id",
         F.expr(
             "transform(cast(embedding as array<double>), "
             "x -> cast(floor(x * 1e6 + 0.5D) as bigint))"
         ).alias("eq"),
-    )
-
-    # sv in INTEGER grid units (r5): quantize ONCE in `base`, so every
-    # downstream d2 is pure integer diffs — the per-pair
-    # re-quantization this replaced cost the PQ bench tier ~2x.
-    # Whole expression assembled as ONE SQL string -> ONE py4j call
-    # (r6: the per-term Column-arithmetic loop this replaces spent 2-3s
-    # of driver time per query on py4j round trips; tree is identical).
-    structs = ", ".join(
-        f"named_struct("
-        f"'sub', CAST({s} AS BIGINT), "
-        f"'cell', {_cell_sql('eq', s)}, "
-        f"'sv', slice(eq, {s * _PQ_SUB + 1}, {_PQ_SUB}))"
-        for s in range(_PQ_M)
-    )
-    # Materialize the 4-struct array as its OWN projection attribute and
-    # explode the attribute: with the array constructor (4 x unrolled
-    # sign sums + slices) inlined in the Generate, the fused delta-encode
-    # stage (generate + % 10 filters + codebook join feeding d2) grew
-    # past janino's 64 KB method limit — ERROR CodeGenerator, silent
-    # interpreted fallback (the same class as the `eq` fix above; found
-    # by the bench-log "Failed to compile" checklist). Project expressions
-    # split into helper methods; Generate's doConsume cannot.
-    arr = base.select("vec_id", F.expr(f"array({structs})").alias("sc_arr"))
-    return arr.select("vec_id", F.explode("sc_arr").alias("sc")).select(
-        "vec_id", "sc.sub", "sc.cell", "sc.sv"
     )
 
 
@@ -497,23 +532,19 @@ def _ivfadc_residuals(spark: SparkSession, sf_dir: str, coarse=None):
 
 def _ivfadc_subvecs(resid: DataFrame) -> DataFrame:
     """(vec_id, ivf_cell, sub, cell, rsv): residual sign-cell coding —
-    the `_pq_subvecs` shape on the integer residual array. Projections
-    are exact integer sums (residual values ~4e6, 16 terms x weight <=3
-    stay far under 2^53), so the sign cells are engine-independent by
-    construction, not by accepted ulp risk."""
-    # One SQL string -> one py4j call (r6, same rationale as
-    # `_pq_subvecs`); float_w keeps the original double weight
-    # literals (the residual path always multiplied by float(w)).
-    structs = ", ".join(
-        f"named_struct("
-        f"'sub', CAST({s} AS BIGINT), "
-        f"'cell', {_cell_sql('r6', s, float_w=True)}, "
-        f"'rsv', slice(r6, {s * _PQ_SUB + 1}, {_PQ_SUB}))"
-        for s in range(_PQ_M)
+    the `_subvec_split` of the integer residual array plus each slice's
+    sign cell. Projections are exact integer sums (residual values
+    ~4e6, 16 terms x weight <=3 stay far under 2^53), so the sign cells
+    are engine-independent by construction, not by accepted ulp risk.
+    float_w keeps the original double weight literals (the residual
+    path always multiplied by float(w))."""
+    return _subvec_split(
+        resid,
+        "r6",
+        "rsv",
+        carry=("ivf_cell",),
+        cell=lambda s: _cell_sql("r6", s, float_w=True),
     )
-    return resid.select(
-        "vec_id", "ivf_cell", F.expr(f"explode(array({structs}))").alias("sc")
-    ).select("vec_id", "ivf_cell", "sc.sub", "sc.cell", "sc.rsv")
 
 
 def _ivfadc_d2(rsv: str, cw: str):

@@ -106,9 +106,12 @@ def run_to_memory(
     uniquely-named memory sink; return the result as a batch DataFrame.
 
     When ``sf_dir`` is given, the drain runs with the adaptive
-    stateful-partition count (``adaptive_state_partitions``) — the conf
-    is read once at query start and restored after the drain, so batch
-    plans in the same session are untouched."""
+    stateful-partition count (``adaptive_state_partitions``). The
+    stream clones its session conf inside ``start()``, so the session
+    value is restored as soon as ``start()`` returns: batch plans built
+    while the drain runs are untouched. The sink's temp view is dropped
+    once the result frame is resolved — the frame keeps the rows, and
+    the session catalog does not grow by one view per drain."""
     spark = stream_df.sparkSession
     name = f"stream_result_{uuid.uuid4().hex[:10]}"
     old = spark.conf.get("spark.sql.shuffle.partitions")
@@ -125,10 +128,13 @@ def run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-    return stream_df.sparkSession.table(name)
+    try:
+        q.awaitTermination()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def drain_batches(

@@ -5,6 +5,8 @@ regressions become test failures."""
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entrymod
 from .conftest import SF_DIR
 
@@ -435,6 +437,30 @@ def test_refine_stored_rereads_vectors_for_refine_only(spark):
     assert len(emb_scans) == 3, scans
     assert any("c0#" in s for s in scans), scans
     assert "SortMergeJoin" not in plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "similarity_topk_ivfadc_stored",
+        "similarity_topk_ivfadc_multiprobe_stored",
+        "similarity_topk_pq_stored",
+        "similarity_topk_ivfpq_stored",
+        "similarity_topk_pq_refine_stored",
+        # in-query, but its corpus sv is pinned: a sign cell left in the
+        # plan can only come from the query-side LUT
+        "similarity_topk_ivfadc_multiprobe",
+    ],
+)
+def test_query_lut_plans_carry_no_sign_cells(spark, name):
+    """A query LUT reads the query's subvector slices only. Catalyst
+    does not prune an unused field of a struct built inside
+    explode(array(...)), so query subvectors built with their sign cells
+    plan 16-32 unrolled CASE WHEN plane sums that no operator reads."""
+    df = QUERIES[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    n = plan.count("CASE WHEN")
+    assert n == 0, f"{name}: {n} CASE WHEN in the optimized plan"
 
 
 def test_minhash_incremental_stored_hashes_delta_only(spark):

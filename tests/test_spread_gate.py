@@ -113,28 +113,78 @@ def test_table_bytes_matches_disk(tmp_path):
     assert _table_bytes(sf, "missing") == 0
 
 
-def test_run_to_memory_restores_shuffle_partitions(spark, tmp_path):
-    # the drain must restore the session conf even though it swaps it
-    # for the adaptive value while the stream runs
+def _stream_counts(spark, tmp_path, n=50):
+    """A watermarked per-ts count over ``n`` one-second rows: a stateful
+    stream with ``n`` result rows."""
     import pyspark.sql.functions as F
 
     src = str(tmp_path / "stream_src")
-    spark.range(0, 50).select(
+    spark.range(0, n).select(
         F.col("id"), F.timestamp_micros(F.col("id") * 1000000).alias("ts")
     ).coalesce(1).write.parquet(src)
-    from sow_pyspark_scripts_spark.streaming.pipeline import run_to_memory
-
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    stream = (
+    return (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .parquet(src)
         .withWatermark("ts", "1 minute")
         .groupBy("ts")
         .count()
     )
-    out = run_to_memory(stream, "complete", sf_dir=str(tmp_path), table="events")
+
+
+def test_run_to_memory_restores_shuffle_partitions(spark, tmp_path, monkeypatch):
+    # the drain runs its state with the adaptive partition count, but the
+    # session value is back before the drain ends: the stream clones its
+    # conf inside start(), so nothing after start() needs the swapped value
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from sow_pyspark_scripts_spark.streaming.pipeline import run_to_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "events.parquet").write_bytes(b"x" * 1234)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    drain = adaptive_state_partitions(spark, _table_bytes(str(sf), "events"))
+    assert str(drain) != before
+
+    seen = {}
+    await_termination = StreamingQuery.awaitTermination
+
+    def spy(self, *args, **kwargs):
+        seen["conf"] = spark.conf.get("spark.sql.shuffle.partitions")
+        seen["query"] = self
+        return await_termination(self, *args, **kwargs)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
+    out = run_to_memory(
+        _stream_counts(spark, tmp_path), "complete", sf_dir=str(sf), table="events"
+    )
+    assert seen["conf"] == before
+    progress = seen["query"].lastProgress
+    assert progress["stateOperators"][0]["numShufflePartitions"] == drain
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert out.count() == 50
+
+
+def test_run_to_memory_drops_its_sink_view(spark, tmp_path):
+    # a drain must not leave its stream_result_<uuid> temp view in the
+    # session catalog, and the returned frame must outlive the view
+    from sow_pyspark_scripts_spark.streaming.pipeline import run_to_memory
+
+    def sink_views():
+        return [
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith("stream_result_")
+        ]
+
+    before = sink_views()
+    outs = [
+        run_to_memory(_stream_counts(spark, tmp_path / str(i), n), "complete")
+        for i, n in enumerate((10, 20, 30))
+    ]
+    assert sink_views() == before
+    assert [o.count() for o in outs] == [10, 20, 30]
 
 
 if __name__ == "__main__":
