@@ -1,28 +1,29 @@
 """Stored ANN index: build-once / query-many split for the PQ family.
 
-Round-2's PQ tier (`plans/dsel_ops.py`) trains the codebook and
-re-encodes the corpus INSIDE every query call — correct and
-deterministic, but not the production read path: at 100 TB nobody
-re-encodes 16B vectors per query. This module persists the index the
-way `operators/dedup.band_signatures` already models it for MinHash
-(probed by `dedup_minhash_incremental`):
+The index is defined once, as three lazy families in `plans/pq_common`
+(``pq_family``, ``ivf_family``, ``ivfadc_family``). `build_ann_index`
+writes them; the in-query tier of `plans/dsel_ops.py` reads the same
+family frames without writing them. The index is persisted the way
+`operators/dedup.band_signatures` models it for MinHash (probed by
+`dedup_minhash_incremental`):
 
-  - ``pq_codebook``  (sub, cell, carr)      — <=64 rows, KB-scale
-  - ``pq_codes``     (vec_id, c0..c3, qerr) — 4 nibbles/vector (the
+  - ``pq_codebook``     (sub, cell, carr)         — <=64 rows, KB-scale
+  - ``pq_codes``        (vec_id, c0..c3, qerr)    — 4 nibbles/vector (the
     2-bytes-per-vector relation; a production layout packs c0..c3 into
     one SMALLINT — kept as columns here so the read plan stays
     oracle-checkable without bit twiddling)
-  - ``ivf_centroids``(cent_id, centroid)    — coarse codebook, KB-scale
-  - ``ivf_cells``    (vec_id, ivf_cell)     — 2 ints/vector
+  - ``ivf_centroids``   (cent_id, centroid)       — coarse codebook, KB-scale
+  - ``ivf_cells``       (vec_id, ivf_cell)        — 2 ints/vector
+  - ``ivfadc_codebook`` (sub, cell, cw6)          — integer residual codewords
+  - ``ivfadc_codes``    (vec_id, ivf_cell, rc0..rc3) — residual codes
 
-plus stored-index twins of the three query paths whose bench time
-excludes all encoding: ``similarity_topk_pq_stored``,
-``similarity_topk_ivfpq_stored``, ``similarity_topk_pq_refine_stored``
-read codes + broadcast codebook only (the refine twin re-reads R=25
-float vectors per query through a broadcast join). The oracles are the
-dsel_ops oracles unchanged: the index is fully deterministic (sign-cell
-codes, mean codewords — Jegou et al. 2011 §V as cited there), so the
-stored read path must reproduce the in-query results bit-for-bit.
+Each ``*_stored`` query passes scans of these files to the read path
+its in-query twin runs over the family frames (`pq_common.pq_adc_topk`,
+``ivfpq_top5``, ``ivfadc_top5``, ``ivfadc_multiprobe_top5``), so its
+bench time excludes all training and corpus encoding. The oracles are
+the dsel_ops oracles unchanged: the index is fully deterministic
+(sign-cell codes, mean codewords — Jegou et al. 2011 §V as cited
+there), so both tiers reproduce them bit-for-bit.
 
 ``embedding_pq_encode_delta`` mirrors `dedup_minhash_incremental`'s
 shape for the write path: a delta batch (vec_id % 10 == 0 stands in for
@@ -68,24 +69,21 @@ from .pq_common import (
     _MEAN6_SV,
     _MEAN6_V,
     _PQ_CODE_CTE,
-    _PQ_M,
     _PQ_REFINE_ORACLE,
     _PQ_REFINE_R,
     _PQ_TOPK_ORACLE,
     _codes_long,
-    _ivf_residuals,
-    _ivfadc_codebook,
-    _ivfadc_lut,
-    _ivfadc_residuals,
-    _ivfadc_subvecs,
     _pq_codebook,
     _pq_d2,
-    _pq_grid,
-    _pq_lut,
     _pq_subvecs,
     _refine_top5,
-    _subvec_split,
-    adc_topk,
+    ivf_family,
+    ivfadc_family,
+    ivfadc_multiprobe_top5,
+    ivfadc_top5,
+    ivfpq_top5,
+    pq_adc_topk,
+    pq_family,
 )
 
 def _index_prefix(sf_dir: str, kind: str) -> str:
@@ -102,82 +100,48 @@ def _index_dir(sf_dir: str, kind: str = "ann", table: str = "embeddings") -> str
 
 
 def build_ann_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
-    """Write the index tables. One embeddings scan feeds coding
-    (pure codegen), codebook training (the ONLY per-dimension shuffle),
-    and the IVF coarse assignment; everything written is deterministic
-    so any engine rebuilding from the same fixture produces identical
-    tables.
+    """Write the six index tables: the three families of
+    `pq_common` (``pq_family``, ``ivf_family``, ``ivfadc_family``) over
+    one embeddings scan. Everything written is deterministic, so any
+    engine rebuilding from the same fixture produces identical tables.
 
-    The PQ chain (codebook -> codes) and the IVF+residual chain
-    (centroids/cells -> IVFADC) share nothing but the embeddings scan,
+    The PQ chain and the IVF+IVFADC chain share nothing but the scan,
     so they run as CONCURRENT jobs from a 2-thread pool (guide §2.6):
     actions were only sequential because the driver called them
     sequentially, and each chain's tail (single-file parquet commits,
-    sub-second stages) left most cores idle — measured 5.6s -> ~3.5s
-    at sf0.1 with identical files. Job descriptions are thread-local,
-    so each chain labels its own jobs."""
+    sub-second stages) left most cores idle. Chains run inline vs the
+    pool, identical files: 5.6s -> ~3.5s at sf0.1, and 3.14s -> 2.28s
+    (medians of 8 alternating builds in one session, perfbench s11
+    tables, local[2], 1g heap, 4-vCPU VM). Each chain builds its
+    families, so their pins are made on its own thread: under AQE a
+    lazy localCheckpoint runs its upstream shuffle stages when it is
+    called, which on the caller's thread would serialise work the pool
+    overlaps. Job descriptions are thread-local, so each chain labels
+    its own jobs."""
     from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.similarity import ivf_cells
 
     emb = read_table(spark, sf_dir, "embeddings")
 
+    def _write(df: DataFrame, name: str) -> None:
+        df.write.mode("overwrite").parquet(os.path.join(out_dir, f"{name}.parquet"))
+
     def _pq_chain() -> None:
         spark.sparkContext.setJobDescription("ann build: pq codebook+codes")
-        sv = _pq_subvecs(emb)
-        cw = _pq_codebook(sv).persist()
-        cw.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "pq_codebook.parquet")
-        )
-        qe = sv.join(F.broadcast(cw), ["sub", "cell"]).select(
-            "vec_id", "sub", "cell", _pq_d2("sv", "carr").alias("d2")
-        )
-        codes = qe.groupBy("vec_id").agg(
-            *[
-                F.min(F.when(F.col("sub") == s, F.col("cell"))).alias(f"c{s}")
-                for s in range(_PQ_M)
-            ],
-            r6(F.sum("d2")).alias("qerr"),
-        )
-        codes.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "pq_codes.parquet")
-        )
-        cw.unpersist()
+        cw, codes, sv = pq_family(emb)
+        _write(cw, "pq_codebook")
+        _write(codes, "pq_codes")
+        unpin(sv)
 
     def _ivf_chain() -> None:
         spark.sparkContext.setJobDescription("ann build: ivf+ivfadc")
-        centroids, cells = ivf_cells(emb)
-        # the coarse assignment (numpy kernel over |vectors| x
-        # |centroids|) has two consumers here — the cells write and the
-        # residual layer — truncate its lineage so the kernel runs once
-        cells_p = cells.transform(_pin_lazy)
-        centroids.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "ivf_centroids.parquet")
-        )
-        cells_p.select("vec_id", F.col("cell").alias("ivf_cell")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, "ivf_cells.parquet"))
-        # residual-PQ layer (IVFADC, Jegou §V): integer residual sign
-        # codes + integer codewords — REUSES the coarse layer just
-        # written; rsv feeds the residual codebook AND the codes write
-        rsv = _ivfadc_subvecs(
-            _ivfadc_residuals(spark, sf_dir, coarse=(centroids, cells_p))
-        ).transform(_pin_lazy)
-        _ivfadc_codebook(rsv).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "ivfadc_codebook.parquet")
-        )
-        rcodes = rsv.groupBy("vec_id").agg(
-            F.min("ivf_cell").alias("ivf_cell"),
-            *[
-                F.min(F.when(F.col("sub") == s, F.col("cell"))).alias(f"rc{s}")
-                for s in range(_PQ_M)
-            ],
-        )
-        rcodes.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "ivfadc_codes.parquet")
-        )
+        centroids, cells = ivf_family(emb)
+        _write(centroids, "ivf_centroids")
+        _write(cells, "ivf_cells")
+        rcw, rcodes, rsv = ivfadc_family(emb, centroids, cells)
+        _write(rcw, "ivfadc_codebook")
+        _write(rcodes, "ivfadc_codes")
         unpin(rsv)
-        unpin(cells_p)
+        unpin(cells)
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         futures = [pool.submit(_pq_chain), pool.submit(_ivf_chain)]
@@ -304,20 +268,9 @@ def stored_dsir_tables(
     )
 
 
-def _read_codes_long(spark: SparkSession, idx: str) -> DataFrame:
-    """Stored PQ codes as (vec_id, sub, cell) rows."""
-    return _codes_long(scan(spark, os.path.join(idx, "pq_codes.parquet")), "c")
-
-
-def _query_lut(spark: SparkSession, sf_dir: str, idx: str) -> DataFrame:
-    """(qid, sub, cell, pd2): exact query subvectors (queries keep full
-    precision under ADC) scored against every codeword of the STORED
-    broadcast codebook. The only float-vector read at query time outside
-    the refine twin's R-row fetch."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    cw = scan(spark, os.path.join(idx, "pq_codebook.parquet"))
-    q = _subvec_split(_pq_grid(emb.where(F.col("vec_id") < 20)), "eq", "sv")
-    return _pq_lut(q, cw)
+def _index_tables(spark: SparkSession, idx: str, *names: str) -> list[DataFrame]:
+    """Scans of the named tables of the stored index ``idx``."""
+    return [scan(spark, os.path.join(idx, f"{n}.parquet")) for n in names]
 
 
 _BUILD_ORACLE = f"""
@@ -366,15 +319,14 @@ def similarity_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw embeddings, proving the persisted index is exactly the
     deterministic quantization (no RNG, no engine dependence)."""
     idx = ensure_ann_index(spark, sf_dir, rebuild=True)
-    codes = _read_codes_long(spark, idx)
-    pq = codes.groupBy("sub").agg(
+    codes, ivf = _index_tables(spark, idx, "pq_codes", "ivf_cells")
+    pq = _codes_long(codes, "c").groupBy("sub").agg(
         F.countDistinct("cell").alias("n_cells"), F.count(F.lit(1)).alias("n_rows")
     ).select(
         F.concat(F.lit("pq_sub_"), F.col("sub").cast("string")).alias("component"),
         "n_cells",
         "n_rows",
     )
-    ivf = scan(spark, os.path.join(idx, "ivf_cells.parquet"))
     ivf_row = ivf.agg(
         F.countDistinct("ivf_cell").alias("n_cells"), F.count(F.lit(1)).alias("n_rows")
     ).select(F.lit("ivf").alias("component"), "n_cells", "n_rows")
@@ -391,9 +343,8 @@ def similarity_topk_pq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost moved to `similarity_index_build`, which is the whole point:
     at 16B vectors the query job reads 2 bytes/vector, not 256."""
     idx = ensure_ann_index(spark, sf_dir)
-    lut = _query_lut(spark, sf_dir, idx)
-    cand = _read_codes_long(spark, idx).withColumnRenamed("vec_id", "cid")
-    return adc_topk(cand, lut, ["sub", "cell"], 5)
+    emb = read_table(spark, sf_dir, "embeddings")
+    return pq_adc_topk(emb, *_index_tables(spark, idx, "pq_codebook", "pq_codes"), 5)
 
 
 @query("similarity_topk_ivfpq_stored", _IVFPQ_ORACLE)
@@ -406,16 +357,10 @@ def similarity_topk_ivfpq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     column: each executor holds whole cells of codes and a query
     touches only the executors owning its probed cells."""
     idx = ensure_ann_index(spark, sf_dir)
-    ivf = scan(spark, os.path.join(idx, "ivf_cells.parquet"))
-    lutq = _query_lut(spark, sf_dir, idx).join(
-        ivf.withColumnRenamed("vec_id", "qid"), "qid"
+    emb = read_table(spark, sf_dir, "embeddings")
+    return ivfpq_top5(
+        emb, *_index_tables(spark, idx, "pq_codebook", "pq_codes", "ivf_cells")
     )
-    cand = (
-        _read_codes_long(spark, idx)
-        .join(ivf, "vec_id")
-        .withColumnRenamed("vec_id", "cid")
-    )
-    return adc_topk(cand, lutq, ["sub", "cell", "ivf_cell"], 5)
 
 
 @query("similarity_topk_pq_refine_stored", _PQ_REFINE_ORACLE)
@@ -426,23 +371,9 @@ def similarity_topk_pq_refine_stored(spark: SparkSession, sf_dir: str) -> DataFr
     (broadcast semi-join on vec_id against the embeddings scan — the big
     side is probed, never shuffled) for the exact L2 re-rank to top-5."""
     idx = ensure_ann_index(spark, sf_dir)
-    lut = _query_lut(spark, sf_dir, idx)
-    cand = _read_codes_long(spark, idx).withColumnRenamed("vec_id", "cid")
-    short = adc_topk(cand, lut, ["sub", "cell"], _PQ_REFINE_R, shortlist=True)
-    return _refine_top5(read_table(spark, sf_dir, "embeddings"), short)
-
-
-def _ivfadc_stored_top5(spark: SparkSession, idx: str, q_resid: DataFrame) -> DataFrame:
-    """ADC top-5 of the query residuals ``q_resid`` (`_ivf_residuals`,
-    one row per probed cell) against the stored residual codebook and
-    codes: a candidate is scored by the LUT of the probe matching its
-    own stored cell."""
-    rcw = scan(spark, os.path.join(idx, "ivfadc_codebook.parquet"))
-    q = _subvec_split(q_resid, "r6", "rsv", carry=("ivf_cell",))
-    lut = _ivfadc_lut(q, rcw)
-    rcodes = scan(spark, os.path.join(idx, "ivfadc_codes.parquet"))
-    cand = _codes_long(rcodes, "rc", cid="cid", carry=("ivf_cell",))
-    return adc_topk(cand, lut, ["sub", "cell", "ivf_cell"], 5)
+    emb = read_table(spark, sf_dir, "embeddings")
+    cw, codes = _index_tables(spark, idx, "pq_codebook", "pq_codes")
+    return _refine_top5(emb, pq_adc_topk(emb, cw, codes, _PQ_REFINE_R, shortlist=True))
 
 
 @query("similarity_topk_ivfadc_stored", _IVFADC_ORACLE)
@@ -457,12 +388,12 @@ def similarity_topk_ivfadc_stored(spark: SparkSession, sf_dir: str) -> DataFrame
     training and corpus encoding paid by `similarity_index_build`."""
     idx = ensure_ann_index(spark, sf_dir)
     emb = read_table(spark, sf_dir, "embeddings")
-    ivf = scan(spark, os.path.join(idx, "ivf_cells.parquet"))
-    cents = scan(spark, os.path.join(idx, "ivf_centroids.parquet"))
-    q_resid = _ivf_residuals(
-        emb.where(F.col("vec_id") < 20), ivf.where(F.col("vec_id") < 20), cents
+    return ivfadc_top5(
+        emb,
+        *_index_tables(
+            spark, idx, "ivf_centroids", "ivf_cells", "ivfadc_codebook", "ivfadc_codes"
+        ),
     )
-    return _ivfadc_stored_top5(spark, idx, q_resid)
 
 
 @query("similarity_topk_ivfadc_multiprobe_stored", _IVFADC_MP_ORACLE)
@@ -475,24 +406,14 @@ def similarity_topk_ivfadc_multiprobe_stored(spark: SparkSession, sf_dir: str) -
     — the ivf_cells_multi kernel driven by the persisted codebook, no
     retraining), builds one LUT per probed cell from the residual to
     THAT centroid, and candidates are scored by the matching probe's
-    LUT. Same oracle as the in-query form — the stored index is
-    deterministic, so probing it must reproduce the retrain-per-query
-    results exactly."""
-    from ..operators.similarity import probes_from_centroids
-
+    LUT. Same oracle and same read as the in-query form, which probes
+    the centroids of `pq_common.ivf_family` instead of the stored ones —
+    the index is deterministic, so both give the same results."""
     idx = ensure_ann_index(spark, sf_dir)
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = scan(spark, os.path.join(idx, "ivf_centroids.parquet"))
-    probes = probes_from_centroids(
-        emb.where(F.col("vec_id") < 20), cents, nprobe=2
+    return ivfadc_multiprobe_top5(
+        emb, *_index_tables(spark, idx, "ivf_centroids", "ivfadc_codebook", "ivfadc_codes")
     )
-    q_resid = _ivf_residuals(
-        emb.where(F.col("vec_id") < 20),
-        probes.select("vec_id", F.col("cell").alias("probe_cell")),
-        cents,
-        cell="probe_cell",
-    )
-    return _ivfadc_stored_top5(spark, idx, q_resid)
 
 
 # ---------------------------------------------------------------------------

@@ -56,22 +56,19 @@ from .pq_common import (
     _IVFADC_ORACLE,
     _IVFPQ_ORACLE,
     _PQ_CODE_CTE,
+    _PQ_M,
     _PQ_REFINE_ORACLE,
     _PQ_REFINE_R,
     _PQ_TOPK_ORACLE,
-    _ivf_residuals,
-    _ivfadc_codebook,
-    _ivfadc_lut,
-    _ivfadc_residuals,
-    _ivfadc_subvecs,
-    _pq_codebook,
-    _pq_d2,
-    _pq_lut,
-    _pq_subvecs,
     _recall_at_5,
     _refine_top5,
-    _subvec_split,
-    adc_topk,
+    ivf_family,
+    ivfadc_family,
+    ivfadc_multiprobe_top5,
+    ivfadc_top5,
+    ivfpq_top5,
+    pq_adc_topk,
+    pq_family,
 )
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -216,29 +213,23 @@ def embedding_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration, no argmin tie-breaks (the code IS the cell, exact integer
     arithmetic decides it). 4 codes of 4 bits = 2 bytes per vector.
 
-    Plan: coding is pure per-row codegen (`_pq_subvecs` — no dimension
-    explode, no shuffle); training is ONE map-side-combinable avg over
-    the exploded dims (`_pq_codebook`); scoring joins the 64-row
-    broadcast codebook back to the 4-rows-per-vector relation and folds
-    the squared error inside zip_with — the vector dimensions cross the
+    Plan: a projection of the ``pq_codes`` relation of
+    `pq_common.pq_family` — the table the stored index writes. Coding is
+    pure per-row codegen over the pinned corpus subvectors (no dimension
+    explode, no shuffle); training is ONE map-side-combinable mean over
+    the exploded dims; the codes are the 64-row broadcast codebook
+    joined back to the 4-rows-per-vector relation, one 6-dp squared
+    error per row, pivoted per vector — the vector dimensions cross the
     shuffle exactly once, for training. A production deployment trains
     the codebook on a sample; the fixture trains on the full set so the
     oracle is exactly reproducible."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    sv = _pq_subvecs(emb)
-    cw = _pq_codebook(sv)
-    qe = sv.join(F.broadcast(cw), ["sub", "cell"]).select(
-        "vec_id", "sub", "cell", _pq_d2("sv", "carr").alias("d2")
-    )
-    return qe.groupBy("vec_id").agg(
-        F.concat_ws(
-            "|",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("sub", "cell"))),
-                lambda s: s["cell"].cast("string"),
-            ),
-        ).alias("codes"),
-        r6(F.sum("d2")).alias("qerr"),
+    _, codes, _ = pq_family(read_table(spark, sf_dir, "embeddings"))
+    return codes.select(
+        "vec_id",
+        F.concat_ws("|", *(F.col(f"c{s}").cast("string") for s in range(_PQ_M))).alias(
+            "codes"
+        ),
+        "qerr",
     )
 
 
@@ -254,15 +245,15 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The LUT is (n_queries x <=64 cells) — broadcast-sized by
     construction since queries are the small side of any ANN batch; the
-    codebook itself is <=64 rows of 16 doubles. The LUT build joins the
-    20 query subvector rows against the broadcast codebook on `sub`
-    alone (every cell is a lookup entry) and folds each squared distance
-    inside zip_with — no per-dimension rows anywhere at query time."""
+    codebook itself is <=64 rows of 16 integers. The LUT build joins the
+    20 query subvector rows (slices only, no sign cells) against the
+    broadcast codebook on `sub` alone (every cell is a lookup entry) —
+    no per-dimension rows anywhere at query time. The read is
+    `similarity_topk_pq_stored`'s over the `pq_common.pq_family`
+    relations instead of their stored files."""
     emb = read_table(spark, sf_dir, "embeddings")
-    sv = _pq_subvecs(emb)
-    lut = _pq_lut(sv.where(F.col("vec_id") < 20), _pq_codebook(sv))
-    cand = sv.select(F.col("vec_id").alias("cid"), "sub", "cell")
-    return adc_topk(cand, lut, ["sub", "cell"], 5)
+    cw, codes, _ = pq_family(emb)
+    return pq_adc_topk(emb, cw, codes, 5)
 
 
 @query("similarity_topk_pq_refine", _PQ_REFINE_ORACLE)
@@ -280,11 +271,8 @@ def similarity_topk_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     is probed, never shuffled. Everything upstream is the
     `similarity_topk_pq` plan (codes + broadcast LUT)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    sv = _pq_subvecs(emb)
-    lut = _pq_lut(sv.where(F.col("vec_id") < 20), _pq_codebook(sv))
-    cand = sv.select(F.col("vec_id").alias("cid"), "sub", "cell")
-    short = adc_topk(cand, lut, ["sub", "cell"], _PQ_REFINE_R, shortlist=True)
-    return _refine_top5(emb, short)
+    cw, codes, _ = pq_family(emb)
+    return _refine_top5(emb, pq_adc_topk(emb, cw, codes, _PQ_REFINE_R, shortlist=True))
 
 
 @query("similarity_topk_ivfpq", _IVFPQ_ORACLE)
@@ -305,26 +293,10 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells ARE the partitioning: each executor holds whole cells of
     2-byte codes, and a query touches exactly the executors owning its
     probed cells."""
-    from ..operators.similarity import ivf_cells
-
     emb = read_table(spark, sf_dir, "embeddings")
-    _, icells = ivf_cells(emb)
-    # the coarse assignment (numpy kernel over |vectors| x |centroids|)
-    # feeds BOTH the query LUT and the candidate stream — persist the
-    # 2-int-per-vector result so the kernel runs once, not twice
-    # localCheckpoint, not persist: truncates lineage for the two
-    # consumers without parking a CacheManager entry for the session
-    # lifetime (ADVICE r3 leak pattern; same fix as sql_recursive_bom)
-    ivf = icells.select("vec_id", F.col("cell").alias("ivf_cell")).transform(_pin_lazy)
-    sv = _pq_subvecs(emb)
-    lut = _pq_lut(sv.where(F.col("vec_id") < 20), _pq_codebook(sv))
-    lutq = lut.join(ivf.withColumnRenamed("vec_id", "qid"), "qid")
-    cand = (
-        sv.select("vec_id", "sub", "cell")
-        .join(ivf, "vec_id")
-        .withColumnRenamed("vec_id", "cid")
-    )
-    return adc_topk(cand, lutq, ["sub", "cell", "ivf_cell"], 5)
+    cw, codes, _ = pq_family(emb)
+    _, cells = ivf_family(emb)
+    return ivfpq_top5(emb, cw, codes, cells)
 
 
 # ---------------------------------------------------------------------------
@@ -597,14 +569,10 @@ def similarity_topk_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     sign projections; floor(sum/count+0.5) integer codewords; integer
     squared distances) — no float-sum-order exposure anywhere before
     the final 6dp division."""
-    resid = _ivfadc_residuals(spark, sf_dir)
-    # sv feeds codebook training, the query LUT and the candidate
-    # stream: truncate its lineage so the coarse numpy kernel + coding
-    # run once, not once per consumer (3.3x at the 250x smoke)
-    sv = _ivfadc_subvecs(resid).transform(_pin_lazy)
-    lut = _ivfadc_lut(sv.where(F.col("vec_id") < 20), _ivfadc_codebook(sv))
-    cand = sv.select(F.col("vec_id").alias("cid"), "ivf_cell", "sub", "cell")
-    return adc_topk(cand, lut, ["sub", "cell", "ivf_cell"], 5)
+    emb = read_table(spark, sf_dir, "embeddings")
+    centroids, cells = ivf_family(emb)
+    rcw, rcodes, _ = ivfadc_family(emb, centroids, cells)
+    return ivfadc_top5(emb, centroids, cells, rcw, rcodes)
 
 
 _IVFADC_RECALL_ORACLE = f"""
@@ -681,29 +649,13 @@ def similarity_topk_ivfadc_multiprobe(spark: SparkSession, sf_dir: str) -> DataF
     Same integer-exact determinism as `similarity_topk_ivfadc`; the
     probe table is 2 rows per query, both codebooks broadcast, and a
     candidate is scored at most once per probing query (cells
-    partition the corpus)."""
-    from ..operators.similarity import ivf_cells_multi
-
+    partition the corpus). Queries probe the one coarse layer of
+    `pq_common.ivf_family` through `probes_from_centroids`, exactly as
+    the stored twin probes the stored centroids."""
     emb = read_table(spark, sf_dir, "embeddings")
-    resid = _ivfadc_residuals(spark, sf_dir)
-    # sv feeds codebook training, the query LUT and the candidate
-    # stream: truncate its lineage so the coarse numpy kernel + coding
-    # run once, not once per consumer (3.3x at the 250x smoke)
-    sv = _ivfadc_subvecs(resid).transform(_pin_lazy)
-    cw = _ivfadc_codebook(sv)
-    centroids, probes = ivf_cells_multi(emb, nprobe=2)
-    q_resid = _ivf_residuals(
-        emb.where(F.col("vec_id") < 20),
-        probes.where(F.col("vec_id") < 20).select(
-            "vec_id", F.col("cell").alias("probe_cell")
-        ),
-        centroids,
-        cell="probe_cell",
-    )
-    q = _subvec_split(q_resid, "r6", "rsv", carry=("ivf_cell",))
-    lut = _ivfadc_lut(q, cw)
-    cand = sv.select(F.col("vec_id").alias("cid"), "ivf_cell", "sub", "cell")
-    return adc_topk(cand, lut, ["sub", "cell", "ivf_cell"], 5)
+    centroids, cells = ivf_family(emb)
+    rcw, rcodes, _ = ivfadc_family(emb, centroids, cells)
+    return ivfadc_multiprobe_top5(emb, centroids, rcw, rcodes)
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,18 @@
-"""Shared PQ / IVFADC building blocks (LEAF module).
+"""Shared PQ / IVFADC building blocks and the ANN index (LEAF module).
 
-Constants, oracle CTE fragments and DataFrame helpers used by BOTH the
-in-query compressed-ANN tier (`plans/dsel_ops.py`) and the stored-index
-tier (`plans/ann_index.py`). A leaf module: it imports only pyspark and
-the operator layer — never `registry` or another plan module — so any
-plan file can pull these at import time without re-entering the
-registry's import chain half-initialized (importing dsel_ops directly
-used to crash exactly that way once ann_index imported its symbols).
+The index is defined here once, as three lazy families over one
+embeddings frame (``pq_family``, ``ivf_family``, ``ivfadc_family``),
+and each query shape has one read path over the index relations
+(``pq_adc_topk``, ``ivfpq_top5``, ``ivfadc_top5``,
+``ivfadc_multiprobe_top5``). The stored-index tier
+(`plans/ann_index.py`) writes the families and passes scans of the
+written tables to the read paths; the in-query tier
+(`plans/dsel_ops.py`) passes the family frames. A leaf module: it
+imports only pyspark and the function and operator layers — never
+`registry` or another plan module — so any plan file can pull these at
+import time without re-entering the registry's import chain
+half-initialized (importing dsel_ops directly used to crash exactly
+that way once ann_index imported its symbols).
 
 Every ANN read ranks through ONE path: ``adc_topk`` is the only ADC
 scoring kernel (broadcast LUT join, self-match dropped, per-pair 6-dp
@@ -14,8 +20,8 @@ sum) and `operators.similarity.topk_per_query` the only per-query
 top-k rule (row_number over qid ordered by distance, then ``cid``).
 Their SQL twins are the oracles below: the ``adc`` CTE and its
 ``row_number() OVER (PARTITION BY qid ORDER BY adc_d2, cid)``. The
-query LUTs, the IVFADC codebook, the stored-code explode and the
-exact refine / recall tails sit beside the codebooks they read.
+query LUTs, the stored-code explode and the exact refine / recall
+tails sit beside the codebooks they read.
 
 Vectors are cut into subvectors by ONE split, ``_subvec_split``. The
 coding side (``_pq_subvecs``, ``_ivfadc_subvecs``) is the split plus
@@ -36,7 +42,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.det import (
@@ -47,9 +53,9 @@ from ..functions.det import (
     quant_sql,
     r6,
 )
+from ..functions.pin import pin
 from ..functions.vectors import d2r6_grid
-from ..operators.similarity import topk_per_query
-from ..sources import read_table
+from ..operators.similarity import ivf_cells, probes_from_centroids, topk_per_query
 
 # Exact-integer 1e-6 grid mean (functions/det.py): every centroid /
 # codeword mean below is pinned so its value is independent of Spark's
@@ -156,7 +162,7 @@ def _subvec_split(
         for s in range(_PQ_M)
     )
     keep = ["vec_id", *carry]
-    sc_arr = f"array({structs})"
+    gen = f"explode(array({structs}))"
     if cell:
         # Code-bearing structs materialize the array as its OWN projection
         # attribute and explode the attribute: with the array constructor
@@ -165,13 +171,15 @@ def _subvec_split(
         # join feeding d2) grew past janino's 64 KB method limit — ERROR
         # CodeGenerator, silent interpreted fallback. Project expressions
         # split into helper methods; Generate's doConsume cannot. The
-        # price: exploding an attribute makes Catalyst infer
-        # size(attr) > 0 and push it below the projection as a second
-        # copy of the whole array. Four bare slices cannot reach the
-        # limit, so the cell-free split stays inline and skips it.
-        df = df.select(*keep, F.expr(sc_arr).alias("sc_arr"))
-        sc_arr = "sc_arr"
-    return df.select(*keep, F.expr(f"explode({sc_arr})").alias("sc")).select(
+        # explode is OUTER: a plain explode of an attribute makes
+        # Catalyst infer size(attr) > 0 and push it below the projection
+        # as a second copy of the whole array, so every row would sum
+        # its sign planes twice; the array always holds 4 structs, so
+        # the outer form yields the same rows. Four bare slices cannot
+        # reach the limit, so the cell-free split stays inline.
+        df = df.select(*keep, F.expr(f"array({structs})").alias("sc_arr"))
+        gen = "explode_outer(sc_arr)"
+    return df.select(*keep, F.expr(gen).alias("sc")).select(
         *keep, "sc.sub", *(["sc.cell"] if cell else []), f"sc.{out}"
     )
 
@@ -250,13 +258,15 @@ def _pq_d2(sv: str, carr: str):
     )
 
 
-def _pq_lut(sv_q: DataFrame, cw: DataFrame) -> DataFrame:
-    """(qid, sub, cell, pd2): the PQ query LUT. Each query subvector of
-    ``sv_q`` (vec_id, sub, sv) is scored against every codeword of the
+def _query_lut(emb: DataFrame, cw: DataFrame) -> DataFrame:
+    """(qid, sub, cell, pd2): the PQ query LUT. Each subvector of the 20
+    query vectors of ``emb`` is scored against every codeword of the
     broadcast codebook ``cw`` (sub, cell, carr); queries keep full
-    precision under ADC."""
+    precision under ADC. The only float-vector read of a PQ query
+    outside the refine tail's R-row fetch."""
+    q = _subvec_split(_pq_grid(emb.where(F.col("vec_id") < 20)), "eq", "sv")
     return (
-        sv_q.select(F.col("vec_id").alias("qid"), "sub", "sv")
+        q.select(F.col("vec_id").alias("qid"), "sub", "sv")
         .join(F.broadcast(cw), "sub")
         .select("qid", "sub", "cell", _pq_d2("sv", "carr").alias("pd2"))
     )
@@ -516,20 +526,6 @@ def _ivf_residuals(
     )
 
 
-def _ivfadc_residuals(spark: SparkSession, sf_dir: str, coarse=None):
-    """`_ivf_residuals` of the whole corpus against its coarse
-    assignment. Pass ``coarse`` = (centroids, cells) to reuse an
-    assignment already computed — the numpy coarse kernel is the
-    dominant cost at 500k+ vectors and the index build needs the same
-    relation twice."""
-    from ..operators.similarity import ivf_cells
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    centroids, icells = coarse if coarse is not None else ivf_cells(emb)
-    ivf = icells.select("vec_id", F.col("cell").alias("ivf_cell"))
-    return _ivf_residuals(emb, ivf, centroids)
-
-
 def _ivfadc_subvecs(resid: DataFrame) -> DataFrame:
     """(vec_id, ivf_cell, sub, cell, rsv): residual sign-cell coding —
     the `_subvec_split` of the integer residual array plus each slice's
@@ -573,24 +569,6 @@ def _ivfadc_codebook(rsv: DataFrame) -> DataFrame:
         .groupBy("sub", "cell")
         .agg(F.array_sort(F.collect_list(F.struct("p", "c"))).alias("pc"))
         .select("sub", "cell", F.col("pc.c").alias("cw6"))
-    )
-
-
-def _ivfadc_lut(rsv_q: DataFrame, rcw: DataFrame) -> DataFrame:
-    """(qid, ivf_cell, sub, cell, pd2): the IVFADC query LUT. Each query
-    residual subvector of ``rsv_q`` (`_ivfadc_subvecs` rows; one
-    ``ivf_cell`` per probed cell) is scored against every codeword of the
-    broadcast residual codebook ``rcw``."""
-    return (
-        rsv_q.select(F.col("vec_id").alias("qid"), "ivf_cell", "sub", "rsv")
-        .join(F.broadcast(rcw), "sub")
-        .select(
-            "qid",
-            "ivf_cell",
-            "sub",
-            "cell",
-            _ivfadc_d2("rsv", "cw6").alias("pd2"),
-        )
     )
 
 
@@ -753,3 +731,131 @@ def _recall_at_5(emb: DataFrame, approx5: DataFrame) -> DataFrame:
             / (F.lit(5.0) * F.count(F.lit(1)))
         ).alias("recall_at_5"),
     )
+
+
+# ---------------------------------------------------------------------------
+# the index: three lazy families over one embeddings frame, and the reads
+# ---------------------------------------------------------------------------
+#
+# Every index relation is defined ONCE, here. `ann_index.build_ann_index`
+# writes the families; a stored query passes `scan` of the written files
+# and its in-query twin passes the family frames to the same read path,
+# so the two can only differ in where the relations come from. Each
+# family lazily pins just its own intermediates that have more than one
+# consumer, and a query calls only the families it reads, so it runs no
+# job and holds no pin for a relation it does not read. Two steps do
+# run when a family is called: `ivf_cells` collects its KB-scale
+# centroids, and under AQE a lazy localCheckpoint runs the shuffle
+# stages upstream of it — which is why the build calls each family on
+# the thread of the chain that writes it.
+
+
+def _code_cols(prefix: str) -> list[Column]:
+    """A vector's 4 (sub, cell) rows pivoted to ``<prefix>0..3`` in one
+    aggregate — the inverse of `_codes_long`. Spelled with ``if``, the
+    form Spark's own pivot plans, so the pivot adds no CASE WHEN to a
+    plan whose CASE WHEN count stands for its sign-cell sums."""
+    return [F.expr(f"min(if(sub = {s}, cell, NULL))").alias(f"{prefix}{s}") for s in range(_PQ_M)]
+
+
+def pq_family(emb: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(pq_codebook (sub, cell, carr), pq_codes (vec_id, c0..c3, qerr),
+    sv): the PQ index of ``emb``. The corpus subvectors ``sv`` feed the
+    codebook and the codes, so they are pinned; they are returned so a
+    build can free them once both tables are written. ``qerr`` is the
+    vector's 6-dp quantization error against its codewords."""
+    sv = _pq_subvecs(emb).transform(pin)
+    cw = _pq_codebook(sv)
+    qe = sv.join(F.broadcast(cw), ["sub", "cell"]).select(
+        "vec_id", "sub", "cell", _pq_d2("sv", "carr").alias("d2")
+    )
+    codes = qe.groupBy("vec_id").agg(*_code_cols("c"), r6(F.sum("d2")).alias("qerr"))
+    return cw, codes, sv
+
+
+def ivf_family(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(ivf_centroids (cent_id, centroid), ivf_cells (vec_id, ivf_cell)):
+    the coarse IVF layer of ``emb`` (`operators.similarity.ivf_cells`).
+    The cells are the numpy kernel over |vectors| x |centroids| and
+    have two consumers in the IVF-PQ read (query and candidate side),
+    the nprobe=1 IVFADC read (query side and residual layer) and the
+    build (the cells write and the residual layer), so they are
+    pinned."""
+    centroids, cells = ivf_cells(emb)
+    return centroids, cells.select("vec_id", F.col("cell").alias("ivf_cell")).transform(pin)
+
+
+def ivfadc_family(
+    emb: DataFrame, centroids: DataFrame, cells: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(ivfadc_codebook (sub, cell, cw6), ivfadc_codes (vec_id, ivf_cell,
+    rc0..rc3), rsv): the residual PQ layer (Jegou et al. 2011 §V) over
+    the coarse family ``centroids``/``cells`` of ``emb``. The residual
+    subvectors ``rsv`` feed the codebook and the codes, so they are
+    pinned, and returned so a build can free them."""
+    rsv = _ivfadc_subvecs(_ivf_residuals(emb, cells, centroids)).transform(pin)
+    codes = rsv.groupBy("vec_id").agg(F.min("ivf_cell").alias("ivf_cell"), *_code_cols("rc"))
+    return _ivfadc_codebook(rsv), codes, rsv
+
+
+def pq_adc_topk(
+    emb: DataFrame, cw: DataFrame, codes: DataFrame, k: int, shortlist: bool = False
+) -> DataFrame:
+    """ADC top-``k`` of the 20 query vectors of ``emb`` over the PQ
+    index (``cw``, ``codes``): candidates are the 4-nibble codes, scored
+    by `_query_lut`."""
+    cand = _codes_long(codes, "c").withColumnRenamed("vec_id", "cid")
+    return adc_topk(cand, _query_lut(emb, cw), ["sub", "cell"], k, shortlist)
+
+
+def ivfpq_top5(emb: DataFrame, cw: DataFrame, codes: DataFrame, cells: DataFrame) -> DataFrame:
+    """IVF-PQ top-5: the PQ read of `pq_adc_topk`, with each query's
+    candidates cut to its own coarse cell by joining ``cells`` on both
+    the LUT and the candidate side."""
+    lutq = _query_lut(emb, cw).join(cells.withColumnRenamed("vec_id", "qid"), "qid")
+    cand = _codes_long(codes, "c").join(cells, "vec_id").withColumnRenamed("vec_id", "cid")
+    return adc_topk(cand, lutq, ["sub", "cell", "ivf_cell"], 5)
+
+
+def _ivfadc_residual_top5(
+    q_resid: DataFrame, rcw: DataFrame, rcodes: DataFrame
+) -> DataFrame:
+    """ADC top-5 of the query residuals ``q_resid`` (`_ivf_residuals`,
+    one row per probed cell) against the residual codebook ``rcw`` and
+    codes ``rcodes``: a candidate is scored by the LUT of the probe
+    matching its own cell."""
+    q = _subvec_split(q_resid, "r6", "rsv", carry=("ivf_cell",))
+    lut = (
+        q.select(F.col("vec_id").alias("qid"), "ivf_cell", "sub", "rsv")
+        .join(F.broadcast(rcw), "sub")
+        .select("qid", "ivf_cell", "sub", "cell", _ivfadc_d2("rsv", "cw6").alias("pd2"))
+    )
+    cand = _codes_long(rcodes, "rc", cid="cid", carry=("ivf_cell",))
+    return adc_topk(cand, lut, ["sub", "cell", "ivf_cell"], 5)
+
+
+def ivfadc_top5(
+    emb: DataFrame, centroids: DataFrame, cells: DataFrame, rcw: DataFrame, rcodes: DataFrame
+) -> DataFrame:
+    """IVFADC top-5 at nprobe=1: each query's residual to the centroid
+    of its own cell (the 20-row slice of ``cells``)."""
+    q_resid = _ivf_residuals(
+        emb.where(F.col("vec_id") < 20), cells.where(F.col("vec_id") < 20), centroids
+    )
+    return _ivfadc_residual_top5(q_resid, rcw, rcodes)
+
+
+def ivfadc_multiprobe_top5(
+    emb: DataFrame, centroids: DataFrame, rcw: DataFrame, rcodes: DataFrame
+) -> DataFrame:
+    """IVFADC top-5 at nprobe=2: each query probes its two nearest
+    ``centroids`` (`operators.similarity.probes_from_centroids`) with one
+    residual, and one LUT, per probed cell."""
+    probes = probes_from_centroids(emb.where(F.col("vec_id") < 20), centroids, nprobe=2)
+    q_resid = _ivf_residuals(
+        emb.where(F.col("vec_id") < 20),
+        probes.select("vec_id", F.col("cell").alias("probe_cell")),
+        centroids,
+        cell="probe_cell",
+    )
+    return _ivfadc_residual_top5(q_resid, rcw, rcodes)

@@ -204,6 +204,84 @@ def test_no_hand_written_ann_topk():
 
 
 
+def test_one_ann_index_definition():
+    """The ANN index relations are defined once, by the families in
+    plans.pq_common (pq_family, ivf_family, ivfadc_family): codebook
+    training (_pq_codebook, _ivfadc_codebook), the codes pivot
+    (min over a per-sub condition on cell) and a second coarse layer
+    (ivf_cells_multi) appear in an index reader — pq_common or a module
+    importing it — only inside that definition; every other reader takes
+    the family frames or scans of the stored tables. Parsed, not
+    grepped."""
+    import ast
+    import pathlib
+
+    import sow_pyspark_scripts_spark as pkg
+
+    definition = {"pq_family", "ivf_family", "ivfadc_family", "_code_cols"}
+    # the delta encode trains its codebook on the BASE slice only (a
+    # frozen codebook), which is not an index relation
+    allowed = {("ann_index.py", "embedding_pq_encode_delta")}
+    calls = {"_pq_codebook", "_ivfadc_codebook", "ivf_cells_multi"}
+
+    def name(node):
+        f = node.func
+        return getattr(f, "attr", None) or getattr(f, "id", None)
+
+    def is_pivot(node):
+        # F.min(F.when(F.col("sub") == ..., ...)) or F.expr("min(if(sub = ...")
+        if not (isinstance(node, ast.Call) and node.args):
+            return False
+        arg = node.args[0]
+        if name(node) == "expr":
+            return any(
+                isinstance(c, ast.Constant) and "min(if(sub =" in str(c.value)
+                for c in ast.walk(arg)
+            )
+        if name(node) != "min" or not (
+            isinstance(arg, ast.Call) and name(arg) == "when" and arg.args
+        ):
+            return False
+        cmp = arg.args[0]
+        return (
+            isinstance(cmp, ast.Compare)
+            and isinstance(cmp.left, ast.Call)
+            and name(cmp.left) == "col"
+            and [getattr(a, "value", None) for a in cmp.left.args] == ["sub"]
+        )
+
+    def offends(node):
+        return isinstance(node, ast.Call) and (name(node) in calls or is_pivot(node))
+
+    root = pathlib.Path(pkg.__file__).parent / "plans"
+    offenders = []
+    for py in sorted(root.rglob("*.py")):
+        src = py.read_text()
+        if py.name != "pq_common.py" and "from .pq_common import" not in src:
+            continue
+        tree = ast.parse(src)
+        inside = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef)
+            and (
+                (py.name == "pq_common.py" and fn.name in definition)
+                or (py.name, fn.name) in allowed
+            )
+            for n in ast.walk(fn)
+        }
+        offenders += [
+            f"plans/{py.name}:{node.lineno}"
+            for node in ast.walk(tree)
+            if offends(node) and id(node) not in inside
+        ]
+    assert not offenders, (
+        f"{len(offenders)} ANN index relations built outside the index "
+        "definition (use pq_common.pq_family / ivf_family / ivfadc_family):\n"
+        + "\n".join(offenders)
+    )
+
+
 def test_no_hand_written_staging_or_drain():
     """Derived artifacts are staged through one protocol,
     sources.staging.stage, and the streaming twins drain through one

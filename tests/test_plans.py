@@ -447,16 +447,23 @@ def test_refine_stored_rereads_vectors_for_refine_only(spark):
         "similarity_topk_pq_stored",
         "similarity_topk_ivfpq_stored",
         "similarity_topk_pq_refine_stored",
-        # in-query, but its corpus sv is pinned: a sign cell left in the
-        # plan can only come from the query-side LUT
+        # in-query: the index families pin their corpus subvectors, so a
+        # sign cell left in the plan can only come from the query side
+        "similarity_topk_pq",
+        "similarity_topk_pq_refine",
+        "similarity_topk_ivfpq",
+        "similarity_topk_ivfadc",
         "similarity_topk_ivfadc_multiprobe",
+        "embedding_pq_encode",
     ],
 )
 def test_query_lut_plans_carry_no_sign_cells(spark, name):
     """A query LUT reads the query's subvector slices only. Catalyst
     does not prune an unused field of a struct built inside
     explode(array(...)), so query subvectors built with their sign cells
-    plan 16-32 unrolled CASE WHEN plane sums that no operator reads."""
+    plan 16-32 unrolled CASE WHEN plane sums that no operator reads. The
+    in-query forms read the corpus codes through the index families,
+    whose coded subvectors are pinned, so their plans hold none either."""
     df = QUERIES[name](spark, SF_DIR)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     n = plan.count("CASE WHEN")

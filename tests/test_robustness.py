@@ -154,10 +154,19 @@ def test_queries_survive_empty_input(spark, tmp_path_factory):
     operator families with nontrivial empty-edge behavior (Arrow GEMM
     broadcasts, partitioned-write round-trips, iterative algorithms,
     windows, percentiles); the full 324-query sweep was run once
-    offline and these were the only failure modes found (all fixed)."""
+    offline and these were the only failure modes found (all fixed).
+    The ANN tier (in-query and stored, the index build and the recall
+    gates) is also run on a one-row embeddings table: one vector codes
+    and trains every codebook, but no query has a candidate."""
+    import os
+    import shutil
+    import tempfile
+
     import __spark_entry__ as entrymod
+    from sow_pyspark_scripts_spark.sources.staging import sf_tag
 
     base = tmp_path_factory.mktemp("sf_empty")
+    one = tmp_path_factory.mktemp("sf_one_vector")
     from .conftest import SF_DIR
 
     for t in [
@@ -167,6 +176,9 @@ def test_queries_survive_empty_input(spark, tmp_path_factory):
         spark.read.parquet(f"{SF_DIR}/{t}.parquet").limit(0).write.mode(
             "overwrite"
         ).parquet(str(base / f"{t}.parquet"))
+    spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(1).write.mode(
+        "overwrite"
+    ).parquet(str(one / "embeddings.parquet"))
     queries = entrymod.queries()
     for name in [
         "dedup_embedding_cosine",   # driver-side Arrow collect of the matrix
@@ -183,3 +195,34 @@ def test_queries_survive_empty_input(spark, tmp_path_factory):
         "flagship_incident_etl",
     ]:
         assert queries[name](spark, str(base)).count() == 0, name
+    # rows on (empty, one-row) embeddings: a global aggregate keeps its
+    # one row; the build audits 4 subquantizers + the coarse layer
+    ann = {
+        "embedding_pq_encode": (0, 1),
+        "similarity_topk_pq": (0, 0),
+        "similarity_topk_pq_refine": (0, 0),
+        "similarity_topk_ivfpq": (0, 0),
+        "similarity_topk_ivfadc": (0, 0),
+        "similarity_topk_ivfadc_multiprobe": (0, 0),
+        "similarity_topk_pq_stored": (0, 0),
+        "similarity_topk_pq_refine_stored": (0, 0),
+        "similarity_topk_ivfpq_stored": (0, 0),
+        "similarity_topk_ivfadc_stored": (0, 0),
+        "similarity_topk_ivfadc_multiprobe_stored": (0, 0),
+        "similarity_index_build": (1, 5),
+        "similarity_pq_recall": (1, 1),
+        "similarity_ivfadc_recall": (1, 1),
+        "similarity_ivfadc_multiprobe_recall": (1, 1),
+    }
+    index_root = os.path.join(tempfile.gettempdir(), "spark_ann_index")
+    try:
+        for name, want in ann.items():
+            got = tuple(len(queries[name](spark, str(d)).collect()) for d in (base, one))
+            assert got == want, (name, got)
+    finally:
+        # the fixture paths are unique to this run, so no later staging
+        # would ever sweep the indexes the stored queries built here
+        tags = tuple(sf_tag(str(d)) + "_" for d in (base, one))
+        for n in os.listdir(index_root) if os.path.isdir(index_root) else []:
+            if n.startswith(tags):
+                shutil.rmtree(os.path.join(index_root, n), ignore_errors=True)

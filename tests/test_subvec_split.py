@@ -6,11 +6,12 @@ codebook was trained on, for both integer grid forms."""
 from __future__ import annotations
 
 from sow_pyspark_scripts_spark.plans.pq_common import (
-    _ivfadc_residuals,
+    _ivf_residuals,
     _ivfadc_subvecs,
     _pq_grid,
     _pq_subvecs,
     _subvec_split,
+    ivf_family,
 )
 from sow_pyspark_scripts_spark.sources import read_table
 
@@ -31,7 +32,9 @@ def test_split_matches_pq_coding_slices(spark):
 
 
 def test_split_matches_ivfadc_coding_slices(spark):
-    resid = _ivfadc_residuals(spark, SF_DIR)
+    emb = read_table(spark, SF_DIR, "embeddings")
+    centroids, cells = ivf_family(emb)
+    resid = _ivf_residuals(emb, cells, centroids)
     split = _subvec_split(resid, "r6", "rsv", carry=("ivf_cell",))
     assert split.columns == ["vec_id", "ivf_cell", "sub", "rsv"]
     rows = _rows(split)
