@@ -232,7 +232,9 @@ def ivf_cells(emb: DataFrame, centroid_col: str = "label") -> tuple[DataFrame, D
     cells = each vector assigned to its NEAREST centroid by L2 (which need
     not be its own label).
 
-    Returns (centroids(cent_id, centroid), cells(vec_id, cell)). Distances
+    Returns (centroids(cent_id, centroid), cells(vec_id, cell)); the
+    centroids are collected for the assignment kernel, so they come back
+    as a local relation over those rows, not as a lazy frame. Distances
     are rounded to 6dp before the argmin so every engine picks the same
     cell on near-ties, and the centroids themselves are PINNED to the
     1e-6 grid via an exact-integer mean (``functions.det.mean_grid``):
@@ -308,7 +310,13 @@ def ivf_cells(emb: DataFrame, centroid_col: str = "label") -> tuple[DataFrame, D
             )
 
     cells = emb.select("vec_id", "embedding").mapInPandas(_assign, cells_schema)
-    return centroids, cells
+    # the centroids as a local relation over the rows just collected, with
+    # the lazy frame's schema: a consumer reads them without re-running
+    # the posexplode and the two aggregates behind them
+    import pandas as pd
+
+    local = pd.DataFrame(cent_rows, columns=["cent_id", "centroid"])
+    return emb.sparkSession.createDataFrame(local, centroids.schema), cells
 
 
 def topk_ivf(emb: DataFrame, query_pred: Column, k: int = 5) -> DataFrame:

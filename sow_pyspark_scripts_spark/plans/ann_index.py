@@ -7,14 +7,14 @@ family frames without writing them. The index is persisted the way
 `operators/dedup.band_signatures` models it for MinHash (probed by
 `dedup_minhash_incremental`):
 
-  - ``pq_codebook``     (sub, cell, carr)         — <=64 rows, KB-scale
+  - ``pq_codebook``     (carr)  — ONE row of 64 codewords, slot = sub * 16 + cell
   - ``pq_codes``        (vec_id, c0..c3, qerr)    — 4 nibbles/vector (the
     2-bytes-per-vector relation; a production layout packs c0..c3 into
     one SMALLINT — kept as columns here so the read plan stays
     oracle-checkable without bit twiddling)
   - ``ivf_centroids``   (cent_id, centroid)       — coarse codebook, KB-scale
   - ``ivf_cells``       (vec_id, ivf_cell)        — 2 ints/vector
-  - ``ivfadc_codebook`` (sub, cell, cw6)          — integer residual codewords
+  - ``ivfadc_codebook`` (cw6)   — ONE row of 64 residual codewords, same slots
   - ``ivfadc_codes``    (vec_id, ivf_cell, rc0..rc3) — residual codes
 
 Each ``*_stored`` query passes scans of these files to the read path
@@ -72,7 +72,6 @@ from .pq_common import (
     _PQ_REFINE_ORACLE,
     _PQ_REFINE_R,
     _PQ_TOPK_ORACLE,
-    _codes_long,
     _pq_codebook,
     _pq_d2,
     _pq_subvecs,
@@ -135,7 +134,7 @@ def build_ann_index(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     def _ivf_chain() -> None:
         spark.sparkContext.setJobDescription("ann build: ivf+ivfadc")
         centroids, cells = ivf_family(emb)
-        _write(centroids, "ivf_centroids")
+        _write(centroids.coalesce(1), "ivf_centroids")  # KB-scale: one file
         _write(cells, "ivf_cells")
         rcw, rcodes, rsv = ivfadc_family(emb, centroids, cells)
         _write(rcw, "ivfadc_codebook")
@@ -320,12 +319,15 @@ def similarity_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic quantization (no RNG, no engine dependence)."""
     idx = ensure_ann_index(spark, sf_dir, rebuild=True)
     codes, ivf = _index_tables(spark, idx, "pq_codes", "ivf_cells")
-    pq = _codes_long(codes, "c").groupBy("sub").agg(
-        F.countDistinct("cell").alias("n_cells"), F.count(F.lit(1)).alias("n_rows")
-    ).select(
-        F.concat(F.lit("pq_sub_"), F.col("sub").cast("string")).alias("component"),
-        "n_cells",
-        "n_rows",
+    pq = (
+        codes.selectExpr("stack(4, 0L, c0, 1L, c1, 2L, c2, 3L, c3) AS (sub, cell)")
+        .groupBy("sub")
+        .agg(F.countDistinct("cell").alias("n_cells"), F.count(F.lit(1)).alias("n_rows"))
+        .select(
+            F.concat(F.lit("pq_sub_"), F.col("sub").cast("string")).alias("component"),
+            "n_cells",
+            "n_rows",
+        )
     )
     ivf_row = ivf.agg(
         F.countDistinct("ivf_cell").alias("n_cells"), F.count(F.lit(1)).alias("n_rows")

@@ -243,11 +243,11 @@ def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-byte codes stream through one broadcast join, a 4-term sum of
     6dp-quantized LUT entries, and a per-query top-k window.
 
-    The LUT is (n_queries x <=64 cells) — broadcast-sized by
+    The LUT is one row of 64 slots per query — broadcast-sized by
     construction since queries are the small side of any ANN batch; the
-    codebook itself is <=64 rows of 16 integers. The LUT build joins the
-    20 query subvector rows (slices only, no sign cells) against the
-    broadcast codebook on `sub` alone (every cell is a lookup entry) —
+    codebook itself is one row of 64 codewords of 16 integers. Each
+    query's whole grid vector meets the broadcast codebook row in one
+    higher-order expression, and a candidate gathers its 4 slots —
     no per-dimension rows anywhere at query time. The read is
     `similarity_topk_pq_stored`'s over the `pq_common.pq_family`
     relations instead of their stored files."""

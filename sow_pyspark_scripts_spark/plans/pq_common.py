@@ -15,22 +15,29 @@ half-initialized (importing dsel_ops directly used to crash exactly
 that way once ann_index imported its symbols).
 
 Every ANN read ranks through ONE path: ``adc_topk`` is the only ADC
-scoring kernel (broadcast LUT join, self-match dropped, per-pair 6-dp
-sum) and `operators.similarity.topk_per_query` the only per-query
-top-k rule (row_number over qid ordered by distance, then ``cid``).
-Their SQL twins are the oracles below: the ``adc`` CTE and its
-``row_number() OVER (PARTITION BY qid ORDER BY adc_d2, cid)``. The
-query LUTs, the stored-code explode and the exact refine / recall
-tails sit beside the codebooks they read.
+scoring kernel and `operators.similarity.topk_per_query` the only
+per-query top-k rule (row_number over qid ordered by distance, then
+``cid``). ADC is a table lookup (Jegou et al. 2011 §IV): each trained
+codebook is stored as ONE row of 64 slots (slot = sub * 16 + cell,
+NULL where no cell was trained), a query's LUT is one row of 64
+integer micro-unit distances computed by one higher-order expression
+against that row, and the kernel scores a candidate by gathering 4
+slots, ``lut[c0] + lut[16 + c1] + lut[32 + c2] + lut[48 + c3]``,
+divided once by 1e6. The candidate codes are never exploded and no
+aggregate sums per (qid, cid) pair. The integer sum divided once is
+exactly the oracles' ``floor(sum(pd2) * 1e6 + 0.5) / 1e6`` over the
+6-dp partials (tests/test_adc_exactness.py), so the engine and the
+oracles agree bit for bit under any summation order. The SQL twins
+are the oracles below: the ``adc`` CTE and its ``row_number() OVER
+(PARTITION BY qid ORDER BY adc_d2, cid)``.
 
-Vectors are cut into subvectors by ONE split, ``_subvec_split``. The
-coding side (``_pq_subvecs``, ``_ivfadc_subvecs``) is the split plus
-each slice's sign cell; every query-side LUT calls the split alone.
-That is a plan-size rule, not style: Catalyst does not drop an unused
-field of a struct built inside ``explode(array(...))``, so a query side
-built through the coding helpers planned 16-32 unrolled sign-plane
-CASE WHEN sums (20-52K plan characters) that no LUT reads, paid in
-code generation, task serialisation and every AQE re-optimisation.
+Vectors are cut into subvectors by ONE split, ``_subvec_split``, on
+the coding side (``_pq_subvecs``, ``_ivfadc_subvecs``: the split plus
+each slice's sign cell). The query side reads whole vectors: its LUT
+slices them inside the lambda, so a read plans no sign-cell CASE WHEN
+(Catalyst does not drop an unused field of a struct built inside
+``explode(array(...))``, which once cost the query LUTs 16-32 unrolled
+sign-plane sums, 20-52K plan characters).
 
 See dsel_ops.py for the tier design notes and Jegou et al. 2011
 citations; everything here follows the house determinism rules
@@ -150,9 +157,9 @@ def _subvec_split(
     16-dim slice of the integer grid array ``arr`` for subvector
     ``sub``. The coding side passes ``cell``, the SQL of subvector
     ``s``'s sign-cell code over ``arr``, and gets a ``cell`` column
-    after ``sub``; the query side of every ADC LUT calls the split
-    without it (module docstring: Catalyst keeps unread struct fields
-    of an exploded array). The whole array is ONE SQL string -> ONE
+    after ``sub``; without it the split is the bare slices (the query
+    LUTs read whole vectors instead, module docstring). The whole array
+    is ONE SQL string -> ONE
     py4j call (r6: the per-term Column-arithmetic loop this replaced
     spent 2-3s of driver time per query on py4j round trips)."""
     structs = ", ".join(
@@ -258,37 +265,39 @@ def _pq_d2(sv: str, carr: str):
     )
 
 
-def _query_lut(emb: DataFrame, cw: DataFrame) -> DataFrame:
-    """(qid, sub, cell, pd2): the PQ query LUT. Each subvector of the 20
-    query vectors of ``emb`` is scored against every codeword of the
-    broadcast codebook ``cw`` (sub, cell, carr); queries keep full
-    precision under ADC. The only float-vector read of a PQ query
-    outside the refine tail's R-row fetch."""
-    q = _subvec_split(_pq_grid(emb.where(F.col("vec_id") < 20)), "eq", "sv")
-    return (
-        q.select(F.col("vec_id").alias("qid"), "sub", "sv")
-        .join(F.broadcast(cw), "sub")
-        .select("qid", "sub", "cell", _pq_d2("sv", "carr").alias("pd2"))
+_PQ_CELLS = 2 ** _PQ_PLANES  # sign cells per subvector
+_SLOTS = _PQ_M * _PQ_CELLS    # codebook / LUT slots: slot = sub * 16 + cell
+
+
+def _codebook_row(cw: DataFrame, arr: str) -> DataFrame:
+    """The long codebook ``cw`` (sub, cell, ``arr``) as the ONE row the
+    index stores: ``arr`` becomes an array of 64 codewords, slot = sub *
+    16 + cell, NULL where no cell was trained. One global aggregate
+    into a slot map and one 64-slot read of it; an empty codebook gives
+    64 NULLs."""
+    slot = F.expr(f"sub * {_PQ_CELLS} + cell")
+    return cw.agg(F.map_from_entries(F.collect_list(F.struct(slot, arr))).alias("m")).select(
+        F.expr(f"transform(sequence(0L, {_SLOTS - 1}L), s -> m[s])").alias(arr)
     )
 
 
-def _codes_long(
-    codes: DataFrame, prefix: str, cid: str = "vec_id", carry: tuple[str, ...] = ()
-) -> DataFrame:
-    """Stored codes (vec_id, *carry, <prefix>0..<prefix>3) exploded to
-    the (``cid``, *carry, sub, cell) rows an ADC join consumes — a
-    constant 4-row fan-out per vector, no shuffle."""
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(s).cast("long").alias("sub"), F.col(f"{prefix}{s}").alias("cell")
-            )
-            for s in range(_PQ_M)
-        ]
+def _query_lut(q: DataFrame, vec: str, cb: DataFrame, arr: str, carry=()) -> DataFrame:
+    """(qid, *carry, lut): one row per query row of ``q`` (vec_id,
+    *carry, ``vec``), ``lut`` its 64 partial distances to the one-row
+    codebook ``cb`` (``arr``) in integer micro-units, NULL at untrained
+    slots. ``vec`` is the query's whole integer grid vector (PQ) or
+    residual (IVFADC); slot s reads the 16-dim slice of sub = s div 16.
+    Each entry is ``floor(total / 1e6 + 0.5)`` of the exact integer sum
+    of squared diffs: the oracles' 6-dp partial in micro-units. One
+    higher-order expression, no explode, no aggregate."""
+    d2 = (
+        f"aggregate(zip_with(slice({vec}, s div {_PQ_SUB} * {_PQ_SUB} + 1, {_PQ_SUB}), w, "
+        "(a, b) -> (a - b) * (a - b)), 0L, (t, d) -> t + d)"
     )
-    vid = "vec_id" if cid == "vec_id" else F.col("vec_id").alias(cid)
-    return codes.select(vid, *carry, F.explode(rows).alias("sc")).select(
-        cid, *carry, "sc.sub", "sc.cell"
+    return q.crossJoin(F.broadcast(cb)).select(
+        F.col("vec_id").alias("qid"),
+        *carry,
+        F.expr(f"transform({arr}, (w, s) -> floor({d2} / 1e6 + 0.5D))").alias("lut"),
     )
 
 
@@ -543,21 +552,6 @@ def _ivfadc_subvecs(resid: DataFrame) -> DataFrame:
     )
 
 
-def _ivfadc_d2(rsv: str, cw: str):
-    """pd2 between an integer residual subvector and an integer codeword
-    (column NAMES): exact integer sum of 16 squared diffs (<= ~1e15 <
-    2^53), ONE division at the end — floor(sum/1e6 + 0.5)/1e6 puts the
-    value on the same 6dp grid as the other ANN tiers. One SQL string
-    -> one py4j call (r6)."""
-    total = " + ".join(
-        f"(element_at({rsv}, {j}) - element_at({cw}, {j}))"
-        f" * (element_at({rsv}, {j}) - element_at({cw}, {j}))"
-        for j in range(1, _PQ_SUB + 1)
-    )
-    return F.expr(f"floor(({total}) / 1e6 + 0.5D) / 1e6")
-
-
-
 def _ivfadc_codebook(rsv: DataFrame) -> DataFrame:
     """(sub, cell, cw6): the trained integer residual codeword per cell
     — the `_pq_codebook` shape on `_ivfadc_subvecs` rows, each
@@ -659,19 +653,22 @@ SELECT qid, cid, adc_d2, CAST(rnk AS BIGINT) AS rank FROM (
 
 
 def adc_topk(
-    cand: DataFrame, lut: DataFrame, keys: list[str], k: int, shortlist: bool = False
+    cand: DataFrame, lut: DataFrame, keys: list[str], prefix: str, k: int, shortlist: bool = False
 ) -> DataFrame:
-    """The one ADC scoring kernel (Jegou et al. 2011 §IV): candidate code
-    rows (cid, *keys) look up their partial distances in the broadcast
-    query LUT (qid, *keys, pd2); a query never scores itself; a pair's
-    partials sum and round to the 6-dp grid as ``adc_d2``, ranked by
-    `topk_per_query` (``shortlist`` returns only (qid, cid)). Twin of
-    the oracles' ``adc`` CTE and its row_number."""
+    """The one ADC scoring kernel (Jegou et al. 2011 §IV): each candidate
+    (cid, *keys, ``prefix``0..3) meets the broadcast query LUT rows
+    (qid, *keys, lut) of its ``keys`` (a broadcast cross join when
+    there are none), a query never scores itself, and ``adc_d2`` is the
+    gather of its 4 code slots summed as integers and divided once,
+    ranked by `topk_per_query` (``shortlist`` returns only (qid, cid)).
+    Twin of the oracles' ``adc`` CTE and its row_number."""
+    gather = " + ".join(
+        f"lut[{s * _PQ_CELLS} + {prefix}{s}]" if s else f"lut[{prefix}0]" for s in range(_PQ_M)
+    )
     adc = (
-        cand.join(F.broadcast(lut), keys)
+        cand.join(F.broadcast(lut), keys or None)
         .where(F.col("cid") != F.col("qid"))
-        .groupBy("qid", "cid")
-        .agg(r6(F.sum("pd2")).alias("adc_d2"))
+        .select("qid", "cid", F.expr(f"({gather}) / 1e6").alias("adc_d2"))
     )
     return topk_per_query(adc, "adc_d2", k, shortlist)
 
@@ -752,25 +749,26 @@ def _recall_at_5(emb: DataFrame, approx5: DataFrame) -> DataFrame:
 
 def _code_cols(prefix: str) -> list[Column]:
     """A vector's 4 (sub, cell) rows pivoted to ``<prefix>0..3`` in one
-    aggregate — the inverse of `_codes_long`. Spelled with ``if``, the
-    form Spark's own pivot plans, so the pivot adds no CASE WHEN to a
-    plan whose CASE WHEN count stands for its sign-cell sums."""
+    aggregate. Spelled with ``if``, the form Spark's own pivot plans,
+    so the pivot adds no CASE WHEN to a plan whose CASE WHEN count
+    stands for its sign-cell sums."""
     return [F.expr(f"min(if(sub = {s}, cell, NULL))").alias(f"{prefix}{s}") for s in range(_PQ_M)]
 
 
 def pq_family(emb: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(pq_codebook (sub, cell, carr), pq_codes (vec_id, c0..c3, qerr),
-    sv): the PQ index of ``emb``. The corpus subvectors ``sv`` feed the
-    codebook and the codes, so they are pinned; they are returned so a
-    build can free them once both tables are written. ``qerr`` is the
-    vector's 6-dp quantization error against its codewords."""
+    """(pq_codebook (carr: 64 slots, `_codebook_row`), pq_codes (vec_id,
+    c0..c3, qerr), sv): the PQ index of ``emb``. The corpus subvectors
+    ``sv`` feed the codebook and the codes, so they are pinned; they are
+    returned so a build can free them once both tables are written.
+    ``qerr`` is the vector's 6-dp quantization error against its
+    codewords, joined from the long (sub, cell, carr) codebook."""
     sv = _pq_subvecs(emb).transform(pin)
     cw = _pq_codebook(sv)
     qe = sv.join(F.broadcast(cw), ["sub", "cell"]).select(
         "vec_id", "sub", "cell", _pq_d2("sv", "carr").alias("d2")
     )
     codes = qe.groupBy("vec_id").agg(*_code_cols("c"), r6(F.sum("d2")).alias("qerr"))
-    return cw, codes, sv
+    return _codebook_row(cw, "carr"), codes, sv
 
 
 def ivf_family(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -788,65 +786,65 @@ def ivf_family(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
 def ivfadc_family(
     emb: DataFrame, centroids: DataFrame, cells: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(ivfadc_codebook (sub, cell, cw6), ivfadc_codes (vec_id, ivf_cell,
-    rc0..rc3), rsv): the residual PQ layer (Jegou et al. 2011 §V) over
-    the coarse family ``centroids``/``cells`` of ``emb``. The residual
-    subvectors ``rsv`` feed the codebook and the codes, so they are
-    pinned, and returned so a build can free them."""
+    """(ivfadc_codebook (cw6: 64 slots, `_codebook_row`), ivfadc_codes
+    (vec_id, ivf_cell, rc0..rc3), rsv): the residual PQ layer (Jegou et
+    al. 2011 §V) over the coarse family ``centroids``/``cells`` of
+    ``emb``. The residual subvectors ``rsv`` feed the codebook and the
+    codes, so they are pinned, and returned so a build can free them."""
     rsv = _ivfadc_subvecs(_ivf_residuals(emb, cells, centroids)).transform(pin)
     codes = rsv.groupBy("vec_id").agg(F.min("ivf_cell").alias("ivf_cell"), *_code_cols("rc"))
-    return _ivfadc_codebook(rsv), codes, rsv
+    return _codebook_row(_ivfadc_codebook(rsv), "cw6"), codes, rsv
+
+
+def _pq_lut(emb: DataFrame, cb: DataFrame) -> DataFrame:
+    """(qid, lut): the PQ LUTs of the 20 query vectors of ``emb``
+    against the one-row codebook ``cb``; queries keep full precision
+    under ADC. The only float-vector read of a PQ query outside the
+    refine tail's R-row fetch."""
+    return _query_lut(_pq_grid(emb.where(F.col("vec_id") < 20)), "eq", cb, "carr")
 
 
 def pq_adc_topk(
-    emb: DataFrame, cw: DataFrame, codes: DataFrame, k: int, shortlist: bool = False
+    emb: DataFrame, cb: DataFrame, codes: DataFrame, k: int, shortlist: bool = False
 ) -> DataFrame:
     """ADC top-``k`` of the 20 query vectors of ``emb`` over the PQ
-    index (``cw``, ``codes``): candidates are the 4-nibble codes, scored
-    by `_query_lut`."""
-    cand = _codes_long(codes, "c").withColumnRenamed("vec_id", "cid")
-    return adc_topk(cand, _query_lut(emb, cw), ["sub", "cell"], k, shortlist)
+    index (``cb``, ``codes``): every coded vector is a candidate of
+    every query."""
+    cand = codes.withColumnRenamed("vec_id", "cid")
+    return adc_topk(cand, _pq_lut(emb, cb), [], "c", k, shortlist)
 
 
-def ivfpq_top5(emb: DataFrame, cw: DataFrame, codes: DataFrame, cells: DataFrame) -> DataFrame:
+def ivfpq_top5(emb: DataFrame, cb: DataFrame, codes: DataFrame, cells: DataFrame) -> DataFrame:
     """IVF-PQ top-5: the PQ read of `pq_adc_topk`, with each query's
     candidates cut to its own coarse cell by joining ``cells`` on both
     the LUT and the candidate side."""
-    lutq = _query_lut(emb, cw).join(cells.withColumnRenamed("vec_id", "qid"), "qid")
-    cand = _codes_long(codes, "c").join(cells, "vec_id").withColumnRenamed("vec_id", "cid")
-    return adc_topk(cand, lutq, ["sub", "cell", "ivf_cell"], 5)
+    lut = _pq_lut(emb, cb).join(cells.withColumnRenamed("vec_id", "qid"), "qid")
+    cand = codes.join(cells, "vec_id").withColumnRenamed("vec_id", "cid")
+    return adc_topk(cand, lut, ["ivf_cell"], "c", 5)
 
 
-def _ivfadc_residual_top5(
-    q_resid: DataFrame, rcw: DataFrame, rcodes: DataFrame
-) -> DataFrame:
+def _ivfadc_residual_top5(q_resid: DataFrame, cb: DataFrame, rcodes: DataFrame) -> DataFrame:
     """ADC top-5 of the query residuals ``q_resid`` (`_ivf_residuals`,
-    one row per probed cell) against the residual codebook ``rcw`` and
-    codes ``rcodes``: a candidate is scored by the LUT of the probe
-    matching its own cell."""
-    q = _subvec_split(q_resid, "r6", "rsv", carry=("ivf_cell",))
-    lut = (
-        q.select(F.col("vec_id").alias("qid"), "ivf_cell", "sub", "rsv")
-        .join(F.broadcast(rcw), "sub")
-        .select("qid", "ivf_cell", "sub", "cell", _ivfadc_d2("rsv", "cw6").alias("pd2"))
-    )
-    cand = _codes_long(rcodes, "rc", cid="cid", carry=("ivf_cell",))
-    return adc_topk(cand, lut, ["sub", "cell", "ivf_cell"], 5)
+    one row per probed cell) against the one-row residual codebook
+    ``cb`` and codes ``rcodes``: a candidate is scored by the LUT of
+    the probe matching its own cell."""
+    lut = _query_lut(q_resid, "r6", cb, "cw6", carry=("ivf_cell",))
+    return adc_topk(rcodes.withColumnRenamed("vec_id", "cid"), lut, ["ivf_cell"], "rc", 5)
 
 
 def ivfadc_top5(
-    emb: DataFrame, centroids: DataFrame, cells: DataFrame, rcw: DataFrame, rcodes: DataFrame
+    emb: DataFrame, centroids: DataFrame, cells: DataFrame, cb: DataFrame, rcodes: DataFrame
 ) -> DataFrame:
     """IVFADC top-5 at nprobe=1: each query's residual to the centroid
     of its own cell (the 20-row slice of ``cells``)."""
     q_resid = _ivf_residuals(
         emb.where(F.col("vec_id") < 20), cells.where(F.col("vec_id") < 20), centroids
     )
-    return _ivfadc_residual_top5(q_resid, rcw, rcodes)
+    return _ivfadc_residual_top5(q_resid, cb, rcodes)
 
 
 def ivfadc_multiprobe_top5(
-    emb: DataFrame, centroids: DataFrame, rcw: DataFrame, rcodes: DataFrame
+    emb: DataFrame, centroids: DataFrame, cb: DataFrame, rcodes: DataFrame
 ) -> DataFrame:
     """IVFADC top-5 at nprobe=2: each query probes its two nearest
     ``centroids`` (`operators.similarity.probes_from_centroids`) with one
@@ -858,4 +856,4 @@ def ivfadc_multiprobe_top5(
         centroids,
         cell="probe_cell",
     )
-    return _ivfadc_residual_top5(q_resid, rcw, rcodes)
+    return _ivfadc_residual_top5(q_resid, cb, rcodes)

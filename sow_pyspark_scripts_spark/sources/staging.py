@@ -46,8 +46,12 @@ MARKER = "_INDEX_DONE"
 # the stored DSIR layer to the doc index: dsir_doc_buckets +
 # dsir_bucket_lr, VERDICT r4 task #3; v6 switched pq_codebook/pq code
 # paths to INTEGER grid-unit arrays — quantized once at the source, so
-# ADC luts are pure integer diffs, not per-pair re-quantizations).
-_INDEX_VERSION = 6
+# ADC luts are pure integer diffs, not per-pair re-quantizations; v7
+# stores pq_codebook and ivfadc_codebook as ONE row of 64 codeword slots,
+# slot = sub * 16 + cell, so an ADC read gathers 4 slots of its query's
+# LUT row. The version is shared, so the doc index and the staged stream
+# slices, whose tables did not change, rebuild once too).
+_INDEX_VERSION = 7
 # A sibling whose drain checkpoint is younger than this is assumed LIVE
 # (another session may still be draining it) and is never swept.
 _STAGE_GRACE_SEC = 3600

@@ -28,6 +28,8 @@ GUARDED = [
     "embedding_pq_encode_delta",
     "similarity_topk_ivfadc",
     "similarity_topk_ivfadc_multiprobe",
+    "similarity_topk_ivfadc_stored",
+    "similarity_topk_pq_stored",
     "dedup_semantic_semdedup_sharded",
     "text_normalize",
     "flagship_incident_etl",

@@ -136,11 +136,15 @@ def test_no_hand_written_ann_topk():
     """The ANN tier ranks through two kernels: the per-query top-k window
     (partitionBy("qid"), ordered by a distance or similarity and then
     by cid) is spelled only in operators.similarity.topk_per_query, and
-    the ADC pair sum groupBy("qid", "cid") only in plans.pq_common.adc_topk.
-    A copy elsewhere could drift from the oracles' tie-break. Parsed,
-    not grepped, like the 6-dp rule above."""
+    the ADC score, the gather of 4 slots of a query's LUT row
+    (``lut[c0] + lut[16 + c1] + ...``), only in plans.pq_common.adc_topk.
+    A per-pair sum groupBy("qid", "cid") or a LUT gather anywhere else
+    is a second scoring kernel that could drift from the oracles'
+    rounding or tie-break. Parsed, not grepped, like the 6-dp rule
+    above."""
     import ast
     import pathlib
+    import re
 
     import sow_pyspark_scripts_spark as pkg
 
@@ -168,7 +172,30 @@ def test_no_hand_written_ann_topk():
             and strs(node.args) == ["qid"]
         )
 
+    def is_lut_col(node):
+        return (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", getattr(node.func, "id", None)) == "col"
+            and strs(node.args) == ["lut"]
+        )
+
+    def is_gather(node):
+        # a LUT slot read: "lut[...]" in SQL text, F.col("lut")[...],
+        # F.col("lut").getItem(...) or element_at over the lut column
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return re.search(r"\blut\s*\[|element_at\(\s*lut\b", node.value) is not None
+        if isinstance(node, ast.Subscript):
+            return is_lut_col(node.value)
+        if not (isinstance(node, ast.Call) and node.args):
+            return False
+        name = getattr(node.func, "attr", getattr(node.func, "id", None))
+        if name == "getItem":
+            return is_lut_col(node.func.value)
+        return name == "element_at" and (strs(node.args[:1]) == ["lut"] or is_lut_col(node.args[0]))
+
     def offends(node):
+        if is_gather(node):
+            return True
         if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
             return False
         if node.func.attr == "groupBy":
@@ -182,6 +209,7 @@ def test_no_hand_written_ann_topk():
 
     root = pathlib.Path(pkg.__file__).parent
     offenders = []
+    kernel_gathers = 0
     for sub in ("plans", "operators"):
         for py in sorted((root / sub).rglob("*.py")):
             tree = ast.parse(py.read_text())
@@ -191,11 +219,24 @@ def test_no_hand_written_ann_topk():
                 if isinstance(fn, ast.FunctionDef) and (sub, py.name, fn.name) in kernels
                 for n in ast.walk(fn)
             }
+            # docstrings may show the gather; only code can run it
+            docs = {
+                id(n.body[0].value)
+                for n in ast.walk(tree)
+                if isinstance(n, (ast.Module, ast.FunctionDef, ast.ClassDef))
+                and n.body
+                and isinstance(n.body[0], ast.Expr)
+                and isinstance(n.body[0].value, ast.Constant)
+            }
+            code = [node for node in ast.walk(tree) if id(node) not in docs]
+            kernel_gathers += sum(1 for node in code if is_gather(node) and id(node) in inside)
             offenders += [
                 f"{sub}/{py.name}:{node.lineno}"
-                for node in ast.walk(tree)
+                for node in code
                 if offends(node) and id(node) not in inside
             ]
+    # the rule is only as good as its pattern: it must see the kernel's own gather
+    assert kernel_gathers, "no LUT gather found in plans.pq_common.adc_topk"
     assert not offenders, (
         f"{len(offenders)} hand-written ANN rank/score blocks (use "
         "operators.similarity.topk_per_query or plans.pq_common.adc_topk):\n"

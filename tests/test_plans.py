@@ -470,6 +470,52 @@ def test_query_lut_plans_carry_no_sign_cells(spark, name):
     assert n == 0, f"{name}: {n} CASE WHEN in the optimized plan"
 
 
+def _plan_nodes(plan: str) -> list[str]:
+    """The operator name of each line of a plan tree string."""
+    import re
+
+    return [m.group(1) for m in re.finditer(r"(?m)^[\s:|+\-]*([A-Z]\w*)", plan)]
+
+
+_ADC_STORED = [
+    "similarity_topk_pq_stored",
+    "similarity_topk_pq_refine_stored",
+    "similarity_topk_ivfpq_stored",
+    "similarity_topk_ivfadc_stored",
+    "similarity_topk_ivfadc_multiprobe_stored",
+]
+
+
+@pytest.mark.parametrize("name", _ADC_STORED)
+def test_stored_adc_reads_gather_without_aggregate_or_explode(spark, name):
+    """ADC is a table lookup: a stored read joins the candidates' code
+    columns to the one-row query LUTs and gathers 4 slots. Its optimized
+    plan explodes nothing (no Generate: the codes stay columns and the
+    codebook is one row) and sums nothing per pair (no Aggregate), and
+    the broadcast cross join of flat PQ never plans a CartesianProduct."""
+    df = QUERIES[name](spark, SF_DIR)
+    qe = df._jdf.queryExecution()
+    nodes = _plan_nodes(qe.optimizedPlan().toString())
+    assert "Aggregate" not in nodes and "Generate" not in nodes, (name, nodes)
+    assert "CartesianProduct" not in qe.executedPlan().toString(), name
+
+
+@pytest.mark.parametrize("name", [n.replace("_stored", "") for n in _ADC_STORED])
+def test_in_query_adc_reads_sum_no_pairs(spark, name):
+    """The in-query twins train their index in the plan, so they keep
+    the training aggregates, but none is keyed by (qid, cid): the pair
+    score is the same gather as in the stored reads."""
+    import re
+
+    df = QUERIES[name](spark, SF_DIR)
+    qe = df._jdf.queryExecution()
+    plan = qe.optimizedPlan().toString()
+    for keys in re.findall(r"Aggregate \[([^\]]*)\]", plan):
+        cols = {k.split("#")[0].strip() for k in keys.split(",")}
+        assert cols != {"qid", "cid"}, (name, keys)
+    assert "CartesianProduct" not in qe.executedPlan().toString(), name
+
+
 def test_minhash_incremental_stored_hashes_delta_only(spark):
     """The stored incremental probe must not recompute base bands:
     exactly ONE documents scan (the delta side) and at least one scan of
