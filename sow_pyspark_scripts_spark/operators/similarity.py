@@ -312,7 +312,11 @@ def ivf_cells(emb: DataFrame, centroid_col: str = "label") -> tuple[DataFrame, D
     cells = emb.select("vec_id", "embedding").mapInPandas(_assign, cells_schema)
     # the centroids as a local relation over the rows just collected, with
     # the lazy frame's schema: a consumer reads them without re-running
-    # the posexplode and the two aggregates behind them
+    # the posexplode and the two aggregates behind them. Through pandas,
+    # not a plain list: the Arrow path plans a LocalRelation (sized, so it
+    # broadcasts, and read without a job); a list is parallelized into a
+    # LogicalRDD whose size estimate is Long.MaxValue, which never
+    # broadcasts and costs a scan job per read.
     import pandas as pd
 
     local = pd.DataFrame(cent_rows, columns=["cent_id", "centroid"])

@@ -237,11 +237,11 @@ def embedding_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ asymmetric-distance top-5: each query keeps its EXACT
     subvectors; every candidate is its 4 cell codes; distance = sum of 4
-    lookups in a (query x cell x subvector) table. The fourth ANN tier
-    after exact / LSH / IVF — the one that bounds MEMORY, not just
-    compute: at query time the float vectors are never re-read, only the
-    2-byte codes stream through one broadcast join, a 4-term sum of
-    6dp-quantized LUT entries, and a per-query top-k window.
+    lookups in the query's 64-slot (subvector x cell) table. The fourth
+    ANN tier after exact / LSH / IVF — the one that bounds MEMORY, not
+    just compute: at query time the float vectors are never re-read, only
+    the 2-byte codes stream through one broadcast join, a 4-slot gather
+    of integer LUT entries, and a per-query top-k window.
 
     The LUT is one row of 64 slots per query — broadcast-sized by
     construction since queries are the small side of any ANN batch; the
@@ -285,11 +285,11 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked by PQ asymmetric distance over their 4 sign-cell codes — the
     float vectors are never re-read at query time.
 
-    Scale shape: the coarse codebook and the PQ codeword table both
+    Scale shape: the coarse codebook and the one-row PQ codebook both
     broadcast (KB each); the candidate side streams (ivf_cell, 4 codes)
-    = a few bytes per vector through one broadcast join keyed on
-    (sub, cell, ivf_cell), a 4-term sum of 6dp-quantized LUT entries,
-    and a per-query top-k window. At 16B vectors on 1000 executors the
+    = a few bytes per vector, joins its query's one-row integer LUT on
+    `ivf_cell` alone, gathers `lut[c0] + lut[16 + c1] + lut[32 + c2] +
+    lut[48 + c3]`, and feeds a per-query top-k window. At 16B vectors on 1000 executors the
     cells ARE the partitioning: each executor holds whole cells of
     2-byte codes, and a query touches exactly the executors owning its
     probed cells."""
@@ -562,7 +562,7 @@ def similarity_topk_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the raw-coding tier — coarse centroids
     and PQ codebook broadcast (KB), candidates stream (ivf_cell, 4
-    codes), one broadcast join + 4-term sum + per-query window; the
+    codes), one broadcast join + 4-slot LUT gather + per-query window; the
     stored-index split of `plans/ann_index.py` applies verbatim (codes
     are 2 bytes/vector either way). Determinism: the whole pipeline is
     integer-exact (1e-6 grid quantization before the residual; integer
